@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 import graft.meta.Model
 
@@ -38,15 +37,4 @@ object CatalogOps {
   def describeTable(spark: SparkSession, table: String): Seq[Model.TableColumn] =
     spark.table(table).schema.fields.toSeq.map(f =>
       Model.TableColumn(f.name, f.dataType.simpleString))
-
-  /** S1/S2 as a DataFrame for SQL consumers: SHOW-style listing of all
-    * tables across databases. */
-  def allTables(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.catalog.listDatabases().collect().toSeq
-      .flatMap(db => spark.catalog.listTables(db.name).collect()
-        .map(t => (db.name, t.name, t.tableType)))
-      .toDF("database", "name", "table_type")
-      .orderBy($"database", $"name")
-  }
 }

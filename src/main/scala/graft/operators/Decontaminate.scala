@@ -63,18 +63,6 @@ object Decontaminate {
     docs.join(flagged, Seq("doc_id"), "left_anti")
   }
 
-  /** [[decontaminate]] through the bloom prefilter — identical result
-    * (the filter has no false negatives and survivors are exact-
-    * verified), scale-path cost. The streaming ingest front door runs
-    * this per micro-batch: the eval-shingle set is cached across
-    * batches by [[evalShCache]], so only the (small) incoming batch is
-    * shingled each time. */
-  def decontaminateBloom(docs: DataFrame, evalDocs: DataFrame,
-      minOverlap: Double): DataFrame = {
-    val flagged = overlapReportBloom(docs, evalDocs, minOverlap).select("doc_id")
-    docs.join(flagged, Seq("doc_id"), "left_anti")
-  }
-
   /** Distinct eval-shingle sets, materialized once: three consumers
     * (count, bloom build, verify join) would otherwise each re-run the
     * select+distinct shuffle over the shingle index. */

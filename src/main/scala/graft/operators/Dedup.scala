@@ -939,11 +939,6 @@ object Dedup {
       .orderBy($"id_a", $"id_b")
   }
 
-  /** Production embedding clustering: CC over the IVF-blocked pair
-    * graph ([[embeddingNearDupIvf]]); q40 stays the all-pairs oracle. */
-  def nearDupClustersIvf(spark: SparkSession, d: String, threshold: Double = 0.4): DataFrame =
-    clustersOf(embeddingNearDupIvf(spark, d, threshold))
-
   /** Max CC rounds. With pointer-doubling each round at least doubles
     * the propagation horizon, so 25 rounds covers diameters up to ~2^25;
     * hitting the cap without a fixpoint is an error, never silent. */

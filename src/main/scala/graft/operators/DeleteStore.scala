@@ -35,7 +35,6 @@ object DeleteStore {
 
   private def deletesPath(dir: String) = s"$dir/deletes"
   private def metaPath(dir: String) = s"$dir/_meta.json"
-  private def manifestPath(dir: String) = s"$dir/_live.json"
 
   /** Initialize an EMPTY store for the given equality-key columns. */
   def init(spark: SparkSession, dir: String, keys: Seq[String]): Unit = {
@@ -44,7 +43,7 @@ object DeleteStore {
     writeString(spark, metaPath(dir),
       StoreIO.renderJson(StoreIO.putArr(_, "keys", keys)),
       atomic = false)
-    writeManifest(spark, dir, Manifest(Nil, Nil, 1L), "init")
+    commitLog.commit(spark, dir, Manifest(Nil, Nil, 1L), "init", "")
   }
 
   /** Commit one delete batch under `label`. Committed labels are
@@ -83,7 +82,7 @@ object DeleteStore {
     beforeCommit()
     val fresh = manifest(spark, dir)
     if (!fresh.applied.contains(label))
-      try writeManifest(spark, dir,
+      try commitLog.commit(spark, dir,
         Manifest(fresh.applied :+ label, fresh.live :+ label,
           fresh.version + 1), "append", label)
       catch {
@@ -165,7 +164,7 @@ object DeleteStore {
     liveDeletes(spark, dir).distinct()
       .write.mode(SaveMode.Overwrite)
       .parquet(s"${deletesPath(dir)}/batch=$intoLabel")
-    try writeManifest(spark, dir,
+    try commitLog.commit(spark, dir,
       Manifest(man.applied :+ intoLabel, Seq(intoLabel), man.version + 1),
       "compact", intoLabel)
     catch {
@@ -183,8 +182,8 @@ object DeleteStore {
     * be deleted again on the next read. */
   def reset(spark: SparkSession, dir: String): Unit = {
     val man = manifest(spark, dir)
-    writeManifest(spark, dir, Manifest(man.applied, Nil, man.version + 1),
-      "reset")
+    commitLog.commit(spark, dir, Manifest(man.applied, Nil, man.version + 1),
+      "reset", "")
   }
 
   /** [[reset]] for a NAMED label set: drop exactly the labels a
@@ -194,42 +193,21 @@ object DeleteStore {
     * data). Ledger preserved, as always. */
   def retire(spark: SparkSession, dir: String, labels: Seq[String]): Unit = {
     val man = manifest(spark, dir)
-    writeManifest(spark, dir,
+    commitLog.commit(spark, dir,
       Manifest(man.applied, man.live.filterNot(labels.contains),
-        man.version + 1), "retire")
+        man.version + 1), "retire", "")
   }
 
   /** Delete non-live label directories (crashed appends, compacted or
     * reset-away batches). Returns the count swept. */
-  def vacuum(spark: SparkSession, dir: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(deletesPath(dir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    // list first, resolve liveness after — and PENDING BEFORE the
-    // manifest (StoreIO's announce protocol): a writer un-announces
-    // only after its commit, so a sidecar gone by this read means the
-    // later manifest read sees the commit; manifest-first would let a
-    // commit+un-announce slip between the two reads and the committed
-    // dir be seen by neither
-    val candidates = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-    val pending = StoreIO.pendingLabels(spark, dir)
-    val man = manifest(spark, dir)
-    val keep = man.live.toSet ++
-      pending.getOrElse("append", Set.empty) ++
-      pending.getOrElse("compact", Set.empty)
-    val victims = candidates
-      .filterNot(p => keep.contains(p.getName.stripPrefix("batch=")))
-    victims.foreach(fs.delete(_, true))
-    // crash-leaked sidecars of committed labels are stale — clear them
-    // so superseded dirs stay sweepable
-    StoreIO.clearCommittedPending(spark, dir, pending,
-      (_, l) => man.applied.contains(l))
-    // swap slots at or below the live version are spent claims
-    StoreIO.sweepSwapSlots(spark, dir, man.version)
-    victims.length
-  }
+  def vacuum(spark: SparkSession, dir: String): Int =
+    commitLog.vacuum(spark, dir, Seq(deletesPath(dir))) { v =>
+      val keep = v.pointer.live.toSet ++ v.announced("append", "compact")
+      (CommitLog.sweep(spark,
+        v.listed.head.filter(_.getName.startsWith("batch=")))(n =>
+          keep(n.stripPrefix("batch="))),
+        (_, l) => v.pointer.applied.contains(l))
+    }
 
   /** Store health: live delete keys, batches, ledger size. */
   def audit(spark: SparkSession, dir: String): DataFrame = {
@@ -240,43 +218,30 @@ object DeleteStore {
       lit(man.applied.size).cast("long").as("applied_labels"))
   }
 
-  /** `version` is the monotone SWAP counter ([[StoreIO.claimSwapSlot]]
-    * keys on it; 0 on legacy manifests without the field). */
+  /** `version` is the monotone SWAP counter (the [[CommitLog]] slot
+    * number; 0 on legacy manifests without the field). */
   private[operators] case class Manifest(applied: Seq[String],
       live: Seq[String], version: Long = 0L)
 
-  private[operators] def manifest(spark: SparkSession, dir: String): Manifest = {
-    val n = StoreIO.parseJson(readString(spark, manifestPath(dir)))
-    Manifest(StoreIO.jArr(n, "applied").getOrElse(Nil),
+  /** Swaps claim `_swap/s<version>.json`, swept at vacuum. Labeled ops
+    * announce under their own kind; `init`, `reset` and `retire` carry
+    * no label and announce a nonce. */
+  private[operators] val commitLog = new CommitLog[Manifest](CommitLog.Swept,
+    Map("init" -> CommitLog.Nonce, "append" -> CommitLog.Sidecar("append"),
+      "compact" -> CommitLog.Sidecar("compact"),
+      "reset" -> CommitLog.Nonce, "retire" -> CommitLog.Nonce),
+    n => Manifest(StoreIO.jArr(n, "applied").getOrElse(Nil),
       StoreIO.jArr(n, "live").getOrElse(Nil),
-      StoreIO.jLong(n, "v").getOrElse(0L))
-  }
+      StoreIO.jLong(n, "v").getOrElse(0L)),
+    _.version,
+    (o, m) => {
+      o.put("v", m.version)
+      StoreIO.putArr(o, "applied", m.applied)
+      StoreIO.putArr(o, "live", m.live)
+    })
 
-  /** Pointer swap behind the log-less-store CAS: the slot for the new
-    * version is claimed by exclusive create first, so two writers
-    * racing the same swap cannot both win — last-swap-wins would
-    * silently erase the loser's label (inside [[GraftTable.delete]],
-    * a lost ERASURE batch). */
-  private[operators] def writeManifest(spark: SparkSession, dir: String,
-      m: Manifest, kind: String = "swap", label: String = ""): Unit = {
-    val nonce = StoreIO.claimSwapSlot(spark, dir, m.version, kind, label,
-      currentVersion = () => {
-        val (fs, p) = StoreIO.hadoopFs(spark, manifestPath(dir))
-        if (!fs.exists(p)) 0L else manifest(spark, dir).version
-      },
-      occupantInFlight = (k, l) =>
-        (k == "append" || k == "compact") &&
-          StoreIO.pendingExists(spark, dir, k, l))
-    writeString(spark, manifestPath(dir),
-      StoreIO.renderJson { o =>
-        o.put("v", m.version)
-        StoreIO.putArr(o, "applied", m.applied)
-        StoreIO.putArr(o, "live", m.live)
-      }, atomic = true)
-    // an unlabeled op's nonce announcement is cleared strictly AFTER
-    // the swap (see claimSwapSlot's contract)
-    nonce.foreach(nx => StoreIO.clearPending(spark, dir, kind, nx))
-  }
+  private[operators] def manifest(spark: SparkSession, dir: String): Manifest =
+    commitLog.pointer(spark, dir)
 
   private[operators] case class Meta(keys: Seq[String])
 

@@ -42,16 +42,14 @@ object GraftTable {
   private def indexPath(dir: String) = s"$dir/index"
   private def delPath(dir: String) = s"$dir/del"
   private def metaPath(dir: String) = s"$dir/_meta.json"
-  private def manifestPath(dir: String) = s"$dir/_live.json"
-  private def commitPath(dir: String, c: Long) = s"$dir/_commits/c$c.json"
 
   // PENDING sidecars ([[StoreIO]]'s shared announce protocol), three
   // kinds here: `append` (data dir being written), `delete` (two-store
   // commit bridge), `retire` (optimize rewrite + its epilogue's retire
   // set). Written BEFORE the data they protect, removed after the
   // commit/epilogue, honored by [[vacuum]].
-  import StoreIO.{abandonPending, clearPending, pendingExists, pendingLabels,
-    pendingPath, writePending}
+  import StoreIO.{abandonPending, clearPending, pendingExists, pendingPath,
+    writePending}
 
   /** Initialize an empty table. `zoneCols` get min/max/value-count
     * stats (and drive [[optimize]]'s layout), `bloomCols` get per-file
@@ -80,7 +78,7 @@ object GraftTable {
       },
       atomic = false)
     if (deleteKeys.nonEmpty) DeleteStore.init(spark, delPath(dir), deleteKeys)
-    commitManifest(spark, dir, Manifest(Nil, Nil, 1L), "create", "", Nil)
+    commit(spark, dir, Manifest(Nil, Nil, 1L), "create", "", Nil)
   }
 
   /** Commit one data batch under `label` (immutable; replay = no-op;
@@ -155,7 +153,7 @@ object GraftTable {
             " is the contract — retry the append (nothing was committed;" +
             " the batch directory has been removed)")
       }
-      try commitManifest(spark, dir,
+      try commit(spark, dir,
         Manifest(fresh.applied :+ label, fresh.live :+ label,
           fresh.commit + 1, Some(unionSchema.json)),
         "append", label, delLive(spark, dir),
@@ -444,15 +442,15 @@ object GraftTable {
         else pendingExists(spark, dir, "delete", label) &&
           // only VISIBLE commits count (≤ the manifest pointer): a
           // snapshot file above the pointer is a crash orphan from a
-          // commitManifest that died between its two writes — the next
-          // commit overwrites it, so treating it as done would lose
-          // the delete commit after all
-          !listCommits(spark, dir).view.filter(_ <= man.commit)
+          // commit that died between its slot write and its pointer
+          // swap — the next commit overwrites it, so treating it as
+          // done would lose the delete commit after all
+          !commitLog.list(spark, dir).view.filter(_ <= man.commit)
             .map(commitAt(spark, dir, _))
             .exists(c => c.kind == "delete" && c.label == label)
       if (needCommit) {
         val fresh = manifest(spark, dir)
-        commitManifest(spark, dir,
+        commit(spark, dir,
           Manifest(fresh.applied, fresh.live, fresh.commit + 1,
             fresh.schemaJson),
           "delete", label, delLive(spark, dir))
@@ -542,7 +540,7 @@ object GraftTable {
               " rerun optimize against the new state (no commit was" +
               " written; the rewrite directory has been removed)")
         }
-        try commitManifest(spark, dir,
+        try commit(spark, dir,
           Manifest(fresh.applied :+ intoLabel, Seq(intoLabel),
             fresh.commit + 1,
             // carry the pinned union; a LEGACY table gets pinned here
@@ -572,7 +570,7 @@ object GraftTable {
           StoreIO.jsonArr(readString(spark,
             pendingPath(dir, "retire", intoLabel)), "retired")
         else
-          listCommits(spark, dir).view.map(commitAt(spark, dir, _))
+          commitLog.list(spark, dir).view.map(commitAt(spark, dir, _))
             .find(c => c.kind == "optimize" && c.label == intoLabel)
             .map(_.retired).getOrElse(Nil)
       }
@@ -598,85 +596,51 @@ object GraftTable {
     * announcement names — crashed-and-replayed leftovers, and
     * directories whose last referencing snapshot was
     * [[expireCommits]]'d. Time travel to a retained commit always
-    * resolves; expiry, not vacuum, is the retention decision.
-    *
-    * Safe against in-flight writers: directories are LISTED FIRST and
-    * liveness resolved AFTER — every writer announces its label (a
-    * pending sidecar, written before its first data byte) and commits
-    * before un-announcing, so any directory this listing saw is
-    * either announced (sidecar read below sees it), committed (the
-    * fresh manifest/snapshot read below names it), or a true orphan.
-    * The Iceberg analogue is remove_orphan_files' `older_than`
-    * horizon; announcement does the same job deterministically.
+    * resolves; expiry, not vacuum, is the retention decision. Safe
+    * against in-flight writers by [[CommitLog.vacuum]]'s read order.
     * Returns (data dirs, delete dirs) swept. */
   def vacuum(spark: SparkSession, dir: String): (Int, Int) = {
-    def list(root: String): Seq[org.apache.hadoop.fs.Path] = {
-      val (fs, p) = StoreIO.hadoopFs(spark, root)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("batch=")).toSeq
-    }
     val hasDel = meta(spark, dir).delKeys.nonEmpty
-    val dataCandidates = list(dataPath(dir))
-    val delCandidates = if (hasDel) list(s"${delPath(dir)}/deletes") else Nil
-    // keep-state reads strictly after the listing, and PENDING BEFORE
-    // the manifest: a writer un-announces only after its commit, so a
-    // sidecar gone by this read means the commit exists by the (later)
-    // manifest/snapshot read. Reading the manifest first would open a
-    // window where a writer commits and un-announces in between and
-    // its committed directory is seen by neither.
-    val pending = pendingLabels(spark, dir)
-    val man = manifest(spark, dir)
-    val retained = listCommits(spark, dir).map(commitAt(spark, dir, _))
-    val keepData = (man.live ++ retained.flatMap(_.manifest.live)).toSet ++
-      pending.getOrElse("append", Set.empty) ++
-      pending.getOrElse("retire", Set.empty)
-    def sweep(victims: Seq[org.apache.hadoop.fs.Path],
-        keep: Set[String]): Int = {
-      val dead = victims
-        .filterNot(d => keep.contains(d.getName.stripPrefix("batch=")))
-      dead.foreach { d =>
-        val (fs, p) = StoreIO.hadoopFs(spark, d.toString)
-        fs.delete(p, true)
-      }
-      dead.length
+    val roots = dataPath(dir) +:
+      (if (hasDel) Seq(s"${delPath(dir)}/deletes") else Nil)
+    commitLog.vacuum(spark, dir, roots) { v =>
+      def batches(root: Int) = v.listed.lift(root).getOrElse(Nil)
+        .filter(_.getName.startsWith("batch="))
+      val retained = v.retained.map(commitOf)
+      val keepData =
+        (v.pointer.live ++ retained.flatMap(_.manifest.live)).toSet ++
+          v.announced("append", "retire")
+      val dataSwept = CommitLog.sweep(spark, batches(0))(n =>
+        keepData(n.stripPrefix("batch=")))
+      val delSwept =
+        if (!hasDel) 0
+        else {
+          // the delete store's own vacuum keeps only ITS live set; here
+          // retained table snapshots and in-flight announcements (the
+          // table-level delete() bridge AND the delete store's own
+          // append/compact sidecars) pin delete labels too. Its
+          // directories were listed with the table's, above.
+          val (delPending, delMan) =
+            DeleteStore.commitLog.liveness(spark, delPath(dir))
+          val keepDel = (delMan.live ++ retained.flatMap(_.delLive)).toSet ++
+            v.announced("delete") ++
+            delPending.getOrElse("append", Set.empty) ++
+            delPending.getOrElse("compact", Set.empty)
+          val swept = CommitLog.sweep(spark, batches(1))(n =>
+            keepDel(n.stripPrefix("batch=")))
+          // nothing in the table lifecycle runs DeleteStore.vacuum, so
+          // the delete store's provably stale sidecars are cleared here
+          StoreIO.clearCommittedPending(spark, delPath(dir), delPending,
+            (kind, l) => (kind == "append" || kind == "compact") &&
+              delMan.applied.contains(l))
+          swept
+        }
+      // "retire" is NOT clearable (it carries the retire set until
+      // optimize's epilogue runs), nor is "delete" (it bridges the
+      // two-store commit until the table-level commit is repaired)
+      ((dataSwept, delSwept),
+        (kind, l) => kind == "append" && v.pointer.applied.contains(l))
     }
-    val dataSwept = sweep(dataCandidates, keepData)
-    val delSwept =
-      if (!hasDel) 0
-      else {
-        // the delete store's own vacuum keeps only ITS live set; here
-        // retained table snapshots and in-flight announcements (the
-        // table-level delete() bridge AND the delete store's own
-        // append/compact sidecars) pin delete labels too — pending
-        // read before the store manifest, same order argument as above
-        val delPending = pendingLabels(spark, delPath(dir))
-        val delMan = DeleteStore.manifest(spark, delPath(dir))
-        val keepDel = (delMan.live ++
-          retained.flatMap(_.delLive)).toSet ++
-          pending.getOrElse("delete", Set.empty) ++
-          delPending.getOrElse("append", Set.empty) ++
-          delPending.getOrElse("compact", Set.empty)
-        val n = sweep(delCandidates, keepDel)
-        // crash-leaked sidecars under the DELETE STORE whose label
-        // provably committed (ledger read AFTER the pending read):
-        // nothing in the table lifecycle runs DeleteStore.vacuum, so
-        // without this sweep an append/compact sidecar leaked between
-        // the store's manifest swap and its un-announce shields the —
-        // eventually superseded — delete dir from this vacuum forever
-        StoreIO.clearCommittedPending(spark, delPath(dir), delPending,
-          (kind, l) => (kind == "append" || kind == "compact") &&
-            delMan.applied.contains(l))
-        n
-      }
-    // crash-leaked sidecars whose label PROVABLY committed are stale —
-    // clear them so the (eventually superseded) dirs stay sweepable.
-    // "retire" is NOT clearable here (it carries the retire set until
-    // optimize's epilogue runs), and "delete" is NOT (it bridges the
-    // two-store commit until the table-level commit is repaired).
-    StoreIO.clearCommittedPending(spark, dir, pending,
-      (kind, l) => kind == "append" && man.applied.contains(l))
-    (dataSwept, delSwept)
   }
 
   /** Table health: live/applied batches, live delete keys, index
@@ -688,7 +652,7 @@ object GraftTable {
       lit(man.live.size.toLong).as("live_batches"),
       lit(man.applied.size.toLong).as("applied_labels"),
       lit(man.commit).as("commit"),
-      lit(listCommits(spark, dir).size.toLong).as("retained_commits"))
+      lit(commitLog.list(spark, dir).size.toLong).as("retained_commits"))
     val withDel =
       if (m.delKeys.isEmpty) base.withColumn("live_delete_rows", lit(0L))
       else base.crossJoin(DeleteStore.audit(spark, delPath(dir))
@@ -794,18 +758,17 @@ object GraftTable {
   // helpers (one parser for all four stores): field order is free,
   // escaping is the parser's problem, and the old "schema must be
   // serialized LAST" contract no longer exists.
-  private def parseManifest(raw: String): Manifest = {
-    val n = StoreIO.parseJson(raw)
+  private def parseManifest(n: com.fasterxml.jackson.databind.JsonNode)
+      : Manifest =
     Manifest(
       StoreIO.jArr(n, "applied").getOrElse(Nil),
       StoreIO.jArr(n, "live").getOrElse(Nil),
       StoreIO.jLong(n, "commit").getOrElse(1L),
       StoreIO.jObjJson(n, "schema"))
-  }
 
   private[operators] def manifest(spark: SparkSession,
       dir: String): Manifest =
-    parseManifest(readString(spark, manifestPath(dir)))
+    commitLog.pointer(spark, dir)
 
   private def putManifest(o: com.fasterxml.jackson.databind.node.ObjectNode,
       m: Manifest): Unit = {
@@ -815,96 +778,27 @@ object GraftTable {
     m.schemaJson.foreach(StoreIO.putRawObj(o, "schema", _))
   }
 
+  /** Commits claim `_commits/c<commit>.json`, the retained snapshot
+    * log. `create` is the first commit; the others announce their label
+    * under the sidecar kind their writer uses. */
+  private val commitLog = new CommitLog[Manifest](CommitLog.Retained,
+    Map("create" -> CommitLog.Never,
+      "append" -> CommitLog.Sidecar("append"),
+      "delete" -> CommitLog.Sidecar("delete"),
+      "optimize" -> CommitLog.Sidecar("retire")),
+    parseManifest, _.commit, putManifest)
+
   /** One commit = one immutable snapshot (manifest + what the commit
     * did + the delete store's live labels at that instant + the pinned
-    * union schema) + the pointer swap, in that order — the ScdStore
-    * crash discipline.
-    *
-    * The commit SLOT `c<N>.json` is claimed by EXCLUSIVE CREATE (an
-    * actual filesystem CAS — hard-link publish locally,
-    * create(overwrite=false) on Hadoop FS), so two writers racing the
-    * same slot cannot both swap: the fresh-read version check in the
-    * callers catches completed races, and this closes the remaining
-    * read-to-swap window (last-swap-wins would erase the first
-    * writer's label from the ledger AFTER its append returned
-    * success). A claim failure distinguishes three occupants by the
-    * announce protocol: our OWN crashed attempt (same kind+label — a
-    * replay repairing a commit that died between its two writes:
-    * overwrite), a DEAD orphan (no standing announcement for its
-    * label: its writer crashed pre-swap and was replayed under a
-    * later slot, or the snapshot was handcrafted: overwrite), or an
-    * IN-FLIGHT writer (announcement standing: abort loudly — the
-    * single-writer contract was violated, or the crashed writer's
-    * label awaits replay). */
-  private def commitManifest(spark: SparkSession, dir: String, m: Manifest,
+    * union schema) + the pointer swap, in that order ([[CommitLog]]). */
+  private def commit(spark: SparkSession, dir: String, m: Manifest,
       kind: String, label: String, delLabels: Seq[String],
-      retired: Seq[String] = Nil, rows: Long = 0L): Unit = {
-    val snap = StoreIO.renderJson { o =>
-      putManifest(o, m)
-      o.put("kind", kind); o.put("label", label); o.put("rows", rows)
+      retired: Seq[String] = Nil, rows: Long = 0L): Unit =
+    commitLog.commit(spark, dir, m, kind, label, { o =>
+      o.put("rows", rows)
       StoreIO.putArr(o, "delLive", delLabels)
       StoreIO.putArr(o, "retired", retired)
-    }
-    val slot = commitPath(dir, m.commit)
-    var attempts = 0
-    while (!StoreIO.writeStringExclusive(spark, slot, snap)) {
-      // POINTER FIRST: a slot at or below the current pointer is a
-      // COMMITTED snapshot — the occupant won, swapped, and (rightly)
-      // un-announced; treating it as a dead orphan would overwrite a
-      // visible commit and erase the winner's label from the ledger.
-      // A missing manifest (only possible while repairing a CRASHED
-      // create — its slot written, the pointer never) reads as 0.
-      val pointer =
-        try manifest(spark, dir).commit
-        catch { case _: java.io.FileNotFoundException => 0L }
-      if (pointer >= m.commit)
-        throw new java.util.ConcurrentModificationException(
-          s"commit slot c${m.commit} was won by another writer (the " +
-            "pointer has moved past it) — single writer is the " +
-            "contract; retry against the new state")
-      val existing =
-        try Some(commitAt(spark, dir, m.commit))
-        catch { case _: Exception => None } // unparseable = dead orphan
-      // Occupant resolution per the state machine on
-      // [[StoreIO.claimSwapSlot]]: own crashed claim (same kind +
-      // same NON-EMPTY label — a replay repairing a commit that died
-      // between its two writes) is never in-flight: the loop deletes
-      // the stale slot, rewrites it, and completes the pointer swap.
-      // `create` has no replay identity, so a foreign create occupant
-      // resolves as a dead orphan too (converging a crashed create's
-      // replay). An UNKNOWN kind aborts conservatively — a future
-      // commit kind added without a sidecar mapping must fail loudly
-      // here, never silently bypass in-flight detection.
-      val own = existing.exists(c =>
-        c.kind == kind && c.label == label && label.nonEmpty)
-      val inFlight = !own && existing.exists { c =>
-        c.kind match {
-          case "append" => pendingExists(spark, dir, "append", c.label)
-          case "delete" => pendingExists(spark, dir, "delete", c.label)
-          case "optimize" => pendingExists(spark, dir, "retire", c.label)
-          case "create" => false // first commit; no announce protocol
-          case other => throw new java.util.ConcurrentModificationException(
-            s"commit slot c${m.commit} in $dir holds a snapshot of " +
-              s"unknown kind '$other' — refusing to classify it as a " +
-              "dead orphan; remove the slot manually if its writer is " +
-              "known dead")
-        }
-      }
-      if (inFlight)
-        throw new java.util.ConcurrentModificationException(
-          s"commit slot c${m.commit} is claimed by an in-flight " +
-            s"'${existing.get.kind}' commit (label '${existing.get.label}')" +
-            " — single writer is the contract; retry against the new state")
-      attempts += 1
-      require(attempts <= 3,
-        s"commit slot c${m.commit} in $dir cannot be claimed " +
-          s"(occupant: ${existing.map(c => c.kind + "/" + c.label)})")
-      val (fs, p) = StoreIO.hadoopFs(spark, slot)
-      fs.delete(p, false)
-    }
-    writeString(spark, manifestPath(dir),
-      StoreIO.renderJson(putManifest(_, m)), atomic = true)
-  }
+    })
 
   /** A committed snapshot: live data batches, the delete store's live
     * labels at the commit, what the commit did
@@ -917,33 +811,14 @@ object GraftTable {
       label: String, delLive: Seq[String], retired: Seq[String],
       rows: Long)
 
-  private[operators] def commitAt(spark: SparkSession, dir: String,
-      c: Long): Commit = {
-    val raw =
-      try readString(spark, commitPath(dir, c))
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"commit $c is not retained in $dir (expired, or never " +
-            s"committed — live commit is ${manifest(spark, dir).commit})", e)
-      }
-    val n = StoreIO.parseJson(raw)
-    Commit(parseManifest(raw),
-      StoreIO.jStr(n, "kind").getOrElse(sys.error(
-        s"commit snapshot c$c in $dir has no 'kind'")),
-      StoreIO.jStr(n, "label").getOrElse(sys.error(
-        s"commit snapshot c$c in $dir has no 'label'")),
-      StoreIO.jArr(n, "delLive").getOrElse(Nil),
-      StoreIO.jArr(n, "retired").getOrElse(Nil),
-      StoreIO.jLong(n, "rows").getOrElse(0L))
-  }
+  private def commitOf(s: CommitLog.Snapshot[Manifest]): Commit =
+    Commit(s.manifest, s.kind, s.label,
+      StoreIO.jArr(s.node, "delLive").getOrElse(Nil),
+      StoreIO.jArr(s.node, "retired").getOrElse(Nil),
+      StoreIO.jLong(s.node, "rows").getOrElse(0L))
 
-  private def listCommits(spark: SparkSession, dir: String): Seq[Long] = {
-    val (fs, root) = StoreIO.hadoopFs(spark, s"$dir/_commits")
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).map(_.getPath.getName).toSeq
-      .flatMap("""c(\d+)\.json""".r.findFirstMatchIn(_).map(_.group(1).toLong))
-      .sorted
-  }
+  private[operators] def commitAt(spark: SparkSession, dir: String,
+      c: Long): Commit = commitOf(commitLog.snapshot(spark, dir, c))
 
   /** TIME TRAVEL: the table exactly as commit `c` saw it — the
     * snapshot's live batch dirs with the snapshot's delete labels
@@ -1949,7 +1824,7 @@ object GraftTable {
     * O(retained commits) metadata reads at any data size. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    listCommits(spark, dir).map { i =>
+    commitLog.list(spark, dir).map { i =>
       val c = commitAt(spark, dir, i)
       (i, c.kind, c.label, c.manifest.live.size.toLong,
         c.delLive.size.toLong, c.rows)
@@ -1960,16 +1835,8 @@ object GraftTable {
   /** M2 for the snapshot log: keep the newest `keepLast` commit
     * snapshots; directories only dropped snapshots referenced become
     * [[vacuum]]'s to sweep. Returns commits expired. */
-  def expireCommits(spark: SparkSession, dir: String,
-      keepLast: Int): Int = {
-    require(keepLast >= 0, "keepLast must be >= 0")
-    val victims = listCommits(spark, dir).dropRight(keepLast)
-    victims.foreach { c =>
-      val (fs, p) = StoreIO.hadoopFs(spark, commitPath(dir, c))
-      fs.delete(p, false)
-    }
-    victims.size
-  }
+  def expireCommits(spark: SparkSession, dir: String, keepLast: Int): Int =
+    commitLog.expire(spark, dir, keepLast)
 
   private[operators] case class Meta(zoneCols: Seq[String],
       bloomCols: Seq[String], delKeys: Seq[String],

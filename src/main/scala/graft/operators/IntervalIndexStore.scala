@@ -71,7 +71,6 @@ object IntervalIndexStore {
 
   private def intervalsPath(dir: String) = s"$dir/intervals"
   private def metaPath(dir: String) = s"$dir/_meta.json"
-  private def manifestPath(dir: String) = s"$dir/_live.json"
 
   /** NULL-end rows in an `openEnded` store land here instead of
     * exploding: an open interval (SCD2 current row, `valid_to` NULL)
@@ -112,7 +111,7 @@ object IntervalIndexStore {
         o.put("bandSeconds", bandSeconds); o.put("openEnded", openEnded)
         o.put("maxBands", maxBandsPerInterval); ()
       }, atomic = false)
-    writeManifest(spark, dir, Manifest(1L, Seq("base"), None))
+    commitLog.commit(spark, dir, Manifest(1L, Seq("base"), None), "swap", "")
   }
 
   // ---- metadata I/O: [[StoreIO]] — Hadoop FileSystem so the store dir
@@ -162,7 +161,7 @@ object IntervalIndexStore {
     // tiny window the pre-snapshot design had)
     val man = manifest(spark, dir)
     if (!man.live.contains(label))
-      try writeManifest(spark, dir, man.copy(version = man.version + 1,
+      try commitLog.commit(spark, dir, man.copy(version = man.version + 1,
         live = man.live :+ label), "append", label)
       catch {
         case e: java.util.ConcurrentModificationException =>
@@ -225,44 +224,27 @@ object IntervalIndexStore {
   private[operators] case class Manifest(version: Long, live: Seq[String],
       minBand: Option[Long])
 
-  private[operators] def manifest(spark: SparkSession, dir: String): Manifest = {
-    val n = StoreIO.parseJson(readString(spark, manifestPath(dir)))
-    Manifest(
+  /** Swaps claim `_swap/s<version>.json`, swept at vacuum. `append`
+    * and `compact` announce their label; `build` (kind `swap`, its name
+    * on disk) and `expire` carry none and announce a nonce. */
+  private val commitLog = new CommitLog[Manifest](CommitLog.Swept,
+    Map("swap" -> CommitLog.Nonce, "append" -> CommitLog.Sidecar("append"),
+      "compact" -> CommitLog.Sidecar("compact"),
+      "expire" -> CommitLog.Nonce),
+    n => Manifest(
       StoreIO.jLong(n, "version").getOrElse(
-        sys.error(s"IntervalIndexStore manifest at $dir has no 'version'")),
+        sys.error("IntervalIndexStore manifest has no 'version'")),
       StoreIO.jArr(n, "live").getOrElse(Nil),
-      StoreIO.jLong(n, "minBand"))
-  }
+      StoreIO.jLong(n, "minBand")),
+    _.version,
+    (o, m) => {
+      o.put("version", m.version)
+      StoreIO.putArr(o, "live", m.live)
+      m.minBand.foreach { b => o.put("minBand", b); () }
+    })
 
-  /** Single-file swap = the commit point (local: temp + ATOMIC_MOVE;
-    * object store: one PUT). The swap SLOT for the new version is
-    * claimed first by exclusive create ([[StoreIO.claimSwapSlot]] —
-    * the log-less-store CAS): two writers racing the same swap cannot
-    * both win, so last-swap-wins can never silently erase the loser's
-    * label from the live set. `kind`/`label` identify the claimant for
-    * occupant resolution (a still-announced occupant aborts the claim;
-    * a dead orphan is overwritten; pointer-first catches a committed
-    * winner). */
-  private[operators] def writeManifest(spark: SparkSession, dir: String,
-      m: Manifest, kind: String = "swap", label: String = ""): Unit = {
-    val nonce = StoreIO.claimSwapSlot(spark, dir, m.version, kind, label,
-      currentVersion = () => {
-        val (fs, p) = hadoopFs(spark, manifestPath(dir))
-        if (!fs.exists(p)) 0L else manifest(spark, dir).version
-      },
-      occupantInFlight = (k, l) =>
-        (k == "append" || k == "compact") &&
-          StoreIO.pendingExists(spark, dir, k, l))
-    writeString(spark, manifestPath(dir),
-      StoreIO.renderJson { o =>
-        o.put("version", m.version)
-        StoreIO.putArr(o, "live", m.live)
-        m.minBand.foreach { b => o.put("minBand", b); () }
-      }, atomic = true)
-    // an unlabeled op's nonce announcement is cleared strictly AFTER
-    // the swap (see claimSwapSlot's contract)
-    nonce.foreach(nx => StoreIO.clearPending(spark, dir, kind, nx))
-  }
+  private[operators] def manifest(spark: SparkSession, dir: String): Manifest =
+    commitLog.pointer(spark, dir)
 
   /** The store as lookups see it: live labels only (explicit paths under
     * `basePath`, so `band`/`ingest_batch` stay partition columns) with
@@ -377,7 +359,7 @@ object IntervalIndexStore {
     StoreIO.writePending(spark, dir, "compact", intoLabel) // announce
     merged.write.mode(SaveMode.Overwrite).partitionBy("band")
       .parquet(s"${intervalsPath(dir)}/ingest_batch=$intoLabel")
-    try writeManifest(spark, dir,
+    try commitLog.commit(spark, dir,
       man.copy(version = man.version + 1, live = Seq(intoLabel)),
       "compact", intoLabel)
     catch {
@@ -411,7 +393,7 @@ object IntervalIndexStore {
     // strictly before the cutoff (spec-pinned with 1969 data)
     val cutBand = (cutoff.getTime * 1000L) / (m.bandSeconds * 1000000L)
     val man = manifest(spark, dir)
-    writeManifest(spark, dir, man.copy(version = man.version + 1,
+    commitLog.commit(spark, dir, man.copy(version = man.version + 1,
       minBand = Some(man.minBand.fold(cutBand)(math.max(_, cutBand)))),
       "expire", "")
   }
@@ -422,57 +404,43 @@ object IntervalIndexStore {
     * FileSystem, not java.io: the same client works on an object store
     * (the [[Maintenance]] orphan sweep's discipline). Returns
     * (orphan label dirs deleted, expired band dirs deleted). */
-  def vacuum(spark: SparkSession, dir: String): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(intervalsPath(dir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (0, 0)
-    // list first, resolve liveness after — and PENDING BEFORE the
-    // manifest (StoreIO's announce protocol): a writer un-announces
-    // only after its commit, so manifest-first would let a
-    // commit+un-announce slip between the reads and the committed dir
-    // be seen by neither
-    val labelDirs = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("ingest_batch="))
-    val pending = StoreIO.pendingLabels(spark, dir)
-    val man = manifest(spark, dir)
-    val keep = man.live.toSet ++
-      pending.getOrElse("append", Set.empty) ++
-      pending.getOrElse("compact", Set.empty)
-    val (live, orphan) = labelDirs.partition(p =>
-      keep.contains(p.getName.stripPrefix("ingest_batch=")))
-    // the expired-band sweep runs only over COMMITTED labels: an
-    // announced-but-uncommitted append is protected wholesale (its
-    // writer is still laying band dirs down)
-    val committed = live.filter(p =>
-      man.live.contains(p.getName.stripPrefix("ingest_batch=")))
-    val (expired, kept) = man.minBand.fold(
-        (Array.empty[Path], Array.empty[Path])) { floor =>
-      committed.flatMap(l => fs.listStatus(l).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("band=")))
-        .partition { p =>
-          val b = p.getName.stripPrefix("band=").toLong
-          b != OpenBand && b < floor // open rows never expire
-        }
+  def vacuum(spark: SparkSession, dir: String): (Int, Int) =
+    commitLog.vacuum(spark, dir, Seq(intervalsPath(dir))) { v =>
+      val man = v.pointer
+      val keep = man.live.toSet ++ v.announced("append", "compact")
+      val labelDirs = v.listed.head
+        .filter(_.getName.startsWith("ingest_batch="))
+      val (live, orphan) = labelDirs.partition(p =>
+        keep.contains(p.getName.stripPrefix("ingest_batch=")))
+      // the expired-band sweep runs only over COMMITTED labels: an
+      // announced-but-uncommitted append is protected wholesale (its
+      // writer is still laying band dirs down)
+      val committed = live.filter(p =>
+        man.live.contains(p.getName.stripPrefix("ingest_batch=")))
+      val (fs, _) = hadoopFs(spark, intervalsPath(dir))
+      val none = Seq.empty[org.apache.hadoop.fs.Path]
+      val (expired, kept) = man.minBand.fold((none, none)) { floor =>
+        committed.flatMap(l => fs.listStatus(l).filter(_.isDirectory)
+          .map(_.getPath).filter(_.getName.startsWith("band=")))
+          .partition { p =>
+            val b = p.getName.stripPrefix("band=").toLong
+            b != OpenBand && b < floor // open rows never expire
+          }
+      }
+      // the same guard as compact, and BEFORE any deletion, so a refused
+      // vacuum is side-effect-free: deleting EVERY band dir of every live
+      // label would leave a store whose next read dies on schema
+      // inference — a fully-expired store must be rebuilt, not vacuumed
+      require(man.minBand.isEmpty || kept.nonEmpty,
+        "expiry floor covers the entire store; rebuild instead of vacuuming")
+      orphan.foreach(fs.delete(_, true))
+      expired.foreach(fs.delete(_, true))
+      // crash-leaked sidecars of LIVE labels are stale (the commit they
+      // announced exists) — cleared so the dirs stay sweepable once a
+      // later compact supersedes them; superseded-label sidecars are
+      // cleared by compact itself (this manifest has no applied ledger)
+      ((orphan.length, expired.length), (_, l) => man.live.contains(l))
     }
-    // the same guard as compact, and BEFORE any deletion, so a refused
-    // vacuum is side-effect-free: deleting EVERY band dir of every live
-    // label would leave a store whose next read dies on schema
-    // inference — a fully-expired store must be rebuilt, not vacuumed
-    require(man.minBand.isEmpty || kept.nonEmpty,
-      "expiry floor covers the entire store; rebuild instead of vacuuming")
-    orphan.foreach(fs.delete(_, true))
-    expired.foreach(fs.delete(_, true))
-    // crash-leaked sidecars of LIVE labels are stale (the commit they
-    // announced exists) — clear them so the dirs stay sweepable once a
-    // later compact supersedes them; superseded-label sidecars are
-    // cleared by compact itself (this manifest has no applied ledger)
-    StoreIO.clearCommittedPending(spark, dir, pending,
-      (_, l) => man.live.contains(l))
-    // swap slots at or below the live version are spent claims
-    StoreIO.sweepSwapSlots(spark, dir, man.version)
-    (orphan.length, expired.length)
-  }
 
   // ---- q156: standing-store attribution ------------------------------
 

@@ -5,7 +5,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.SparkSession
 
-import graft.meta.{MetaStore, Model, PartitionModel, SmallFiles}
+import graft.meta.{MetaStore, Model, SmallFiles}
 
 /** M5: the catalog → MetaStore refresh ETL (reference
   * service_refresh.go): per table, rebuild the `tables` row and the
@@ -195,9 +195,4 @@ object Refresh {
   def refreshPartitions(store: MetaStore, database: String, table: String,
       snapshotId: Long, cfg: SmallFiles.Config, now: Instant): Unit =
     Maintenance.rollbackToSnapshot(store, database, table, snapshotId, cfg, now)
-
-  /** Expand a table's partition-spec (the reference DescribeTable path,
-    * S4) — surfaced here so spec expansion is part of refresh. */
-  def describePartitionSpec(fields: Seq[PartitionModel.SpecField]): Either[String, Seq[Model.PartitionField]] =
-    PartitionModel.expandSpec(fields)
 }

@@ -44,8 +44,6 @@ object ScdStore {
   // monotone counter that detects drift.
   private def currentPath(dir: String, name: String) = s"$dir/current/$name"
   private def metaPath(dir: String) = s"$dir/_meta.json"
-  private def manifestPath(dir: String) = s"$dir/_live.json"
-  private def commitPath(dir: String, c: Long) = s"$dir/_commits/c$c.json"
 
   // Shared store plumbing: Hadoop-FS metadata I/O, atomic pointer
   // swap, and the F8 label/column allowlists.
@@ -68,7 +66,7 @@ object ScdStore {
         StoreIO.putArr(o, "values", values)
         StoreIO.putArr(o, "carry", carry)
       }, atomic = false)
-    commitManifest(spark, dir,
+    commitLog.commit(spark, dir,
       Manifest(1L, Seq("base"), Seq("base"), 1L, "v1"), "init", "base")
   }
 
@@ -128,7 +126,7 @@ object ScdStore {
         s"concurrent ScdStore commit detected (version ${man.version} -> " +
           s"${fresh.version} during applyBatch '$label'); single writer is " +
           "the contract — replay the batch")
-      commitManifest(spark, dir,
+      commitLog.commit(spark, dir,
         Manifest(man.version + 1, fresh.applied :+ label,
           fresh.histLive :+ label, fresh.commit + 1, newCur),
         "batch", label)
@@ -173,11 +171,6 @@ object ScdStore {
     * maintenance — [[expireCommits]] is what retires them). */
   def tableAt(spark: SparkSession, dir: String, c: Long): DataFrame =
     tableOf(spark, dir, commitAt(spark, dir, c).manifest)
-
-  /** The current partition as of commit `c` (≤1 row per key then). */
-  def currentAt(spark: SparkSession, dir: String, c: Long): DataFrame =
-    spark.read.parquet(
-      currentPath(dir, commitAt(spark, dir, c).manifest.curDir))
 
   /** CDC READ: what changed between commit `from` (exclusive) and
     * commit `to` (inclusive), as SCD2 rows tagged `_change_type`:
@@ -230,18 +223,8 @@ object ScdStore {
     * depends on a snapshot). Directories only a dropped snapshot
     * referenced become [[vacuum]]'s to sweep. Returns commits
     * expired. */
-  def expireCommits(spark: SparkSession, dir: String,
-      keepLast: Int): Int = {
-    require(keepLast >= 0, "keepLast must be >= 0")
-    import org.apache.hadoop.fs.Path
-    val victims = listCommits(spark, dir).dropRight(keepLast)
-    val conf = spark.sparkContext.hadoopConfiguration
-    victims.foreach { c =>
-      val p = new Path(commitPath(dir, c))
-      p.getFileSystem(conf).delete(p, false)
-    }
-    victims.size
-  }
+  def expireCommits(spark: SparkSession, dir: String, keepLast: Int): Int =
+    commitLog.expire(spark, dir, keepLast)
 
   /** State-at-time read: the ≤1 row per key valid at `ts` (half-open
     * `[valid_from, valid_to)` — a change instant belongs to the NEW
@@ -294,7 +277,7 @@ object ScdStore {
       .parquet(s"${historyPath(dir)}/batch=$intoLabel")
     // `version` NAMES the live current directory — compaction touches
     // only the history label set, so it must not advance it
-    commitManifest(spark, dir,
+    commitLog.commit(spark, dir,
       Manifest(man.version, man.applied :+ intoLabel, Seq(intoLabel),
         man.commit + 1, man.curDir), "compact", intoLabel)
     StoreIO.clearPending(spark, dir, "batch", intoLabel)
@@ -306,50 +289,26 @@ object ScdStore {
     * [[expireCommits]]'d. Time travel to a retained commit therefore
     * always resolves; expiry, not vacuum, is the retention decision.
     * Returns (history dirs, current dirs) deleted. */
-  def vacuum(spark: SparkSession, dir: String): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    // candidate dirs LISTED FIRST, liveness resolved AFTER: writers
-    // announce their labels (StoreIO pending sidecars) before writing,
-    // so any dir this listing saw is announced, committed (the fresh
-    // manifest/snapshot read below names it), or a true orphan
-    def list(root: String): Seq[Path] = {
-      val p = new Path(root)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
+  def vacuum(spark: SparkSession, dir: String): (Int, Int) =
+    commitLog.vacuum(spark, dir, Seq(historyPath(dir), s"$dir/current")) { v =>
+      val Seq(hist, cur) = v.listed
+      val man = v.pointer
+      val retained = v.retained.map(_.manifest)
+      val keepHist = (man.histLive ++ retained.flatMap(_.histLive)).toSet ++
+        v.announced("batch")
+      val keepVers = (retained.map(_.curDir) :+ man.curDir).toSet ++
+        v.announced("current")
+      val swept = (
+        CommitLog.sweep(spark, hist)(n => keepHist(n.stripPrefix("batch="))),
+        CommitLog.sweep(spark, cur)(keepVers))
+      // a committed label's sidecar, or a "current" one at or below the
+      // pointer's version, is provably stale
+      (swept, {
+        case ("batch", l) => man.applied.contains(l)
+        case ("current", c) => curVersionOf(c).exists(_ <= man.version)
+        case _ => false
+      })
     }
-    val histCandidates = list(historyPath(dir))
-    val curCandidates = list(s"$dir/current")
-    // PENDING BEFORE the manifest: a writer un-announces only after
-    // its commit, so a sidecar gone by this read means the later
-    // manifest/snapshot read sees the commit — manifest-first would
-    // let a commit+un-announce slip between the reads
-    val pending = StoreIO.pendingLabels(spark, dir)
-    val man = manifest(spark, dir)
-    val retained = listCommits(spark, dir).map(commitAt(spark, dir, _))
-      .map(_.manifest)
-    val keepHist = (man.histLive ++ retained.flatMap(_.histLive)).toSet ++
-      pending.getOrElse("batch", Set.empty)
-    val keepVers = (retained.map(_.curDir) :+ man.curDir).toSet ++
-      pending.getOrElse("current", Set.empty)
-    def sweep(victims: Seq[Path], keep: String => Boolean): Int = {
-      val dead = victims.filterNot(d => keep(d.getName))
-      dead.foreach(d => d.getFileSystem(conf).delete(d, true))
-      dead.length
-    }
-    val h = sweep(histCandidates,
-      n => keepHist.contains(n.stripPrefix("batch=")))
-    val c = sweep(curCandidates, keepVers.contains)
-    // crash-leaked sidecars of committed labels / at-or-below-pointer
-    // versions are stale — clear them so superseded dirs stay sweepable
-    StoreIO.clearCommittedPending(spark, dir, pending, {
-      case ("batch", l) => man.applied.contains(l)
-      case ("current", v) => curVersionOf(v).exists(_ <= man.version)
-      case _ => false
-    })
-    (h, c)
-  }
 
   /** Store health: key count, open rows, history rows/batches, version. */
   def audit(spark: SparkSession, dir: String): DataFrame = {
@@ -366,7 +325,7 @@ object ScdStore {
       .withColumn("version", lit(man.version))
       .withColumn("commit", lit(man.commit))
       .withColumn("retained_commits",
-        lit(listCommits(spark, dir).size.toLong))
+        lit(commitLog.list(spark, dir).size.toLong))
   }
 
   private[operators] case class Meta(key: String, ts: String,
@@ -397,8 +356,8 @@ object ScdStore {
 
   // Jackson parse/render through StoreIO's shared helpers (the one
   // manifest parser rule — see StoreIO's JSON section).
-  private def parseManifest(raw: String): Manifest = {
-    val n = StoreIO.parseJson(raw)
+  private def parseManifest(n: com.fasterxml.jackson.databind.JsonNode)
+      : Manifest = {
     val v = StoreIO.jLong(n, "version").getOrElse(
       sys.error("ScdStore manifest has no 'version'"))
     val applied = StoreIO.jArr(n, "applied").getOrElse(
@@ -409,9 +368,6 @@ object ScdStore {
       StoreIO.jStr(n, "curDir").getOrElse(s"v$v")) // pre-curDir stores
   }
 
-  private[operators] def manifest(spark: SparkSession, dir: String): Manifest =
-    parseManifest(readString(spark, manifestPath(dir)))
-
   private def putManifest(o: com.fasterxml.jackson.databind.node.ObjectNode,
       m: Manifest): Unit = {
     o.put("version", m.version); o.put("commit", m.commit)
@@ -420,90 +376,23 @@ object ScdStore {
     StoreIO.putArr(o, "histLive", m.histLive)
   }
 
-  private def manifestBody(m: Manifest): String =
-    StoreIO.renderJson(putManifest(_, m))
+  /** Commits claim `_commits/c<commit>.json`, the retained snapshot log.
+    * `init` is the first commit; `batch` and `compact` announce their
+    * label under the `batch` sidecar. */
+  private val commitLog = new CommitLog[Manifest](CommitLog.Retained,
+    Map("init" -> CommitLog.Never, "batch" -> CommitLog.Sidecar("batch"),
+      "compact" -> CommitLog.Sidecar("batch")),
+    parseManifest, _.commit, putManifest)
 
-  private[operators] def writeManifest(spark: SparkSession, dir: String,
-      m: Manifest): Unit =
-    writeString(spark, manifestPath(dir), manifestBody(m), atomic = true)
-
-  /** One commit = one immutable snapshot + the pointer swap, in that
-    * order: a crash between the two leaves an orphan snapshot no read
-    * resolves, and the batch replay overwrites it — the applyBatch
-    * crash discipline extended to the snapshot log.
-    *
-    * The SLOT is claimed by exclusive create, the GraftTable CAS: the
-    * version check catches completed races; this closes the
-    * read-to-swap window where two writers both swap and the loser's
-    * label silently vanishes. Claim failures resolve POINTER FIRST (a
-    * slot at/below the pointer is a committed winner → abort), then
-    * own-crashed-attempt (same kind+label → overwrite), standing
-    * "batch" announcement (in-flight writer → abort), else dead orphan
-    * (→ overwrite). */
-  private def commitManifest(spark: SparkSession, dir: String, m: Manifest,
-      kind: String, label: String): Unit = {
-    val snap = StoreIO.renderJson { o =>
-      putManifest(o, m)
-      o.put("kind", kind); o.put("label", label); ()
-    }
-    val slot = commitPath(dir, m.commit)
-    var attempts = 0
-    while (!StoreIO.writeStringExclusive(spark, slot, snap)) {
-      if (manifest(spark, dir).commit >= m.commit)
-        throw new java.util.ConcurrentModificationException(
-          s"ScdStore commit slot c${m.commit} was won by another writer" +
-            " — single writer is the contract; replay the batch")
-      val existing =
-        try Some(commitAt(spark, dir, m.commit))
-        catch { case _: Exception => None } // unparseable = dead orphan
-      val inFlight = existing.exists(c =>
-        !(c.kind == kind && c.label == label) &&
-          StoreIO.pendingExists(spark, dir, "batch", c.label))
-      if (inFlight)
-        throw new java.util.ConcurrentModificationException(
-          s"ScdStore commit slot c${m.commit} is claimed by an in-flight" +
-            s" '${existing.get.kind}' commit (label" +
-            s" '${existing.get.label}') — single writer is the contract")
-      attempts += 1
-      require(attempts <= 3,
-        s"ScdStore commit slot c${m.commit} in $dir cannot be claimed")
-      val (fs, p) = StoreIO.hadoopFs(spark, slot)
-      fs.delete(p, false)
-    }
-    writeManifest(spark, dir, m)
-  }
+  private[operators] def manifest(spark: SparkSession, dir: String): Manifest =
+    commitLog.pointer(spark, dir)
 
   /** A committed snapshot: the manifest as of that commit, plus what
     * the commit did (`init` / `batch` / `compact`) and its label. */
-  private[operators] case class Commit(manifest: Manifest, kind: String,
-      label: String)
+  private[operators] type Commit = CommitLog.Snapshot[Manifest]
 
   private[operators] def commitAt(spark: SparkSession, dir: String,
-      c: Long): Commit = {
-    val raw =
-      try readString(spark, commitPath(dir, c))
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"commit $c is not retained in $dir (expired, or never " +
-            s"committed — live commit is ${manifest(spark, dir).commit})", e)
-      }
-    val n = StoreIO.parseJson(raw)
-    Commit(parseManifest(raw),
-      StoreIO.jStr(n, "kind").getOrElse(sys.error(
-        s"ScdStore commit snapshot c$c in $dir has no 'kind'")),
-      StoreIO.jStr(n, "label").getOrElse(sys.error(
-        s"ScdStore commit snapshot c$c in $dir has no 'label'")))
-  }
-
-  private def listCommits(spark: SparkSession, dir: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(s"$dir/_commits")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).map(_.getPath.getName).toSeq
-      .flatMap("""c(\d+)\.json""".r.findFirstMatchIn(_).map(_.group(1).toLong))
-      .sorted
-  }
+      c: Long): Commit = commitLog.snapshot(spark, dir, c)
 
   // ---- q160: the standing store, hash-checked against one-pass SQL --
 

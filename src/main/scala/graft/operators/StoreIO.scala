@@ -2,13 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared metadata plumbing for the standing stores
-  * ([[IntervalIndexStore]], [[ScdStore]], [[SkippingIndex]]): Hadoop
-  * FileSystem I/O so store dirs may live on any filesystem Spark can
-  * write parquet to, an atomic single-file swap for commit pointers
-  * (local: temp + ATOMIC_MOVE; object store: one PUT — atomic there),
-  * and the label/column-name allowlists (F8 discipline — these strings
-  * become directory names, JSON values, and spliced SQL).
+/** Shared metadata plumbing for the four standing stores
+  * ([[GraftTable]], [[ScdStore]], [[DeleteStore]],
+  * [[IntervalIndexStore]], which commit through [[CommitLog]]) and the
+  * [[SkippingIndex]]: Hadoop FileSystem I/O so store dirs may live on
+  * any filesystem Spark can write parquet to, an atomic single-file
+  * swap for commit pointers (local: temp + ATOMIC_MOVE; object store:
+  * one PUT — atomic there), the exclusive create a commit slot is
+  * claimed by, the pending-sidecar announce protocol, and the
+  * label/column-name allowlists (F8 discipline — these strings become
+  * directory names, JSON values, and spliced SQL).
   *
   * One copy on purpose: the portability and atomicity fixes these
   * lines have absorbed must not have to be re-applied per store. */
@@ -190,22 +193,14 @@ private[graft] object StoreIO {
   // listing saw is either announced, committed (the post-listing
   // manifest/snapshot read names it), or a true orphan.
   //
-  // READ ORDER IS LOAD-BEARING: vacuum must read the pending sidecars
-  // BEFORE the manifest/snapshots. Un-announce happens strictly after
-  // commit, so "sidecar gone at the pending read" implies "commit
-  // visible at the (later) manifest read". Manifest-first would let a
-  // writer commit and un-announce between the two reads, its committed
-  // directory seen by neither — swept as an orphan. Replay paths must
-  // clear the label's sidecar even on the committed-already early
-  // return, or a crash between commit and un-announce shields the
-  // directory from vacuum forever once it is superseded. This is the
-  // deterministic analogue of Iceberg remove_orphan_files'
-  // `older_than` horizon: without it, a vacuum racing a writer can
-  // sweep a fully-written-but-not-yet-committed directory and leave
-  // the subsequent commit pointing at deleted data. A sidecar whose
-  // writer crashed keeps its orphan alive until the label is replayed
-  // (which re-announces, commits, and clears) — bounded garbage,
-  // never a swept-out-from-under writer.
+  // The read order that makes this safe (list, then sidecars, then
+  // the pointer) is [[CommitLog.vacuum]]'s. Replay paths must clear
+  // the label's sidecar even on the committed-already early return, or
+  // a crash between commit and un-announce shields the directory from
+  // vacuum forever once it is superseded. A sidecar whose writer
+  // crashed keeps its orphan alive until the label is replayed (which
+  // re-announces, commits, and clears) — bounded garbage, never a
+  // swept-out-from-under writer.
 
   def writePending(spark: SparkSession, dir: String, kind: String,
       label: String, body: String = ""): Unit =
@@ -244,150 +239,6 @@ private[graft] object StoreIO {
     val (fs, p) = hadoopFs(spark, dataDir)
     if (fs.exists(p)) { fs.delete(p, true); () }
     clearPending(spark, dir, kind, label)
-  }
-
-  // ---- versioned-manifest CAS (stores with a pointer, no commit log) --
-  // GraftTable/ScdStore CAS their commit SNAPSHOT file; the log-less
-  // stores (DeleteStore, IntervalIndexStore) have only the pointer, so
-  // the pointer swap itself gets a slot: claim `_swap/s<target>.json`
-  // by exclusive create BEFORE writing `_live.json`. Two writers racing
-  // the same swap cannot both win — without this, last-swap-wins
-  // silently erases the loser's label from the manifest AFTER its
-  // append returned success (inside GraftTable.delete, that is a lost
-  // erasure batch).
-
-  /** Claim the swap slot for `target` (= base version + 1) or throw
-    * ConcurrentModificationException. Returns the NONCE sidecar label
-    * an unlabeled op announced (None for labeled ops) — the caller
-    * MUST clear it with [[clearPending]] strictly AFTER its pointer
-    * swap: cleared earlier, a racing claimant reading the slot would
-    * find the nonce unannounced, classify the live claim as a dead
-    * orphan, and both writers would swap.
-    *
-    * OCCUPANT STATE MACHINE — the one table for every CAS in the
-    * engine (this slot CAS for the log-less DeleteStore /
-    * IntervalIndexStore, and the structurally identical commit-slot
-    * loops in GraftTable.commitManifest / ScdStore.commitManifest).
-    * When the exclusive create fails, the occupant is classified in
-    * this order, first match wins:
-    *
-    *  1. COMMITTED WINNER — the pointer has reached `target`
-    *     (`currentVersion() >= target`): the occupant won and swapped.
-    *     → abort (CME); the caller retries against the new state.
-    *  2. OWN CRASHED CLAIM — same kind AND same NON-EMPTY label: a
-    *     replay of a labeled op (append/compact/batch/…) repairing a
-    *     commit that died between its slot write and its pointer
-    *     swap. Labels identify a logical batch, so the replay may
-    *     reuse (overwrite) the slot. → reuse.
-    *  3. IN-FLIGHT (announced, labeled) — `occupantInFlight(kind,
-    *     label)`: the occupant's pending sidecar still stands, so its
-    *     writer is either alive mid-swap or crashed awaiting replay
-    *     under this same label. → abort (CME).
-    *  4. IN-FLIGHT (announced, unlabeled) — ops with no replay
-    *     identity (retire / reset / expire) announce a per-invocation
-    *     NONCE sidecar before claiming, and their slot body carries
-    *     the nonce; the sidecar standing is the liveness signal —
-    *     exactly the announce rule labeled ops use, with the nonce as
-    *     the identity. → abort (CME). This replaces the r16 mtime
-    *     grace window: clock skew between hosts and a paused driver
-    *     could both misclassify a LIVE concurrent writer as dead, and
-    *     two retires would then both swap — the last-swap-wins loss
-    *     the CAS exists to prevent. No clocks anywhere now. A claimant
-    *     that crashed pre-swap leaves its nonce standing and wedges
-    *     the slot LOUDLY (the CME names the sidecar) — the same
-    *     recovery story as a crashed labeled writer that is never
-    *     replayed: an operator clears the sidecar once the writer is
-    *     known dead, and the next claim resolves the slot as case 5.
-    *  5. DEAD ORPHAN — anything else: a crashed claim whose
-    *     announcement is gone (labeled or nonce'd), a pre-nonce or
-    *     handcrafted unlabeled slot with no nonce at all, or an
-    *     unreadable slot. With rename/hard-link publish a visible slot
-    *     is complete by construction, so "unparseable" really does
-    *     mean handcrafted, never a half-written in-flight winner.
-    *     → delete and retry (bounded attempts).
-    *
-    * Slots at or below the live version are [[sweepSwapSlots]]'s to
-    * clean; a swapped-and-crashed op's stale nonce sidecar is inert
-    * (nothing references it) and bounded. */
-  def claimSwapSlot(spark: SparkSession, dir: String, target: Long,
-      kind: String, label: String, currentVersion: () => Long,
-      occupantInFlight: (String, String) => Boolean): Option[String] = {
-    val slot = s"$dir/_swap/s$target.json"
-    // unlabeled ops get a per-invocation identity, announced BEFORE
-    // the claim so a racing claimant can tell this writer is alive
-    val nonce: Option[String] =
-      if (label.nonEmpty) None
-      else Some(s"nonce-${ProcessHandle.current().pid()}-" +
-        java.util.UUID.randomUUID().toString)
-    nonce.foreach(nx => writePending(spark, dir, kind, nx))
-    def abort(msg: String): Nothing = {
-      // we announced but will not proceed: un-announce, or the dead
-      // nonce would wedge nothing yet shield garbage
-      nonce.foreach(nx => clearPending(spark, dir, kind, nx))
-      throw new java.util.ConcurrentModificationException(msg)
-    }
-    val body = renderJson { o =>
-      o.put("kind", kind); o.put("label", label)
-      nonce.foreach { nx => o.put("nonce", nx); () }
-    }
-    var attempts = 0
-    while (!writeStringExclusive(spark, slot, body)) {
-      if (currentVersion() >= target)
-        abort(
-          s"manifest swap s$target in $dir was won by another writer — " +
-            "single writer is the contract; retry against the new state")
-      val occ =
-        try Some(parseJson(readString(spark, slot)))
-        catch { case _: Exception => None } // vanished/unreadable
-      val oKind = occ.flatMap(jStr(_, "kind"))
-      val oLabel = occ.flatMap(jStr(_, "label"))
-      val oNonce = occ.flatMap(jStr(_, "nonce")).filter(_.nonEmpty)
-      if (label.nonEmpty && oKind.contains(kind) && oLabel.contains(label))
-        return None // case 2: our own crashed claim at the same version
-      if (oLabel.exists(_.nonEmpty) &&
-          oKind.exists(k => occupantInFlight(k, oLabel.getOrElse(""))))
-        abort(
-          s"manifest swap s$target in $dir is claimed by an in-flight " +
-            s"'${oKind.get}' writer (label '${oLabel.getOrElse("")}') — " +
-            "single writer is the contract")
-      if (oNonce.exists(nx => pendingExists(spark, dir,
-          oKind.getOrElse(""), nx)))
-        // case 4: the unlabeled occupant's nonce announcement stands —
-        // alive mid-swap, or crashed and awaiting operator recovery
-        abort(
-          s"manifest swap s$target in $dir is claimed by a concurrent " +
-            s"unlabeled '${oKind.getOrElse("?")}' writer (announcement " +
-            s"${pendingPath(dir, oKind.getOrElse(""), oNonce.get)} " +
-            "stands) — single writer is the contract; if its writer is " +
-            "known dead, remove that sidecar to release the slot")
-      attempts += 1
-      if (attempts > 3) {
-        nonce.foreach(nx => clearPending(spark, dir, kind, nx))
-        require(false, s"swap slot s$target in $dir cannot be claimed")
-      }
-      val (fs, p) = hadoopFs(spark, slot)
-      fs.delete(p, false) // case 5: dead orphan (crashed, never replayed)
-      ()
-    }
-    nonce
-  }
-
-  /** Sweep claimed swap slots at or below the live version (their
-    * swaps are visible in the pointer; keeping them would only shield
-    * nothing). Returns the count removed. */
-  def sweepSwapSlots(spark: SparkSession, dir: String, upTo: Long): Int = {
-    val (fs, root) = hadoopFs(spark, s"$dir/_swap")
-    if (!fs.exists(root)) return 0
-    val re = """s(\d+)\.json""".r
-    var n = 0
-    fs.listStatus(root).foreach { st =>
-      re.findFirstMatchIn(st.getPath.getName).foreach { m0 =>
-        if (m0.group(1).toLong <= upTo) {
-          fs.delete(st.getPath, false); n += 1
-        }
-      }
-    }
-    n
   }
 
   /** Clear standing sidecars the caller can PROVE stale: `committed`

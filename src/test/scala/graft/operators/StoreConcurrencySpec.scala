@@ -498,6 +498,62 @@ class StoreConcurrencySpec extends SparkSpec {
       .isEmpty, "completed retire left its nonce announcement standing")
   }
 
+  test("ScdStore: a crashed init (slot c1 written, no pointer) converges on replay") {
+    val dir = tmp("scd-init-crash-")
+    // the crash window between init's slot write and its pointer swap:
+    // the snapshot is on disk, `_live.json` never was
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$dir/_commits"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/_commits/c1.json"),
+      """{"version":1,"commit":1,"curDir":"v1","applied":["base"],""" +
+        """"histLive":["base"],"kind":"init","label":"base"}""")
+    assert(!new java.io.File(s"$dir/_live.json").exists())
+    ScdStore.init(scdLog, dir, "user_id", "ts", Seq("event_type"),
+      Seq("event_id"))
+    assert(ScdStore.manifest(spark, dir).commit == 1L,
+      "replayed init did not swap the pointer to commit 1")
+    assert(rows(ScdStore.table(spark, dir)) ==
+      rows(ScdMerge.compress(scdLog, "user_id", "ts",
+        Seq("event_type"), Seq("event_id"))),
+      "replayed init diverged from the one-pass model")
+  }
+
+  test("an occupant of unknown kind aborts both log-backed stores; the pointer stays") {
+    import spark.implicits._
+    def bogus(dir: String, c: Long, body: String): Unit = {
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$dir/_commits"))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/_commits/c$c.json"),
+        body.dropRight(1) + ""","kind":"bogus","label":"zz"}""")
+    }
+    val gt = tmp("gt-bogus-")
+    val li = Tables.lineitem(spark, sfDir)
+    GraftTable.create(spark, gt, zoneCols = Seq("l_partkey"))
+    GraftTable.append(li.where($"l_orderkey" % 2 === 0), gt, "b1") // c2
+    bogus(gt, 3L, """{"commit":3,"applied":["b1"],"live":["b1"]}""")
+    val exGt = intercept[java.util.ConcurrentModificationException] {
+      GraftTable.append(li.where($"l_orderkey" % 2 === 1), gt, "b2")
+    }
+    assert(exGt.getMessage.contains("bogus"), exGt.getMessage)
+    assert(GraftTable.manifest(spark, gt).commit == 2L,
+      "GraftTable swapped past an unknown-kind occupant")
+
+    val scd = tmp("scd-bogus-")
+    val cut = lit("2024-01-16").cast("timestamp")
+    ScdStore.init(scdLog.where($"ts" < cut), scd, "user_id", "ts",
+      Seq("event_type"), Seq("event_id")) // c1
+    bogus(scd, 2L, """{"version":2,"commit":2,"curDir":"v2-zz",""" +
+      """"applied":["base"],"histLive":["base"]}""")
+    val exScd = intercept[java.util.ConcurrentModificationException] {
+      ScdStore.applyBatch(scdLog.where($"ts" >= cut), scd, "b1")
+    }
+    assert(exScd.getMessage.contains("bogus"), exScd.getMessage)
+    assert(ScdStore.manifest(spark, scd).commit == 1L,
+      "ScdStore overwrote an unknown-kind occupant as a dead orphan")
+  }
+
   // ---- GraftTable: racing appends -------------------------------------
 
   test("GraftTable: an append racing another append's commit aborts loudly, loses nothing") {
