@@ -7,14 +7,19 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: comma-separated query-name filter for fast
-    // local iteration on a few queries. The driver always passes two
-    // args → full run.
+    // local iteration on a few queries; a name that is not registered
+    // is an error, and only the named oracles are dumped. Two args →
+    // full run.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unregistered query name(s): ${unknown.toSeq.sorted.mkString(",")}")
+    def selected(name: String) = only.forall(_.contains(name))
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -35,7 +40,8 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .collect { case (k, v) if selected(k) => s"${q(k)}: ${q(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -224,10 +224,12 @@ object DeleteStore {
       live: Seq[String], version: Long = 0L)
 
   /** Swaps claim `_swap/s<version>.json`, swept at vacuum. Labeled ops
-    * announce under their own kind; `init`, `reset` and `retire` carry
-    * no label and announce a nonce. */
+    * announce under their own kind; `reset` and `retire` carry no label
+    * and announce a nonce. `init` is the first commit and announces
+    * nothing, so a crashed init's slot is an orphan its replay reclaims
+    * (as for GraftTable's `create` and ScdStore's `init`). */
   private[operators] val commitLog = new CommitLog[Manifest](CommitLog.Swept,
-    Map("init" -> CommitLog.Nonce, "append" -> CommitLog.Sidecar("append"),
+    Map("init" -> CommitLog.Never, "append" -> CommitLog.Sidecar("append"),
       "compact" -> CommitLog.Sidecar("compact"),
       "reset" -> CommitLog.Nonce, "retire" -> CommitLog.Nonce),
     n => Manifest(StoreIO.jArr(n, "applied").getOrElse(Nil),

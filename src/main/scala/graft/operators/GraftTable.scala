@@ -947,23 +947,6 @@ object GraftTable {
     }
   }
 
-  /** The CDC feed's consumer contract, shipped as code: incrementally
-    * maintain a downstream MIRROR of the table at `mirrorDir` from the
-    * commit log. Each call applies `changesBetween(lastSynced, live)`
-    * to the mirror — inserts unioned in, delete-preimage keys
-    * anti-joined out (insert-then-delete nets to absent because the
-    * deletes apply after) — and writes the next immutable
-    * `v<commit>/` version behind a `_sync.json` pointer swap. A first
-    * sync, or a window an OPTIMIZE landed in (changesBetween refuses
-    * — no exact delta across a rewrite), re-baselines with a full
-    * copy. Returns (fromCommit, toCommit); equal means no-op.
-    *
-    * 100 TB: steady-state sync COMPUTE is delta-sized (the window's
-    * batch dirs + the dirty-bucket merge) and the WRITE is
-    * dirty-bucket-sized (the bucketed layout below — a 50-key erasure
-    * against a table-scale per-user mirror rewrites ~50 buckets, not
-    * the view); only the re-baseline is table-sized — which is why
-    * consumers schedule syncs ahead of maintenance. */
   // ---- downstream views: the bucketed versioned layout -----------------
   //
   // All four CDC consumers (row mirror, filtered+projected mirror,
@@ -971,7 +954,7 @@ object GraftTable {
   // layout: the view is hash-bucketed by its ADDRESSING key (the
   // table's delete keys for row-shaped views, the group keys for the
   // aggregate) into `nBuckets` buckets, and each sync writes ONLY the
-  // buckets the window touched into the next `v<commit>/gbkt=<k>/`
+  // buckets the window touched into the next `v<ver>/gbkt=<k>/`
   // dirs, carrying every untouched bucket forward BY REFERENCE — the
   // `_sync.json` pointer maps each bucket to the version dir holding
   // its current rows. Steady-state sync WRITE volume is therefore
@@ -989,10 +972,18 @@ object GraftTable {
   // resolved against the just-superseded pointer finishes its scan),
   // restated for a non-linear version set. keepLast=0 sweeps every
   // unreferenced version immediately.
+  //
+  // Families: every `_sync.json` names the family that wrote it
+  // (`mirror`, `where`, `join`, `agg`) and that family's definition
+  // (where: pred + cols; join: pred = the join, cols = dimCols; mirror
+  // and agg define none). A sync maintains a pointer only if it carries
+  // the sync's own family and definition; a pre-bucketed `legacy`
+  // pointer is adopted under the same definition test by every family
+  // but join, which never had a legacy layout. Anything else refuses
+  // loudly, even on a no-op sync: pointing one sync at another's view
+  // must never silently maintain the wrong view.
 
-  /** One parsed `_sync.json`: the consumer FAMILY (fail-loud identity —
-    * pointing one sync flavor at another flavor's directory must
-    * refuse, never silently maintain the wrong view), the bucket map,
+  /** One parsed `_sync.json`: the consumer FAMILY, the bucket map,
     * reader-retention refs, the pinned view schema, and the
     * family-specific definition fields (where: pred+cols; join:
     * pred=joinOn, cols=dimCols, dimCommit). `family=="legacy"` marks a
@@ -1006,8 +997,9 @@ object GraftTable {
     * [[MaxViewSegments]] — are FOLDED into one segment. The LSM split
     * is what makes sync writes delta-proportional in BOTH dimensions:
     * without it a broad append (keys scatter across every bucket, the
-    * normal case) re-wrote the whole view to add delta rows. */
-  /** `ver` is the view's OWN monotone version counter (the number in
+    * normal case) re-wrote the whole view to add delta rows.
+    *
+    * `ver` is the view's OWN monotone version counter (the number in
     * `v<ver>/` dir names), decoupled from the source commit: a sync
     * can run without a source commit (the join family's dim-moved
     * re-baseline), and writing such a version under `v<commit>` would
@@ -1154,12 +1146,9 @@ object GraftTable {
     * retained pointer references past the `keepLast` reader
     * allowance. */
   private def commitViewVersion(spark: SparkSession, rootDir: String,
-      prior: Option[ViewState], live: Long, family: String,
+      prior: Option[ViewState], live: Long, v: ViewDef,
       nBuckets: Int, df: DataFrame, bucketCols: Seq[String],
-      fold: Set[Int], append: Set[Int], keepLast: Int,
-      pred: Option[String] = None,
-      cols: Option[Seq[String]] = None,
-      dimCommit: Option[Long] = None): Unit = {
+      fold: Set[Int], append: Set[Int], keepLast: Int): Unit = {
     require((fold & append).isEmpty,
       s"fold/append overlap: ${(fold & append).mkString(",")}")
     val schema = toNullable(StructType(df.schema.fields))
@@ -1204,8 +1193,8 @@ object GraftTable {
     val prevRefs = (oldRefs +: prior.map(_.prevRefs).getOrElse(Nil))
       .filter(_.nonEmpty).take(keepLast)
     writeViewState(spark, s"$rootDir/_sync.json",
-      ViewState(live, family, nBuckets, newMap, prevRefs,
-        Some(schema.json), pred, cols, dimCommit, ver, bucketCols))
+      ViewState(live, v.family, nBuckets, newMap, prevRefs,
+        Some(schema.json), v.pred, v.cols, v.dimCommit, ver, bucketCols))
     val keep = newMap.values.flatten.toSet ++ prevRefs.flatten.toSet + ver
     val (mfs, mroot) = StoreIO.hadoopFs(spark, rootDir)
     mfs.listStatus(mroot).filter(_.isDirectory).map(_.getPath)
@@ -1228,91 +1217,147 @@ object GraftTable {
     (fold, insertBuckets -- fold)
   }
 
-  /** Re-baseline vs delta decision shared by every sync: `None` when
-    * there is no prior bucketed state to delta against (first sync, a
-    * legacy flat pointer) or the log cannot price the window (an
-    * optimize inside it, the last-synced commit expired). */
-  private def windowDelta(spark: SparkSession, dir: String,
-      st: Option[ViewState], last: Long, live: Long): Option[DataFrame] =
-    if (last == 0 || st.exists(_.nBuckets == 0)) None
-    else
-      try Some(changesBetween(spark, dir, last, live))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage.contains("optimize") ||
-              e.getMessage.contains("not retained") => None
-      }
+  /** What a sync maintains: its family tag and that family's
+    * definition fields, as `_sync.json` records them. */
+  private case class ViewDef(family: String, pred: Option[String] = None,
+      cols: Option[Seq[String]] = None, dimCommit: Option[Long] = None)
 
-  def syncMirror(spark: SparkSession, dir: String,
-      mirrorDir: String, keepLast: Int = 1,
-      buckets: Int = 16): (Long, Long) = {
+  /** An opened sync: the prior pointer, the window (last, live], the
+    * bucket count, and the window's delta — `None` re-baselines. */
+  private case class SyncWindow(st: Option[ViewState], last: Long,
+      live: Long, nB: Int, delta: Option[DataFrame])
+
+  /** The prelude every sync shares: the argument bounds, the
+    * family/definition refusal (the rule on the layout section above —
+    * checked even on a no-op sync), then `Left` with the return value
+    * when there is nothing to do: the pointer is at `live` and not
+    * `stale`, or nothing is committed yet (a sync scheduled ahead of the
+    * first append reports no progress). Otherwise the window: a prior
+    * bucketed view keeps its bucket count, and the window re-baselines
+    * when there is no prior bucketed state to delta against (first
+    * sync, a legacy flat pointer), the prior is `stale` (join: the dim
+    * moved), or the log cannot price the window (an optimize inside it,
+    * the last-synced commit expired). */
+  private def openSync(spark: SparkSession, dir: String, viewDir: String,
+      v: ViewDef, keepLast: Int, buckets: Int,
+      stale: ViewState => Boolean = _ => false)
+      : Either[(Long, Long), SyncWindow] = {
     require(keepLast >= 0, "keepLast must be >= 0")
     require(buckets >= 1, "buckets must be >= 1")
     val srcMan = manifest(spark, dir)
     val live = srcMan.commit
-    val st = readViewState(spark, s"$mirrorDir/_sync.json")
+    val st = readViewState(spark, s"$viewDir/_sync.json")
     st.foreach { s =>
-      // fail-loud family check (ADVICE r16): a pointer carrying a
-      // WHERE/join/agg definition is a DIFFERENT view — refuse, never
-      // silently maintain an unfiltered mirror on top of it
-      require(s.family == "mirror" ||
-        (s.family == "legacy" && s.pred.isEmpty && s.cols.isEmpty),
-        s"view at $mirrorDir is a '${s.family}' view" +
-          s.pred.map(p => s" (def: $p)").getOrElse("") +
-          " — syncMirror maintains plain row mirrors only; delete the" +
-          " view to redefine it")
+      def defOf(p: Option[String], c: Option[Seq[String]]) =
+        p.map(x => s" defined as $x / ${c.getOrElse(Nil).mkString(",")}")
+          .getOrElse("")
+      require((s.family == v.family ||
+        (s.family == "legacy" && v.family != "join")) &&
+        s.pred == v.pred && s.cols == v.cols,
+        s"view at $viewDir is a '${s.family}' view${defOf(s.pred, s.cols)}" +
+          s", not a '${v.family}' view${defOf(v.pred, v.cols)} — delete" +
+          " the mirror to redefine it")
     }
     val last = st.map(_.commit).getOrElse(0L)
-    if (last == live) return (last, live)
-    // nothing committed yet (a sync scheduled ahead of the first
-    // append): there is no table to mirror — report no progress
-    if (srcMan.live.isEmpty) return (last, last)
-    val m = meta(spark, dir)
+    val rebase = st.exists(stale)
+    if (last == live && !rebase) return Left((last, live))
+    if (srcMan.live.isEmpty) return Left((last, last))
     val nB = st.filter(_.nBuckets > 0).map(_.nBuckets).getOrElse(buckets)
-    windowDelta(spark, dir, st, last, live) match {
-      case None => // (re-)baseline, PINNED at `live` (a commit landing
-        // mid-sync must not leak rows the pointer's commit predates)
-        val base = tableAt(spark, dir, live)
-        val bc =
-          if (m.delKeys.nonEmpty) m.delKeys else hashableCols(base.schema)
-        commitViewVersion(spark, mirrorDir, st, live, "mirror", nB,
-          base, bc, (0 until nB).toSet, Set.empty, keepLast)
-      case Some(d0) =>
-        // the delta feeds the dirty-set probes AND the rewrite: pin it
-        // once so the preimage semi-join never runs twice
-        val d = d0.persist()
-        try {
+    val delta =
+      if (rebase || last == 0 || st.exists(_.nBuckets == 0)) None
+      else
+        try Some(changesBetween(spark, dir, last, live))
+        catch {
+          case e: IllegalArgumentException
+              if e.getMessage.contains("optimize") ||
+                e.getMessage.contains("not retained") => None
+        }
+    Right(SyncWindow(st, last, live, nB, delta))
+  }
+
+  /** The one sync body of the row-shaped views (mirror, where, join).
+    * A re-baseline writes `shape(table at live)` into every bucket,
+    * PINNED at `live` (a commit landing mid-sync must not leak rows the
+    * pointer's commit predates). A delta window shapes its inserts,
+    * narrows its delete preimages with `preimages` before taking their
+    * keys, folds the buckets a delete reached and appends to the rest
+    * ([[splitDelta]]). Buckets address by the table's delete keys, else
+    * by the hashable columns of the shaped rows (`hash` rejects maps;
+    * without keys, placement is never probed again). */
+  private def syncRowView(spark: SparkSession, dir: String,
+      viewDir: String, v: ViewDef, keepLast: Int, buckets: Int,
+      stale: ViewState => Boolean = _ => false,
+      preimages: DataFrame => DataFrame = identity)(
+      shape: DataFrame => DataFrame): (Long, Long) = {
+    val SyncWindow(st, last, live, nB, delta) =
+      openSync(spark, dir, viewDir, v, keepLast, buckets, stale) match {
+        case Left(noop) => return noop
+        case Right(w) => w
+      }
+    val delKeys = meta(spark, dir).delKeys
+    def bcOf(df: DataFrame): Seq[String] =
+      if (delKeys.nonEmpty) delKeys else hashableCols(df.schema)
+    // the delta feeds the dirty-set probes AND the rewrite: pin it
+    // once so the preimage semi-join never runs twice
+    val pinned = delta.map(_.persist())
+    try {
+      val (next, bc, fold, append) = pinned match {
+        case None =>
+          val base = shape(tableAt(spark, dir, live))
+          (base, bcOf(base), (0 until nB).toSet, Set.empty[Int])
+        case Some(d) =>
           val cur = st.get
-          val inserts = d.where(col("_change_type") === "insert")
-            .drop("_change_type")
+          val inserts = shape(
+            d.where(col("_change_type") === "insert").drop("_change_type"))
+          val bc = bcOf(inserts)
           val delKeyRows =
-            if (m.delKeys.isEmpty) None // delete commits cannot exist
-            else Some(d.where(col("_change_type") === "delete")
-              .select(m.delKeys.map(col): _*))
-          val bc =
-            if (m.delKeys.nonEmpty) m.delKeys
-            else hashableCols(inserts.schema)
-          val insB = dirtyBucketsOf(Seq((inserts, bc)), nB)
-          val delB = delKeyRows.map(k =>
-            dirtyBucketsOf(Seq((k, m.delKeys)), nB)).getOrElse(Set.empty)
-          val (foldB, appendB) = splitDelta(cur, insB, delB)
+            if (delKeys.isEmpty) None // delete commits cannot exist
+            else Some(preimages(d.where(col("_change_type") === "delete"))
+              .select(delKeys.map(col): _*))
+          val (fold, append) = splitDelta(cur,
+            dirtyBucketsOf(Seq((inserts, bc)), nB),
+            delKeyRows.map(k => dirtyBucketsOf(Seq((k, delKeys)), nB))
+              .getOrElse(Set.empty))
           // fold buckets are read and rewritten; append buckets
           // contribute ONLY their new rows (an insert can never match
           // a window delete key outside the fold set — bucketing is BY
           // the delete keys, so equal keys share a bucket)
-          val curFold = readViewBuckets(spark, mirrorDir, cur, foldB)
-          val upserted = curFold.unionByName(inserts,
-            allowMissingColumns = true)
+          val upserted = readViewBuckets(spark, viewDir, cur, fold)
+            .unionByName(inserts, allowMissingColumns = true)
           // null-safe, like the table's own reads (<=>): a NULL-key
           // delete must erase mirror NULLs too
-          val next = delKeyRows.fold(upserted)(k =>
-            RowDeletes.applyEqualityDeletes(upserted, k, m.delKeys))
-          commitViewVersion(spark, mirrorDir, Some(cur), live, "mirror",
-            nB, next, bc, foldB, appendB, keepLast)
-        } finally { d.unpersist(); () }
-    }
+          (delKeyRows.fold(upserted)(k =>
+            RowDeletes.applyEqualityDeletes(upserted, k, delKeys)),
+            bc, fold, append)
+      }
+      commitViewVersion(spark, viewDir, st, live, v, nB, next, bc, fold,
+        append, keepLast)
+    } finally pinned.foreach(_.unpersist())
     (last, live)
   }
+
+  /** The CDC feed's consumer contract, shipped as code: incrementally
+    * maintain a downstream MIRROR of the table at `mirrorDir` from the
+    * commit log. Each call applies `changesBetween(lastSynced, live)`
+    * to the mirror — inserts unioned in, delete-preimage keys
+    * anti-joined out (insert-then-delete nets to absent because the
+    * deletes apply after) — and writes the window's dirty buckets as
+    * the next immutable version behind a `_sync.json` pointer swap. A
+    * first sync, or a window an OPTIMIZE landed in (changesBetween
+    * refuses — no exact delta across a rewrite), re-baselines with a
+    * full copy. Returns (fromCommit, toCommit); equal means no-op.
+    *
+    * 100 TB: steady-state sync COMPUTE is delta-sized (the window's
+    * batch dirs + the dirty-bucket merge) and the WRITE is
+    * dirty-bucket-sized (the bucketed layout above — a 50-key erasure
+    * against a table-scale per-user mirror rewrites ~50 buckets, not
+    * the view); only the re-baseline is table-sized — which is why
+    * consumers schedule syncs ahead of maintenance. */
+  def syncMirror(spark: SparkSession, dir: String,
+      mirrorDir: String, keepLast: Int = 1,
+      buckets: Int = 16): (Long, Long) =
+    syncRowView(spark, dir, mirrorDir, ViewDef("mirror"), keepLast,
+      buckets)(identity)
 
   /** FILTERED + PROJECTED mirror: maintain a downstream copy of
     * `SELECT columns FROM table WHERE predicateSql` from the commit
@@ -1336,77 +1381,20 @@ object GraftTable {
       predicateSql: String, columns: Seq[String],
       keepLast: Int = 1, buckets: Int = 16): (Long, Long) = {
     require(columns.nonEmpty, "at least one projected column")
-    require(keepLast >= 0, "keepLast must be >= 0")
-    require(buckets >= 1, "buckets must be >= 1")
     columns.foreach(requireColName)
     require(predicateSql.trim.nonEmpty, "an empty predicate is read()'s job")
-    val m = meta(spark, dir)
-    val missingKeys = m.delKeys.filterNot(columns.contains)
+    val missingKeys = meta(spark, dir).delKeys.filterNot(columns.contains)
     require(missingKeys.isEmpty,
       s"projection must keep the delete key(s) ${missingKeys.mkString(",")}" +
         " — the mirror cannot apply a delete it cannot address")
-    val srcMan = manifest(spark, dir)
-    val live = srcMan.commit
-    val st = readViewState(spark, s"$mirrorDir/_sync.json")
-    st.foreach { s =>
-      // definition drift = a DIFFERENT view: refuse, never silently
-      // maintain the wrong one on top of the old rows. pred/cols must
-      // be PRESENT (ADVICE r16): a pointer WITHOUT them is a plain
-      // mirror's — maintaining a filtered view on an unfiltered
-      // baseline would be exactly the silent divergence the check
-      // exists to prevent.
-      require(s.family == "where" || s.family == "legacy",
-        s"view at $mirrorDir is a '${s.family}' view — syncMirrorWhere" +
-          " maintains filtered+projected mirrors only; delete the view" +
-          " to redefine it")
-      require(s.pred.contains(predicateSql) && s.cols.contains(columns),
-        s"mirror at $mirrorDir was defined as WHERE " +
-          s"${s.pred.getOrElse("<absent>")} SELECT " +
-          s"${s.cols.getOrElse(Nil).mkString(",")} — delete the " +
-          "mirror to redefine it")
-    }
-    val last = st.map(_.commit).getOrElse(0L)
-    if (last == live) return (last, live)
-    if (srcMan.live.isEmpty) return (last, last)
     val pred = expr(predicateSql)
-    def shape(df: DataFrame): DataFrame =
-      df.where(pred).select(columns.map(col): _*)
-    val nB = st.filter(_.nBuckets > 0).map(_.nBuckets).getOrElse(buckets)
-    val bc = if (m.delKeys.nonEmpty) m.delKeys else columns
-    windowDelta(spark, dir, st, last, live) match {
-      case None => // (re-)baseline, pinned at `live`
-        commitViewVersion(spark, mirrorDir, st, live, "where", nB,
-          shape(tableAt(spark, dir, live)), bc, (0 until nB).toSet,
-          Set.empty, keepLast,
-          pred = Some(predicateSql), cols = Some(columns))
-      case Some(d0) =>
-        val d = d0.persist()
-        try {
-          val cur = st.get
-          val inserts = shape(d.where(col("_change_type") === "insert"))
-          // preimages are filtered by the SAME predicate: a deleted
-          // row that never satisfied it was never in the mirror
-          // (immutable rows — its verdict cannot have changed), so
-          // the filter only shrinks the probe, never the result
-          val delKeyRows =
-            if (m.delKeys.isEmpty) None
-            else Some(d.where(col("_change_type") === "delete")
-              .where(pred).select(m.delKeys.map(col): _*))
-          val insB = dirtyBucketsOf(Seq((inserts, bc)), nB)
-          val delB = delKeyRows.map(k =>
-            dirtyBucketsOf(Seq((k, m.delKeys)), nB)).getOrElse(Set.empty)
-          val (foldB, appendB) = splitDelta(cur, insB, delB)
-          val curFold = readViewBuckets(spark, mirrorDir, cur, foldB)
-          val upserted = curFold.unionByName(inserts,
-            allowMissingColumns = true)
-          val next = delKeyRows.fold(upserted)(k =>
-            RowDeletes.applyEqualityDeletes(upserted, k, m.delKeys))
-          commitViewVersion(spark, mirrorDir, Some(cur), live, "where",
-            nB, next, bc, foldB, appendB, keepLast,
-            pred = Some(predicateSql), cols = Some(columns))
-        } finally { d.unpersist(); () }
-    }
-    (last, live)
+    // preimages are filtered by the SAME predicate: a deleted row that
+    // never satisfied it was never in the mirror (immutable rows — its
+    // verdict cannot have changed), so the filter only shrinks the
+    // probe, never the result
+    syncRowView(spark, dir, mirrorDir,
+      ViewDef("where", Some(predicateSql), Some(columns)), keepLast, buckets,
+      preimages = _.where(pred))(_.where(pred).select(columns.map(col): _*))
   }
 
   /** DIM-ENRICHED mirror — the JOIN tier of the IVM family (row mirror
@@ -1438,81 +1426,24 @@ object GraftTable {
     requireColName(factKey); requireColName(dimKey)
     require(dimCols.nonEmpty, "at least one dim payload column")
     dimCols.foreach(requireColName)
-    require(keepLast >= 0, "keepLast must be >= 0")
-    require(buckets >= 1, "buckets must be >= 1")
-    val m = meta(spark, factDir)
-    val srcMan = manifest(spark, factDir)
-    val live = srcMan.commit
-    val dimLive = manifest(spark, dimDir).commit
-    val joinDef = s"$factKey=$dimKey"
-    val st = readViewState(spark, s"$mirrorDir/_sync.json")
-    st.foreach { s =>
-      require(s.family == "join",
-        s"view at $mirrorDir is a '${s.family}' view — syncJoinMirror" +
-          " maintains dim-enriched mirrors only; delete the view to" +
-          " redefine it")
-      require(s.pred.contains(joinDef) && s.cols.contains(dimCols),
-        s"join mirror at $mirrorDir was defined as ON " +
-          s"${s.pred.getOrElse("<absent>")} SELECT " +
-          s"${s.cols.getOrElse(Nil).mkString(",")} — delete the mirror" +
-          " to redefine it")
+    val dimMan = manifest(spark, dimDir)
+    // lazy: only a sync with work to do reads the dim (and requires it)
+    lazy val dim = {
+      require(dimMan.live.nonEmpty,
+        s"dim table at $dimDir has no committed data")
+      tableAt(spark, dimDir, dimMan.commit)
+        .select((dimKey +: dimCols.filterNot(_ == dimKey)).map(col): _*)
     }
-    val last = st.map(_.commit).getOrElse(0L)
-    val dimMoved = st.exists(_.dimCommit.exists(_ != dimLive))
-    if (last == live && !dimMoved) return (last, live)
-    if (srcMan.live.isEmpty) return (last, last)
-    require(manifest(spark, dimDir).live.nonEmpty,
-      s"dim table at $dimDir has no committed data")
-    val dim = tableAt(spark, dimDir, dimLive)
-      .select((dimKey +: dimCols.filterNot(_ == dimKey)).map(col): _*)
-    def shape(df: DataFrame): DataFrame = {
-      val overlap = dimCols.filter(df.columns.contains)
-      require(overlap.isEmpty,
-        s"dim column(s) ${overlap.mkString(",")} collide with fact columns")
-      df.join(broadcast(dim), df(factKey) === dim(dimKey), "left")
-        .drop(dim(dimKey))
+    syncRowView(spark, factDir, mirrorDir, ViewDef("join",
+      Some(s"$factKey=$dimKey"), Some(dimCols), Some(dimMan.commit)),
+      keepLast, buckets, stale = _.dimCommit.exists(_ != dimMan.commit)) {
+      df =>
+        val overlap = dimCols.filter(df.columns.contains)
+        require(overlap.isEmpty,
+          s"dim column(s) ${overlap.mkString(",")} collide with fact columns")
+        df.join(broadcast(dim), df(factKey) === dim(dimKey), "left")
+          .drop(dim(dimKey))
     }
-    val nB = st.filter(_.nBuckets > 0).map(_.nBuckets).getOrElse(buckets)
-    val deltaOpt = // the dim boundary re-baselines, see the scaladoc
-      if (dimMoved) None else windowDelta(spark, factDir, st, last, live)
-    deltaOpt match {
-      case None =>
-        val base = shape(tableAt(spark, factDir, live))
-        val bc =
-          if (m.delKeys.nonEmpty) m.delKeys else hashableCols(base.schema)
-        commitViewVersion(spark, mirrorDir, st, live, "join", nB, base,
-          bc, (0 until nB).toSet, Set.empty, keepLast,
-          pred = Some(joinDef), cols = Some(dimCols),
-          dimCommit = Some(dimLive))
-      case Some(d0) =>
-        val d = d0.persist()
-        try {
-          val cur = st.get
-          val inserts = shape(
-            d.where(col("_change_type") === "insert").drop("_change_type"))
-          val delKeyRows =
-            if (m.delKeys.isEmpty) None
-            else Some(d.where(col("_change_type") === "delete")
-              .select(m.delKeys.map(col): _*))
-          val bc =
-            if (m.delKeys.nonEmpty) m.delKeys
-            else hashableCols(inserts.schema)
-          val insB = dirtyBucketsOf(Seq((inserts, bc)), nB)
-          val delB = delKeyRows.map(k =>
-            dirtyBucketsOf(Seq((k, m.delKeys)), nB)).getOrElse(Set.empty)
-          val (foldB, appendB) = splitDelta(cur, insB, delB)
-          val curFold = readViewBuckets(spark, mirrorDir, cur, foldB)
-          val upserted = curFold.unionByName(inserts,
-            allowMissingColumns = true)
-          val next = delKeyRows.fold(upserted)(k =>
-            RowDeletes.applyEqualityDeletes(upserted, k, m.delKeys))
-          commitViewVersion(spark, mirrorDir, Some(cur), live, "join",
-            nB, next, bc, foldB, appendB, keepLast,
-            pred = Some(joinDef), cols = Some(dimCols),
-            dimCommit = Some(dimLive))
-        } finally { d.unpersist(); () }
-    }
-    (last, live)
   }
 
   /** INCREMENTAL VIEW MAINTENANCE over the CDC feed: maintain a
@@ -1528,9 +1459,10 @@ object GraftTable {
     * Steady-state cost = delta-sized CDC read + AGGREGATE-sized merge
     * — never a table scan; only the first sync or an optimize window
     * (no exact delta; same recovery as syncMirror) re-baselines from
-    * read(). Versions are immutable `v<commit>/` dirs behind a
-    * `_sync.json` pointer swap; [[sweepMirrorVersions]] applies the
-    * `keepLast` retention.
+    * the table. Each sync FOLDS the buckets its delta groups address
+    * (bucketed by the group keys) into the next version of the
+    * bucketed layout; [[commitViewVersion]] swaps the `_sync.json`
+    * pointer and applies the `keepLast` retention.
     *
     * count and sum are self-maintainable under deletes. min/max are
     * not (a deleted extremum cannot be repaired from the delta alone)
@@ -1553,23 +1485,11 @@ object GraftTable {
       repairSeam: DataFrame => Unit = _ => ()): (Long, Long) = {
     (keys ++ sumCols ++ minCols ++ maxCols).foreach(requireColName)
     require(keys.nonEmpty, "at least one group key")
-    require(keepLast >= 0, "keepLast must be >= 0")
-    require(buckets >= 1, "buckets must be >= 1")
-    val srcMan = manifest(spark, dir)
-    val live = srcMan.commit
-    val st = readViewState(spark, s"$aggDir/_sync.json")
-    st.foreach { s =>
-      require(s.family == "agg" ||
-        (s.family == "legacy" && s.pred.isEmpty && s.cols.isEmpty),
-        s"view at $aggDir is a '${s.family}' view" +
-          s.pred.map(p => s" (def: $p)").getOrElse("") +
-          " — syncAggMirror maintains grouped aggregates only; delete" +
-          " the view to redefine it")
-    }
-    val last = st.map(_.commit).getOrElse(0L)
-    if (last == live) return (last, live)
-    if (srcMan.live.isEmpty) return (last, last)
-    val nB = st.filter(_.nBuckets > 0).map(_.nBuckets).getOrElse(buckets)
+    val SyncWindow(st, last, live, nB, delta) =
+      openSync(spark, dir, aggDir, ViewDef("agg"), keepLast, buckets) match {
+        case Left(noop) => return noop
+        case Right(w) => w
+      }
     val dec = "decimal(28,2)"
     val extremaCols = minCols.map(c => s"min_$c") ++
       maxCols.map(c => s"max_$c")
@@ -1590,9 +1510,9 @@ object GraftTable {
     // buckets carry forward, same as the row families
     var dirtyB: Set[Int] = (0 until nB).toSet
     def commitAgg(df: DataFrame): Unit =
-      commitViewVersion(spark, aggDir, st, live, "agg", nB, df, keys,
-        dirtyB, Set.empty, keepLast)
-    windowDelta(spark, dir, st, last, live) match {
+      commitViewVersion(spark, aggDir, st, live, ViewDef("agg"), nB, df,
+        keys, dirtyB, Set.empty, keepLast)
+    delta match {
       case None => commitAgg(aggOf(tableAt(spark, dir, live)))
       case Some(d) =>
         val sign = when(col("_change_type") === "insert", 1L)
@@ -1769,10 +1689,9 @@ object GraftTable {
       s"view at $rootDir predates the bucketCols pointer field — " +
         "re-baseline it (delete the view and re-sync) to compact")
     val cur = readViewBuckets(spark, rootDir, st, multi)
-    commitViewVersion(spark, rootDir, Some(st), st.commit, st.family,
-      st.nBuckets, cur, st.bucketCols, fold = multi, append = Set.empty,
-      keepLast = keepLast, pred = st.pred, cols = st.cols,
-      dimCommit = st.dimCommit)
+    commitViewVersion(spark, rootDir, Some(st), st.commit,
+      ViewDef(st.family, st.pred, st.cols, st.dimCommit), st.nBuckets, cur,
+      st.bucketCols, fold = multi, append = Set.empty, keepLast = keepLast)
     multi.size
   }
 
@@ -2033,34 +1952,36 @@ object GraftTable {
       |  SELECT 4, 'delete', 2, 0
       |) ORDER BY commit_id""".stripMargin
 
-  /** A lifecycle whose CDC feed drives a MIRROR: baseline sync after
-    * the first append, then b2 + the erasure land, then a second sync
+  /** One CDC-consumer lifecycle under a fresh temp root, built once per
+    * (view, sf dir): create → b1 (commit 2) → `sync` (the baseline) →
+    * b2 (commit 3) + the F-order erasure (commit 4) → `sync` again,
     * whose window (2, 4] carries both inserts and delete preimages —
-    * the steady-state delta path, never the re-baseline. q173 reads
-    * the MIRROR, so the oracle checks that the consumer-side replay
-    * (insert union + delete anti-join) converged to table state. */
-  private def buildMirrorLifecycle(spark: SparkSession, d: String): String = {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mirror-").toString
-    val dir = s"$root/table"
-    create(spark, dir, zoneCols = Seq("l_partkey"),
-      bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
-    append(li.where($"l_orderkey" <= mid), dir, "b1") // commit 2
-    syncMirror(spark, dir, s"$root/mirror") // full-copy baseline at 2
-    append(li.where($"l_orderkey" > mid), dir, "b2") // commit 3
-    delete(graft.sources.Tables.orders(spark, d)
-      .where($"o_orderstatus" === "F")
-      .select($"o_orderkey".as("l_orderkey")), dir, "erase-1") // commit 4
-    syncMirror(spark, dir, s"$root/mirror") // DELTA window (2, 4]
-    root
-  }
-
-  private def q173Root(spark: SparkSession, d: String): String =
-    builtFor.computeIfAbsent("mirror:" + d,
-      _ => buildMirrorLifecycle(spark, d))
+    * the steady-state delta path, never the re-baseline. `sync` gets
+    * the root: the table is `root/table`, the view `root/view`, and
+    * `setup` prepares anything else the sync reads (q179's dim).
+    * Returns the view dir, so q173/q176–q179 hash-check that the
+    * consumer-side replay converged to table state. */
+  private def viewLifecycle(spark: SparkSession, d: String, view: String,
+      setup: String => Unit = _ => ())(sync: String => Unit): String =
+    builtFor.computeIfAbsent(s"$view:$d", { _ =>
+      import spark.implicits._
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft-$view-").toString
+      val dir = s"$root/table"
+      create(spark, dir, zoneCols = Seq("l_partkey"),
+        bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
+      setup(root)
+      val li = graft.sources.Tables.lineitem(spark, d)
+      val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
+      append(li.where($"l_orderkey" <= mid), dir, "b1")
+      sync(root)
+      append(li.where($"l_orderkey" > mid), dir, "b2")
+      delete(graft.sources.Tables.orders(spark, d)
+        .where($"o_orderstatus" === "F")
+        .select($"o_orderkey".as("l_orderkey")), dir, "erase-1")
+      sync(root)
+      s"$root/view"
+    })
 
   /** q173: the DOWNSTREAM MIRROR after an incremental CDC sync — the
     * consumer contract hash-checked end to end. The window carried b2's
@@ -2069,7 +1990,8 @@ object GraftTable {
     * the delete, or double-applied the inserts all hash differently. */
   def q173TableMirror(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    mirrorRead(spark, s"${q173Root(spark, d)}/mirror")
+    mirrorRead(spark, viewLifecycle(spark, d, "mirror")(r =>
+      syncMirror(spark, s"$r/table", s"$r/view")))
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         sum($"l_orderkey").as("key_sum"),
@@ -2087,48 +2009,19 @@ object GraftTable {
       |                    AND o.o_orderstatus = 'F')
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** q176's lifecycle: like q173's, but the CDC consumer is the
-    * AGGREGATE view — baseline sync after b1, then b2 + the erasure
-    * land, then a delta sync whose window carries both inserts and
-    * delete preimages into the signed-merge path (never the
-    * re-baseline). */
-  private def buildAggMirrorLifecycle(spark: SparkSession,
-      d: String): String = {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-aggmirror-").toString
-    val dir = s"$root/table"
-    create(spark, dir, zoneCols = Seq("l_partkey"),
-      bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
-    val keys = Seq("l_returnflag")
-    val sums = Seq("l_orderkey", "l_quantity")
-    append(li.where($"l_orderkey" <= mid), dir, "b1") // commit 2
-    syncAggMirror(spark, dir, s"$root/agg", keys, sums) // baseline at 2
-    append(li.where($"l_orderkey" > mid), dir, "b2") // commit 3
-    delete(graft.sources.Tables.orders(spark, d)
-      .where($"o_orderstatus" === "F")
-      .select($"o_orderkey".as("l_orderkey")), dir, "erase-1") // commit 4
-    syncAggMirror(spark, dir, s"$root/agg", keys, sums) // DELTA (2, 4]
-    root
-  }
-
-  private def q176Root(spark: SparkSession, d: String): String =
-    builtFor.computeIfAbsent("aggmirror:" + d,
-      _ => buildAggMirrorLifecycle(spark, d))
-
   /** q176: the MAINTAINED AGGREGATE VIEW after an incremental CDC
     * sync — materialized-view maintenance hash-checked end to end.
     * The window carried b2's inserts AND the erasure's preimages as
-    * signed deltas, so the oracle is the full-table aggregate minus
-    * the F-order lines: a view that re-baselined, missed the delete
-    * side, or double-applied the inserts all hash differently (and a
-    * group-by re-scan of the table would not be delta-sized — the
-    * merge is one agg-sized outer join). */
+    * signed deltas into the signed-merge path, so the oracle is the
+    * full-table aggregate minus the F-order lines: a view that
+    * re-baselined, missed the delete side, or double-applied the
+    * inserts all hash differently (and a group-by re-scan of the table
+    * would not be delta-sized — the merge is one agg-sized outer join). */
   def q176AggMirror(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    aggMirrorRead(spark, s"${q176Root(spark, d)}/agg")
+    aggMirrorRead(spark, viewLifecycle(spark, d, "aggmirror")(r =>
+      syncAggMirror(spark, s"$r/table", s"$r/view", Seq("l_returnflag"),
+        Seq("l_orderkey", "l_quantity"))))
       .select($"l_returnflag", $"n",
         $"sum_l_orderkey".cast("bigint").as("key_sum"),
         $"sum_l_quantity".cast("double").as("qty"))
@@ -2138,46 +2031,20 @@ object GraftTable {
   /** Same restatement as q173: two consumer contracts, one answer. */
   val q176Sql: String = q173Sql
 
-  /** q177's lifecycle: q176's shape with MIN/MAX columns maintained —
-    * the erasure deletes every F-order line, which removes group
-    * extrema of `l_extendedprice`, so the delta sync exercises the
-    * PER-GROUP REPAIR path (deleted-extremum groups rescanned via the
-    * broadcast semi-join), never a full re-baseline. */
-  private def buildMinMaxLifecycle(spark: SparkSession,
-      d: String): String = {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-minmax-").toString
-    val dir = s"$root/table"
-    create(spark, dir, zoneCols = Seq("l_partkey"),
-      bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
-    val keys = Seq("l_returnflag")
-    val sums = Seq("l_quantity")
-    val mm = Seq("l_extendedprice")
-    append(li.where($"l_orderkey" <= mid), dir, "b1") // commit 2
-    syncAggMirror(spark, dir, s"$root/agg", keys, sums, mm, mm) // baseline
-    append(li.where($"l_orderkey" > mid), dir, "b2") // commit 3
-    delete(graft.sources.Tables.orders(spark, d)
-      .where($"o_orderstatus" === "F")
-      .select($"o_orderkey".as("l_orderkey")), dir, "erase-1") // commit 4
-    syncAggMirror(spark, dir, s"$root/agg", keys, sums, mm, mm) // DELTA
-    root
-  }
-
-  private def q177Root(spark: SparkSession, d: String): String =
-    builtFor.computeIfAbsent("minmax:" + d,
-      _ => buildMinMaxLifecycle(spark, d))
-
   /** q177: the maintained MIN/MAX VIEW after an incremental sync whose
-    * window deleted extremum rows — hash-checked end to end. A view
-    * that kept a deleted extremum (no repair), repaired the wrong
-    * groups, or re-baselined instead of delta-merging all hash
-    * differently against the same full-table-minus-F-lines oracle. */
+    * window deleted extremum rows — the erasure removes group extrema
+    * of `l_extendedprice`, so the delta sync takes the PER-GROUP REPAIR
+    * path (deleted-extremum groups rescanned), never a full
+    * re-baseline. A view that kept a deleted extremum (no repair),
+    * repaired the wrong groups, or re-baselined instead of
+    * delta-merging all hash differently against the same
+    * full-table-minus-F-lines oracle. */
   def q177AggMinMax(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    aggMirrorRead(spark, s"${q177Root(spark, d)}/agg")
+    val mm = Seq("l_extendedprice")
+    aggMirrorRead(spark, viewLifecycle(spark, d, "minmax")(r =>
+      syncAggMirror(spark, s"$r/table", s"$r/view", Seq("l_returnflag"),
+        Seq("l_quantity"), mm, mm)))
       .select($"l_returnflag", $"n",
         $"min_l_extendedprice".cast("double").as("min_price"),
         $"max_l_extendedprice".cast("double").as("max_price"),
@@ -2196,44 +2063,19 @@ object GraftTable {
       |                    AND o.o_orderstatus = 'F')
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** q178's lifecycle: q173's windows, but the consumer is a FILTERED
-    * + PROJECTED mirror (`WHERE l_partkey BETWEEN 100 AND 299`, four
-    * columns) — the delta sync must filter/project b2's inserts and
-    * anti-join the erasure's preimage keys, never re-baseline. */
-  private def buildWhereMirrorLifecycle(spark: SparkSession,
-      d: String): String = {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-wmirror-").toString
-    val dir = s"$root/table"
-    create(spark, dir, zoneCols = Seq("l_partkey"),
-      bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
-    val pred = "l_partkey BETWEEN 100 AND 299"
-    val cols = Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
-    append(li.where($"l_orderkey" <= mid), dir, "b1") // commit 2
-    syncMirrorWhere(spark, dir, s"$root/mirror", pred, cols) // baseline
-    append(li.where($"l_orderkey" > mid), dir, "b2") // commit 3
-    delete(graft.sources.Tables.orders(spark, d)
-      .where($"o_orderstatus" === "F")
-      .select($"o_orderkey".as("l_orderkey")), dir, "erase-1") // commit 4
-    syncMirrorWhere(spark, dir, s"$root/mirror", pred, cols) // DELTA
-    root
-  }
-
-  private def q178Root(spark: SparkSession, d: String): String =
-    builtFor.computeIfAbsent("wmirror:" + d,
-      _ => buildWhereMirrorLifecycle(spark, d))
-
-  /** q178: the FILTERED+PROJECTED mirror after an incremental sync —
-    * the selective-MV consumer hash-checked end to end. The oracle is
-    * the band slice of the table minus the F-order lines: a mirror
-    * that filtered the wrong side, dropped the band on the delta, or
-    * missed the preimage keys all hash differently. */
+  /** q178: the FILTERED+PROJECTED mirror (`WHERE l_partkey BETWEEN 100
+    * AND 299`, four columns) after an incremental sync that
+    * filtered/projected b2's inserts and anti-joined the erasure's
+    * preimage keys — the selective-MV consumer hash-checked end to
+    * end. The oracle is the band slice of the table minus the F-order
+    * lines: a mirror that filtered the wrong side, dropped the band on
+    * the delta, or missed the preimage keys all hash differently. */
   def q178FilteredMirror(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    mirrorRead(spark, s"${q178Root(spark, d)}/mirror")
+    mirrorRead(spark, viewLifecycle(spark, d, "wmirror")(r =>
+      syncMirrorWhere(spark, s"$r/table", s"$r/view",
+        "l_partkey BETWEEN 100 AND 299",
+        Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag"))))
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         sum($"l_orderkey").as("key_sum"),
@@ -2252,50 +2094,24 @@ object GraftTable {
       |                    AND o.o_orderstatus = 'F')
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** q179's lifecycle: q173's windows, but the consumer is a
-    * DIM-ENRICHED mirror (lineitem ⋈ a slim orders dim on the order
-    * key, keeping `o_orderpriority`) — the delta sync must join b2's
-    * inserts against the broadcast dim and anti-join the erasure's
-    * preimage keys, never re-baseline (the dim never moves here; the
-    * dim-moved boundary is spec-pinned separately). */
-  private def buildJoinMirrorLifecycle(spark: SparkSession,
-      d: String): String = {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-jmirror-").toString
-    val dir = s"$root/table"
-    val dimDir = s"$root/dim"
-    create(spark, dir, zoneCols = Seq("l_partkey"),
-      bloomCols = Nil, deleteKeys = Seq("l_orderkey"))
-    create(spark, dimDir, zoneCols = Seq("o_orderkey"))
-    append(graft.sources.Tables.orders(spark, d)
-      .select($"o_orderkey", $"o_orderpriority"), dimDir, "dim1")
-    val li = graft.sources.Tables.lineitem(spark, d)
-    val mid = li.agg(max($"l_orderkey")).head().getLong(0) / 2
-    append(li.where($"l_orderkey" <= mid), dir, "b1") // commit 2
-    syncJoinMirror(spark, dir, dimDir, s"$root/mirror", "l_orderkey",
-      "o_orderkey", Seq("o_orderpriority")) // baseline at 2
-    append(li.where($"l_orderkey" > mid), dir, "b2") // commit 3
-    delete(graft.sources.Tables.orders(spark, d)
-      .where($"o_orderstatus" === "F")
-      .select($"o_orderkey".as("l_orderkey")), dir, "erase-1") // commit 4
-    syncJoinMirror(spark, dir, dimDir, s"$root/mirror", "l_orderkey",
-      "o_orderkey", Seq("o_orderpriority")) // DELTA window (2, 4]
-    root
-  }
-
-  private def q179Root(spark: SparkSession, d: String): String =
-    builtFor.computeIfAbsent("jmirror:" + d,
-      _ => buildJoinMirrorLifecycle(spark, d))
-
-  /** q179: the DIM-ENRICHED mirror after an incremental sync — the
-    * join-view IVM consumer hash-checked end to end. The oracle is the
+  /** q179: the DIM-ENRICHED mirror (lineitem ⋈ a slim orders dim on
+    * the order key, keeping `o_orderpriority`) after an incremental
+    * sync that joined b2's inserts against the broadcast dim and
+    * anti-joined the erasure's preimage keys — the join-view IVM
+    * consumer hash-checked end to end (the dim never moves here; the
+    * dim-moved boundary is spec-pinned separately). The oracle is the
     * lineitem⋈orders join minus the F-order lines: a mirror that
     * re-baselined instead of delta-joining, enriched with the wrong
     * dim rows, or missed the preimage keys all hash differently. */
   def q179JoinMirror(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    mirrorRead(spark, s"${q179Root(spark, d)}/mirror")
+    val view = viewLifecycle(spark, d, "jmirror", setup = { r =>
+      create(spark, s"$r/dim", zoneCols = Seq("o_orderkey"))
+      append(graft.sources.Tables.orders(spark, d)
+        .select($"o_orderkey", $"o_orderpriority"), s"$r/dim", "dim1")
+    })(r => syncJoinMirror(spark, s"$r/table", s"$r/dim", s"$r/view",
+      "l_orderkey", "o_orderkey", Seq("o_orderpriority")))
+    mirrorRead(spark, view)
       .groupBy($"l_returnflag", $"o_orderpriority")
       .agg(count(lit(1)).as("n"),
         sum($"l_orderkey").as("key_sum"),

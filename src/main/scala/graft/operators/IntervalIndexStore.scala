@@ -225,10 +225,12 @@ object IntervalIndexStore {
       minBand: Option[Long])
 
   /** Swaps claim `_swap/s<version>.json`, swept at vacuum. `append`
-    * and `compact` announce their label; `build` (kind `swap`, its name
-    * on disk) and `expire` carry none and announce a nonce. */
+    * and `compact` announce their label; `expire` carries none and
+    * announces a nonce. `build` (kind `swap`, its name on disk) is the
+    * first commit and announces nothing, so a crashed build's slot is
+    * an orphan its replay reclaims. */
   private val commitLog = new CommitLog[Manifest](CommitLog.Swept,
-    Map("swap" -> CommitLog.Nonce, "append" -> CommitLog.Sidecar("append"),
+    Map("swap" -> CommitLog.Never, "append" -> CommitLog.Sidecar("append"),
       "compact" -> CommitLog.Sidecar("compact"),
       "expire" -> CommitLog.Nonce),
     n => Manifest(

@@ -187,6 +187,86 @@ class GraftTableViewLayoutSpec extends SparkSpec {
     assert(e3.getMessage.contains("redefine"))
   }
 
+  test("the family/definition rule, cell by cell: every sync against every occupant pointer") {
+    import spark.implicits._
+    val root = tmp()
+    val dir = s"$root/t"
+    val dimDir = s"$root/dim"
+    create(spark, dir, zoneCols = Seq("l_partkey"),
+      deleteKeys = Seq("l_orderkey"))
+    create(spark, dimDir, zoneCols = Seq("o_orderkey"))
+    append(Tables.orders(spark, sfDir)
+      .select($"o_orderkey", $"o_orderpriority"), dimDir, "dim1")
+    append(li.limit(500), dir, "b1") // commit 2
+    val pred = "l_partkey BETWEEN 100 AND 299"
+    val cols = Seq("l_orderkey", "l_partkey", "l_quantity")
+    val callers: Seq[(String, String => (Long, Long))] = Seq(
+      "syncMirror" -> (v => syncMirror(spark, dir, v)),
+      "syncMirrorWhere" -> (v => syncMirrorWhere(spark, dir, v, pred, cols)),
+      "syncJoinMirror" -> (v => syncJoinMirror(spark, dir, dimDir, v,
+        "l_orderkey", "o_orderkey", Seq("o_orderpriority"))),
+      "syncAggMirror" -> (v => syncAggMirror(spark, dir, v,
+        Seq("l_returnflag"), Seq("l_quantity"))))
+    // one occupant per family, each written by its own sync at commit 2
+    callers.zip(Seq("mirror", "where", "join", "agg")).foreach {
+      case ((_, sync), family) => sync(s"$root/$family")
+    }
+    // pre-bucketed pointers: without a definition, and with where's
+    StoreIO.writeString(spark, s"$root/legacy/_sync.json",
+      """{"commit":2}""", atomic = true)
+    StoreIO.writeString(spark, s"$root/legacy-where/_sync.json",
+      s"""{"commit":2,"pred":"$pred",""" +
+        s""""cols":[${cols.map(c => s""""$c"""").mkString(",")}]}""",
+      atomic = true)
+    val occupants =
+      Seq("mirror", "where", "join", "agg", "legacy", "legacy-where")
+    val accepts = Map(
+      "syncMirror" -> Set("mirror", "legacy"),
+      "syncMirrorWhere" -> Set("where", "legacy-where"),
+      "syncJoinMirror" -> Set("join"),
+      "syncAggMirror" -> Set("agg", "legacy"))
+    // every pointer is at the live commit, so an accepted sync is a
+    // no-op and a refused one throws before writing: the cells share
+    // their occupant dirs without disturbing each other
+    val wrong = for {
+      (caller, sync) <- callers
+      occ <- occupants
+      accepted = try { sync(s"$root/$occ") == ((2L, 2L)) }
+        catch { case _: IllegalArgumentException => false }
+      if accepted != accepts(caller).contains(occ)
+    } yield s"$caller on '$occ': accepted=$accepted"
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
+  test("keyless tables with a map column: row-view syncs bucket by the hashable columns") {
+    import spark.implicits._
+    val root = tmp()
+    val dir = s"$root/t"
+    create(spark, dir, zoneCols = Seq("k")) // no delete keys
+    def batch(lo: Long, hi: Long): DataFrame = spark.range(lo, hi)
+      .select($"id".as("k"), map(lit("a"), $"id" * 2).as("m"),
+        ($"id" % 7).as("x"))
+    val pred = "k % 3 = 0"
+    val cols = Seq("k", "m")
+    def syncBoth(): Unit = {
+      syncMirrorWhere(spark, dir, s"$root/where", pred, cols)
+      syncMirror(spark, dir, s"$root/plain")
+    }
+    append(batch(0L, 200L), dir, "b1") // commit 2
+    syncBoth() // baselines
+    append(batch(200L, 400L), dir, "b2") // commit 3
+    syncBoth() // insert-only deltas: each bucket gains a segment
+    Seq("where", "plain").foreach { v =>
+      assert(readViewState(spark, s"$root/$v/_sync.json").get.buckets
+        .values.exists(_.size == 2), s"the $v sync never took the delta path")
+    }
+    assert(rows(mirrorRead(spark, s"$root/where")) ==
+      rows(read(spark, dir).where(expr(pred)).select(cols.map(col): _*)),
+      "keyless filtered mirror diverged from the filtered table")
+    assert(rows(mirrorRead(spark, s"$root/plain")) == rows(read(spark, dir)),
+      "keyless mirror diverged from the table")
+  }
+
   test("a legacy flat pointer reads unchanged; the next sync migrates it to buckets") {
     import spark.implicits._
     val root = tmp()

@@ -519,6 +519,61 @@ class StoreConcurrencySpec extends SparkSpec {
       "replayed init diverged from the one-pass model")
   }
 
+  /** The crash window of a swap-slot store's first commit, as a
+    * nonce-announcing first commit left it: slot s1 claimed with a
+    * nonce, the nonce sidecar standing, `_live.json` never written. */
+  private def crashedFirstSwap(dir: String, kind: String): Unit = {
+    val slot = java.nio.file.Paths.get(s"$dir/_swap/s1.json")
+    java.nio.file.Files.createDirectories(slot.getParent)
+    java.nio.file.Files.writeString(slot,
+      s"""{"kind":"$kind","label":"","nonce":"nonce-dead"}""")
+    StoreIO.writePending(spark, dir, kind, "nonce-dead")
+    assert(!new java.io.File(s"$dir/_live.json").exists())
+  }
+
+  test("DeleteStore: a crashed init (nonce slot s1 standing, no pointer) converges on replay") {
+    import spark.implicits._
+    val del = tmp("del-init-crash-")
+    crashedFirstSwap(del, "init")
+    DeleteStore.init(spark, del, Seq("l_orderkey"))
+    assert(DeleteStore.manifest(spark, del).version == 1L,
+      "replayed DeleteStore.init did not swap the pointer to version 1")
+    DeleteStore.append(liTable.select($"l_orderkey").distinct()
+      .orderBy($"l_orderkey").limit(3), del, "d1")
+    assert(DeleteStore.manifest(spark, del).live == Seq("d1"))
+  }
+
+  test("IntervalIndexStore: a crashed build (nonce slot s1 standing, no pointer) converges on replay") {
+    val ivx = tmp("ivx-build-crash-")
+    crashedFirstSwap(ivx, "swap")
+    IntervalIndexStore.build(views, ivx, "user_id", "w_start", "w_end",
+      bandSeconds = 3L * 86400L)
+    assert(IntervalIndexStore.manifest(spark, ivx).version == 1L,
+      "replayed IntervalIndexStore.build did not swap the pointer to 1")
+    assert(IntervalIndexStore.lookup(spark, ivx, purchases, "ts")
+      .count() > 0L, "the replayed build's index answers nothing")
+  }
+
+  test("GraftTable.create with deleteKeys converges over a crashed DeleteStore.init") {
+    import spark.implicits._
+    val dir = tmp("gt-create-crash-")
+    crashedFirstSwap(s"$dir/del", "init")
+    GraftTable.create(spark, dir, zoneCols = Seq("l_partkey"),
+      deleteKeys = Seq("l_orderkey"))
+    assert(GraftTable.manifest(spark, dir).commit == 1L,
+      "replayed create did not swap the table pointer to commit 1")
+    assert(DeleteStore.manifest(spark, s"$dir/del").version == 1L)
+    val li = liTable.where($"l_orderkey" <= 200L)
+    GraftTable.append(li, dir, "b1")
+    val victims = li.select($"l_orderkey").distinct()
+      .orderBy($"l_orderkey").limit(3)
+    GraftTable.delete(victims, dir, "e1")
+    assert(rows(GraftTable.read(spark, dir)) ==
+      rows(li.join(victims, Seq("l_orderkey"), "left_anti")
+        .select(GraftTable.read(spark, dir).columns.map(col): _*)),
+      "the converged table diverged from append minus deletes")
+  }
+
   test("an occupant of unknown kind aborts both log-backed stores; the pointer stays") {
     import spark.implicits._
     def bogus(dir: String, c: Long, body: String): Unit = {

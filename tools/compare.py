@@ -6,7 +6,9 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (Spark output) and runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 raw tables in <sfDir>. Compares schemas (column-name sets) and value
-multisets (rows sorted, columns sorted by name).
+multisets (rows sorted, columns sorted by name). An oracle entry with no
+output dir (its query threw inside Verify) is MISSING, and counts as a
+failure.
 """
 import json
 import sys
@@ -33,7 +35,11 @@ def main():
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.loads(Path(out_dir, "oracle_sql.json").read_text())
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = n_rows_only = n_missing = 0
+    for name in sorted(oracles):
+        if not Path(out_dir, name).is_dir():
+            n_missing += 1
+            print(f"MISSING    {name}")
     for d in sorted(Path(out_dir).iterdir()):
         if not d.is_dir():
             continue
@@ -70,8 +76,9 @@ def main():
             else:
                 if len(g) != len(e):
                     print(f"  row count differs; spark extra={g[len(e):len(e)+2]} duck extra={e[len(g):len(g)+2]}")
-    print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    sys.exit(1 if n_fail else 0)
+    print(f"\n== {n_pass} pass, {n_fail} fail, {n_missing} missing, "
+          f"{n_rows_only} rows-only")
+    sys.exit(1 if n_fail or n_missing else 0)
 
 
 if __name__ == "__main__":
