@@ -208,8 +208,12 @@ private[operators] final class CommitLog[M](
     * what it must and returns its result plus which (kind, label)
     * sidecars provably committed: those are cleared at the end, or a
     * crash between a commit and its un-announce would shield the
-    * eventually superseded directory forever. Swap slots at or below
-    * the pointer are spent claims and are swept last. */
+    * eventually superseded directory forever. A nonce sidecar of a
+    * [[CommitLog.Never]] kind is cleared too: no writer of such a kind
+    * announces a nonce, so it is a leftover of a crash from when the
+    * kind was a [[CommitLog.Nonce]] kind and shields no live claim.
+    * Swap slots at or below the pointer are spent claims and are swept
+    * last. */
   def vacuum[R](spark: SparkSession, dir: String, roots: Seq[String])(
       sweep: Vacuum[M] => (R, (String, String) => Boolean)): R = {
     val listed = roots.map(subdirs(spark, _))
@@ -218,7 +222,9 @@ private[operators] final class CommitLog[M](
       if (layout == Retained) list(spark, dir).map(snapshot(spark, dir, _))
       else Nil
     val (out, committed) = sweep(Vacuum(listed, pending, live, retained))
-    StoreIO.clearCommittedPending(spark, dir, pending, committed)
+    StoreIO.clearCommittedPending(spark, dir, pending, (k, l) =>
+      committed(k, l) ||
+        (l.startsWith("nonce-") && announce.get(k).contains(Never)))
     if (layout == Swept)
       list(spark, dir).filter(_ <= number(live)).foreach { s =>
         val (fs, p) = hadoopFs(spark, slotPath(dir, s))

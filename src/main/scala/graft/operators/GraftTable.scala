@@ -1030,7 +1030,8 @@ object GraftTable {
     val n = StoreIO.parseJson(readString(spark, syncPath))
     val buckets: Map[Int, Seq[Long]] = Option(n.get("buckets"))
       .filter(_.isObject).map { b =>
-        val it = b.fields(); val out = Map.newBuilder[Int, Seq[Long]]
+        val it = b.properties().iterator()
+        val out = Map.newBuilder[Int, Seq[Long]]
         while (it.hasNext) {
           val e = it.next()
           val v = e.getValue

@@ -320,7 +320,7 @@ object SkippingIndex {
     * they cannot widen the file set. */
   private def literalHashes(spark: SparkSession, tablePath: String,
       column: String, values: Seq[Any]): Option[Seq[Long]] = {
-    val dt = spark.read.parquet(tablePath).schema
+    val dt = graft.sources.Tables.schemaOf(spark, tablePath)
       .find(_.name == column)
       .getOrElse(throw new IllegalArgumentException(
         s"column '$column' not in $tablePath")).dataType

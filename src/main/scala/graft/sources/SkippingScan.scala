@@ -43,7 +43,7 @@ object SkippingScan extends PredicateHelper {
     * [[SkippingIndex.build]]t. */
   def table(spark: SparkSession, indexDir: String): DataFrame = {
     val m = SkippingIndex.meta(spark, indexDir)
-    tableWith(spark, indexDir, spark.read.parquet(m.table).schema,
+    tableWith(spark, indexDir, Tables.schemaOf(spark, m.table),
       candidates = None)
   }
 

@@ -1,23 +1,74 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TESTDATA parquet tables.
   *
   * All queries take an `sfDir` (e.g. /root/testdata/sf0.01) and read the
-  * single-file parquet tables inside. Reads are plain `spark.read.parquet`
-  * so Catalyst's parquet source handles column pruning + filter pushdown;
-  * at 100 TB these would be partitioned/ bucketed external tables, but the
-  * query code is identical — only the path/catalog binding changes.
+  * single-file parquet tables inside. Each read is
+  * `spark.read.schema(s).parquet(path)` with `s` from [[schemaOf]], so
+  * Catalyst's parquet source still handles column pruning + filter
+  * pushdown and every load is a fresh relation with fresh attribute
+  * ids, but Spark's schema inference (a one-task footer-reading job)
+  * runs once per table instead of once per load — the way a catalog
+  * serves a table's schema from metadata. At 100 TB these would be
+  * partitioned/bucketed external tables, but the query code is
+  * identical — only the path/catalog binding changes.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  // Only the inferred StructType is memoized (16 entries, LRU), never a
+  // DataFrame: a shared frame would share attribute ids, and self-joins
+  // plus the plan-keyed caches need a fresh relation per load.
+  private val schemas =
+    new graft.util.PlanCache[(SparkSession, String, Seq[(String, Long, Long)],
+      Seq[(String, String)]), StructType](
+      maxEntries = 16, onEvict = _ => (), name = "sourceSchemas")
+
+  /** The schema `spark.read.parquet(path)` infers, memoized on (session,
+    * path, the sorted (file, length, mtime) of its leaf files, the
+    * session's parquet confs). A rewritten or regrown table therefore
+    * re-infers, and so does a read under a different parquet conf
+    * (`Tables.events` depends on `spark.sql.legacy.parquet.nanosAsLong`
+    * to resolve a nanos `ts` as long). Not detected: a rewrite that
+    * keeps every file's length within one mtime tick of the
+    * filesystem. A missing path is not memoized — the inference fails
+    * as before. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val stamps =
+      try leafFiles(spark, path)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+    schemas.getOrElseUpdate((spark, path, stamps, confs))(
+      spark.read.parquet(path).schema)
+  }
+
+  /** Every file under `path` (the path itself if it is a file). */
+  private def leafFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(root)
+    if (st.isFile) Seq(st)
+    else {
+      val it = fs.listFiles(root, true)
+      val out = Seq.newBuilder[FileStatus]
+      while (it.hasNext) out += it.next()
+      out.result()
+    }
+  }
 
   /** A table's row count from its parquet FOOTERS — driver-side, no
     * Spark job. For config decisions that only need n (e.g. q24's IVF
@@ -28,27 +79,14 @@ object Tables {
     * directory of part files. */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    var n = 0L
-    val statuses: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (fs.getFileStatus(root).isFile) Seq(fs.getFileStatus(root))
-      else {
-        val it = fs.listFiles(root, true)
-        val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet") ||
-              f.getPath.getName.startsWith("part-")) out += f
-        }
-        out.result()
-      }
-    statuses.foreach { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try n += r.getRecordCount finally r.close()
-    }
-    n
+    leafFiles(spark, s"$sfDir/$name.parquet")
+      .filter(f => f.getPath.getName.endsWith(".parquet") ||
+        f.getPath.getName.startsWith("part-"))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

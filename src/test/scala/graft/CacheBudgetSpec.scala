@@ -52,8 +52,11 @@ class CacheBudgetSpec extends SparkSpec {
     // r18 bump (136 -> 140): audio frequency buckets (4) — the q110
     // WAV-decode fingerprint, two ints per audio asset, joining the
     // frame-signature family's materialize-once discipline.
+    // Source-schema bump (140 -> 156): `Tables.schemaOf`'s memo (16)
+    // holds StructTypes, no frames and no storage; 16 holds one
+    // scale dir's ten source tables with room to spare.
     val budget = graft.util.PlanCache.totalBudget
-    assert(budget > 0 && budget <= 140,
+    assert(budget > 0 && budget <= 156,
       s"registry budget $budget drifted — a new cache with a huge " +
         "maxEntries would quietly raise worst-case pinned storage")
     // Pinned storage follows the entry bound: every persistent RDD in

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +11,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
   val sfDirMid = "/root/testdata/sf0.01"
+
+  /** Spark jobs started while `f` runs. DataFrame construction is
+    * synchronous (an inference job blocks the builder), and the
+    * listener bus is drained before counting, so none is missed. */
+  def jobsDuring(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -26,22 +25,6 @@ class GraftTableSchemaPinSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("gt-schema-").toString
 
   private def li = Tables.lineitem(spark, sfDir)
-
-  /** Count jobs started while `f` constructs its DataFrames. The
-    * construction path is synchronous (an inference job blocks the
-    * builder), so a post-wait only covers listener-bus lag. */
-  private def jobsDuring(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; Thread.sleep(800) } // bus-lag grace for the ==0 case
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   private def stripSchema(dir: String): Unit = {
     val p = java.nio.file.Paths.get(s"$dir/_live.json")

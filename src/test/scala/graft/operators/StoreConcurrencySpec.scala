@@ -477,6 +477,11 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(StoreIO.pendingLabels(spark, dir).getOrElse("retire", Set.empty)
       == Set("nonce-zz"),
       "the aborted claimant leaked its own nonce sidecar")
+    // vacuum clears only nonce sidecars of never-announcing kinds: a
+    // retire's still shields its claim
+    DeleteStore.vacuum(spark, dir)
+    assert(StoreIO.pendingExists(spark, dir, "retire", "nonce-zz"),
+      "vacuum cleared a live retire's nonce announcement")
     // the occupant's writer dies for good: the documented recovery is
     // clearing its announcement (exactly the labeled-op recovery in
     // the specs above) — the next retire resolves the slot as a dead
@@ -531,6 +536,10 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/_live.json").exists())
   }
 
+  private def nonceSidecars(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(n => n.startsWith("_pending_") && n.contains("_nonce-"))
+
   test("DeleteStore: a crashed init (nonce slot s1 standing, no pointer) converges on replay") {
     import spark.implicits._
     val del = tmp("del-init-crash-")
@@ -541,6 +550,9 @@ class StoreConcurrencySpec extends SparkSpec {
     DeleteStore.append(liTable.select($"l_orderkey").distinct()
       .orderBy($"l_orderkey").limit(3), del, "d1")
     assert(DeleteStore.manifest(spark, del).live == Seq("d1"))
+    DeleteStore.vacuum(spark, del)
+    assert(nonceSidecars(del).isEmpty,
+      s"vacuum left the crashed init's nonce sidecar: ${nonceSidecars(del)}")
   }
 
   test("IntervalIndexStore: a crashed build (nonce slot s1 standing, no pointer) converges on replay") {
@@ -552,6 +564,9 @@ class StoreConcurrencySpec extends SparkSpec {
       "replayed IntervalIndexStore.build did not swap the pointer to 1")
     assert(IntervalIndexStore.lookup(spark, ivx, purchases, "ts")
       .count() > 0L, "the replayed build's index answers nothing")
+    IntervalIndexStore.vacuum(spark, ivx)
+    assert(nonceSidecars(ivx).isEmpty,
+      s"vacuum left the crashed build's nonce sidecar: ${nonceSidecars(ivx)}")
   }
 
   test("GraftTable.create with deleteKeys converges over a crashed DeleteStore.init") {
