@@ -1,16 +1,23 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{LongNode, ObjectNode, TextNode}
+import graft.operators.StoreIO
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.defaultCores
     // Optional comma-separated query filter (scale probes, local
-    // iteration). A filtered run never writes or diffs the plan
-    // baseline — a partial plan set must not masquerade as the suite's.
+    // iteration); an unregistered name fails the run. A filtered run
+    // never writes or diffs a baseline — a partial set must not
+    // masquerade as the suite's.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val benchQueries = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val benchQueries = SparkEntry.select(only)
     val spark = Sessions.local("graft-bench", cpus)
 
     // Optimized-plan fingerprint per query, taken on the fresh session:
@@ -101,6 +108,37 @@ object Bench {
       s""""$n":{"tasks":$t,"shuffle_bytes":$s,"rows":$r}"""
     }.mkString("{", ",", "}")
 
+    // Both regression gates keep a per-SF baseline file named from the
+    // sfDir BASENAME. Two distinct dirs with equal basenames would
+    // silently diff against each other's baselines, so each file is
+    // stamped with the full path (and any other input its entries
+    // depend on) and a mismatched stamp counts as no baseline: refresh,
+    // don't cross-compare. A stamp the file lacks passes (legacy
+    // unstamped baselines). SPARK_GRAFT_UPDATE_PLANS, a missing or
+    // unparsable file, or a mismatch rewrites the file (stamps first,
+    // then `entries`) and diffs nothing. Baseline read/write goes
+    // through the same Jackson helpers as the store manifests
+    // (graft.operators.StoreIO), no regex JSON.
+    val sfStamp = "__sfdir__" -> TextNode.valueOf(sfDir)
+    def baselineGate(prefix: String, stamps: Seq[(String, JsonNode)])(
+        entries: ObjectNode => Unit)(diff: JsonNode => Seq[String]): Seq[String] =
+      if (only.isDefined) Seq.empty
+      else {
+        val path = Paths.get(s"$prefix.${new java.io.File(sfDir).getName}.json")
+        val node =
+          if (Files.exists(path)) Try(StoreIO.parseJson(Files.readString(path))).toOption
+          else None
+        val stamped = node.exists(n => stamps.forall { case (k, v) =>
+          Option(n.get(k)).forall(_.asText == v.asText) })
+        if (sys.env.contains("SPARK_GRAFT_UPDATE_PLANS") || !stamped) {
+          Files.writeString(path, StoreIO.renderJson { o =>
+            stamps.foreach { case (k, v) => o.set[JsonNode](k, v) }
+            entries(o)
+          })
+          Seq.empty
+        } else diff(node.get)
+      }
+
     // Stable-metrics regression gate, the plans-baseline twin: diff
     // this run's {tasks, shuffle_bytes, rows} against the committed
     // per-SF baseline. Rows are exact (a row-count move is a semantics
@@ -108,69 +146,42 @@ object Bench {
     // coalescing and compression can wiggle a partition count/byte
     // total without a plan change). SPARK_GRAFT_UPDATE_PLANS refreshes
     // both baselines — one knob, one intent ("the plans moved on
-    // purpose").
-    val stableBaselinePath = java.nio.file.Paths.get(
-      s"STABLE_BASELINE.${new java.io.File(sfDir).getName}.json")
-    val stableDiff: Seq[String] =
-      if (only.isDefined) Seq.empty // filtered probe: no baseline I/O
-      else {
-        val node =
-          if (java.nio.file.Files.exists(stableBaselinePath))
-            scala.util.Try(graft.operators.StoreIO.parseJson(
-              java.nio.file.Files.readString(stableBaselinePath))).toOption
+    // purpose"). Tasks and map-side shuffle output scale with the
+    // session's core count (leaf-split sizing divides by
+    // defaultParallelism), so a baseline written on an 8-core host diffs
+    // ~everything on a 32-core one with rows exact (observed r16→r17:
+    // 125 entries, all tasks/shuffle, zero rows): the cores are stamped.
+    val stableDiff: Seq[String] = baselineGate("STABLE_BASELINE",
+        Seq(sfStamp, "__cores__" -> LongNode.valueOf(cpus.toLong))) { o =>
+      stable.toSeq.filter(_._2._1 >= 0).sortBy(_._1).foreach { case (n0, (t, s, r)) =>
+        val e = o.putObject(n0)
+        e.put("tasks", t); e.put("shuffle_bytes", s); e.put("rows", r); ()
+      }
+    } { base =>
+      def tol(a: Long, b: Long, pct: Double): Boolean =
+        math.abs(a - b) > math.max(2.0, pct * math.max(a, b))
+      stable.toSeq.sortBy(_._1).flatMap { case (n0, (t, s, r)) =>
+        Option(base.get(n0)).filter(_.isObject).flatMap { e =>
+          val bt = e.get("tasks").asLong
+          val bs = e.get("shuffle_bytes").asLong
+          val br = e.get("rows").asLong
+          // a query that ERRORED this run (measured as -1) against
+          // a healthy baseline is a crash regression — it must show
+          // in the diff even when the plan digest never moved
+          // (ADVICE r16: the old skip-negatives rule made it
+          // invisible to exactly the gate that exists to catch it)
+          if (r < 0 && br >= 0)
+            Some(s"$n0: ERROR (baseline rows=$br)")
+          else if (r >= 0 && br >= 0 && r != br)
+            Some(s"$n0: rows $br -> $r")
+          else if (t >= 0 && tol(t, bt, 0.10))
+            Some(s"$n0: tasks $bt -> $t")
+          else if (s >= 0 && tol(s, bs, 0.05))
+            Some(s"$n0: shuffle_bytes $bs -> $s")
           else None
-        val matchesDir = node.exists(n =>
-          graft.operators.StoreIO.jStr(n, "__sfdir__").forall(_ == sfDir))
-        // tasks and map-side shuffle output scale with the session's
-        // core count (leaf-split sizing divides by defaultParallelism),
-        // so a baseline written on an 8-core host diffs ~everything on
-        // a 32-core one with rows exact (observed r16→r17: 125 entries,
-        // all tasks/shuffle, zero rows). Stamp the cores and treat a
-        // mismatch as no-baseline — refresh, don't cry wolf.
-        val matchesCores = node.exists(n =>
-          graft.operators.StoreIO.jLong(n, "__cores__")
-            .forall(_.toString == cpus))
-        if (sys.env.contains("SPARK_GRAFT_UPDATE_PLANS") ||
-            node.isEmpty || !matchesDir || !matchesCores) {
-          java.nio.file.Files.writeString(stableBaselinePath,
-            graft.operators.StoreIO.renderJson { o =>
-              o.put("__sfdir__", sfDir)
-              o.put("__cores__", cpus.toLong)
-              stable.toSeq.filter(_._2._1 >= 0).sortBy(_._1).foreach {
-                case (n0, (t, s, r)) =>
-                  val e = o.putObject(n0)
-                  e.put("tasks", t); e.put("shuffle_bytes", s)
-                  e.put("rows", r); ()
-              }
-            })
-          Seq.empty
-        } else {
-          val base = node.get
-          def tol(a: Long, b: Long, pct: Double): Boolean =
-            math.abs(a - b) > math.max(2.0, pct * math.max(a, b))
-          stable.toSeq.sortBy(_._1).flatMap { case (n0, (t, s, r)) =>
-            Option(base.get(n0)).filter(_.isObject).flatMap { e =>
-              val bt = e.get("tasks").asLong
-              val bs = e.get("shuffle_bytes").asLong
-              val br = e.get("rows").asLong
-              // a query that ERRORED this run (measured as -1) against
-              // a healthy baseline is a crash regression — it must show
-              // in the diff even when the plan digest never moved
-              // (ADVICE r16: the old skip-negatives rule made it
-              // invisible to exactly the gate that exists to catch it)
-              if (r < 0 && br >= 0)
-                Some(s"$n0: ERROR (baseline rows=$br)")
-              else if (r >= 0 && br >= 0 && r != br)
-                Some(s"$n0: rows $br -> $r")
-              else if (t >= 0 && tol(t, bt, 0.10))
-                Some(s"$n0: tasks $bt -> $t")
-              else if (s >= 0 && tol(s, bs, 0.05))
-                Some(s"$n0: shuffle_bytes $bs -> $s")
-              else None
-            }
-          }
         }
       }
+    }
     val stableDiffJson = stableDiff.map(s => "\"" + s + "\"")
       .mkString("[", ",", "]")
     def fmt(entries: Seq[(String, Double)]): String = entries
@@ -200,8 +211,6 @@ object Bench {
     // are PER-SF: the schema-adaptive sources (Tables.events' dual
     // timestamp handling) can legitimately give different plan shapes
     // per dataset generation, so a cross-sf diff could cry wolf.
-    val baselinePath = java.nio.file.Paths.get(
-      s"PLANS_BASELINE.${new java.io.File(sfDir).getName}.json")
     // A query that fails to even COMPILE a plan digests to "error".
     // That is a defect, never a baseline: writing it would make a
     // permanently-broken query read as a stable plan forever after.
@@ -209,57 +218,25 @@ object Bench {
     // plan_diff unconditionally, baseline or not.
     val errored = plans.filter(_._2 == "error").keys.toSeq.sorted
     val errorDiff = errored.map(n => s"$n: PLAN ERROR")
-    // The baseline filename keys on the sfDir BASENAME; two distinct
-    // dirs with equal basenames would silently diff against each
-    // other's plans. Stamp the full path inside the file and treat a
-    // mismatch as no-baseline (refresh, don't cross-compare). Baseline
-    // read/write goes through the same Jackson helpers as the store
-    // manifests (graft.operators.StoreIO) — no regex JSON anywhere.
-    def stamped(entries: Seq[(String, String)]): String =
-      graft.operators.StoreIO.renderJson { o =>
-        o.put("__sfdir__", sfDir)
-        entries.foreach { case (k, v) => o.put(k, v) }
-        ()
+    val planDiff: Seq[String] = errorDiff ++ baselineGate("PLANS_BASELINE", Seq(sfStamp)) { o =>
+      plans.toSeq.filter(_._2 != "error").sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
+    } { base =>
+      val baseMap = base.properties().asScala.collect {
+        case e if e.getKey != "__sfdir__" && e.getValue.isTextual =>
+          e.getKey -> e.getValue.asText
+      }.toMap
+      // "error" rows are already reported above; exclude them here so
+      // a broken query shows once as PLAN ERROR, not also as a hash
+      // mismatch against whatever baseline it had when healthy.
+      (baseMap.keySet ++ plans.keySet -- errored).toSeq.sorted.flatMap { n =>
+        (baseMap.get(n), plans.get(n)) match {
+          case (Some(a), Some(b)) if a != b => Some(s"$n: $a -> $b")
+          case (None, Some(_)) => Some(s"$n: NEW")
+          case (Some(_), None) => Some(s"$n: REMOVED")
+          case _ => None
+        }
       }
-    val baseNode =
-      if (java.nio.file.Files.exists(baselinePath))
-        scala.util.Try(graft.operators.StoreIO.parseJson(
-          java.nio.file.Files.readString(baselinePath))).toOption
-      else None
-    val baseMatchesDir = baseNode.exists(n =>
-      // legacy unstamped baselines pass
-      graft.operators.StoreIO.jStr(n, "__sfdir__").forall(_ == sfDir))
-    val planDiff: Seq[String] = errorDiff ++ (
-      if (only.isDefined) Seq.empty // filtered probe: no baseline I/O
-      else if (sys.env.contains("SPARK_GRAFT_UPDATE_PLANS") ||
-          baseNode.isEmpty || !baseMatchesDir) {
-        java.nio.file.Files.writeString(baselinePath,
-          stamped(plans.toSeq.filter(_._2 != "error").sortBy(_._1)))
-        Seq.empty
-      } else {
-        val base = baseNode.get
-        val baseMap = {
-          val it = base.fields()
-          val b = Map.newBuilder[String, String]
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getKey != "__sfdir__" && e.getValue.isTextual)
-              b += (e.getKey -> e.getValue.asText)
-          }
-          b.result()
-        }
-        // "error" rows are already reported above; exclude them here so
-        // a broken query shows once as PLAN ERROR, not also as a hash
-        // mismatch against whatever baseline it had when healthy.
-        (baseMap.keySet ++ plans.keySet -- errored).toSeq.sorted.flatMap { n =>
-          (baseMap.get(n), plans.get(n)) match {
-            case (Some(a), Some(b)) if a != b => Some(s"$n: $a -> $b")
-            case (None, Some(_)) => Some(s"$n: NEW")
-            case (Some(_), None) => Some(s"$n: REMOVED")
-            case _ => None
-          }
-        }
-      })
+    }
     val planDiffJson = planDiff.map(s => "\"" + s + "\"").mkString("[", ",", "]")
 
     val artifact =

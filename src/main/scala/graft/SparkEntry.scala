@@ -1,15 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.multimodal.Multimodal
+import graft.operators._
 import graft.queries._
+import graft.sources.SkippingScan
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` maps every implemented operator from SURVEY.md §2 (plus the
-  * training-data-pipeline operators) to a DataFrame program over the
-  * TESTDATA tables; `oracleSql` holds the DuckDB-equivalent SQL for each
-  * oracle-checkable query. Non-SQL-expressible ops (hash-seeded sketches)
-  * carry no oracle → rows-only check + ScalaTest invariants.
+/** The query registry: every registered query, by name, with its builder
+  * (a DataFrame program over the TESTDATA tables, covering SURVEY.md §2
+  * plus the training-data-pipeline operators) and the DuckDB SQL that
+  * checks its result. Every query has an oracle; `graft.Verify` dumps
+  * both sides and `tools/compare.py` compares them.
   */
 object SparkEntry {
 
@@ -19,398 +20,260 @@ object SparkEntry {
 
   type Q = (SparkSession, String) => DataFrame
 
-  def queries: Map[String, Q] = Map[String, Q](
-    "q1_agg"          -> (Relational.q1Agg _),
-    "q2_drilldown"    -> (Relational.q2Drilldown _),
-    "q3_antijoin"     -> (Relational.q3AntiJoin _),
-    "q4_files_browse" -> (Relational.q4FilesBrowse _),
-    "q5_latest_per_key" -> (Relational.q5LatestPerKey _),
-    "q6_page"         -> (Relational.q6Page _),
-    "q7_join_agg"     -> (Relational.q7JoinAgg _),
-    "q8_setops"       -> (Relational.q8SetOps _),
-    "q9_predicates"   -> (Relational.q9Predicates _),
-    "q10_rollup"      -> (Relational.q10Rollup _),
-    "q11_partition_stats"     -> (Metadata.q11PartitionStats _),
-    "q12_table_summary"       -> (Metadata.q12TableSummary _),
-    "q13_files_browse"        -> (Metadata.q13FilesBrowse _),
-    "q14_missing_files"       -> (Metadata.q14MissingFiles _),
-    "q15_optimize_candidates" -> (Metadata.q15OptimizeCandidates _),
-    "q16_s3_parse"            -> (Metadata.q16S3Parse _),
-    "q17_claim_oldest"        -> (Metadata.q17ClaimOldest _),
-    "q20_dedup_exact"         -> (TrainingData.q20DedupExact _),
-    "q21_ngram_jaccard"       -> (TrainingData.q21NgramJaccard _),
-    "q22_minhash_lsh"         -> (TrainingData.q22MinhashLsh _),
-    "q23_simhash_pairs"       -> (TrainingData.q23SimhashPairs _),
-    "q24_embedding_neardup"   -> (TrainingData.q24EmbeddingNearDup _),
-    "q25_ann_topk"            -> (TrainingData.q25AnnTopK _),
-    "q26_ann_lsh"             -> (TrainingData.q26AnnLsh _),
-    "q27_token_stats"         -> (TrainingData.q27TokenStats _),
-    "q28_quality"             -> (TrainingData.q28Quality _),
-    "q29_langid"              -> (TrainingData.q29LangId _),
-    "q30_fingerprint"         -> (TrainingData.q30Fingerprint _),
-    "q31_ann_ivf"             -> (TrainingData.q31AnnIvf _),
-    "q32_windowed_counts"     -> (Streams.q32WindowedCounts _),
-    "q33_sessions"            -> (Streams.q33Sessions _),
-    "q34_multimodal_summary"  -> (Streams.q34MultimodalSummary _),
-    "q35_outer_join"          -> (Relational2.q35OuterJoin _),
-    "q36_semi_join"           -> (Relational2.q36SemiJoin _),
-    "q37_union"               -> (Relational2.q37Union _),
-    "q38_correlated_avg"      -> (Relational2.q38CorrelatedAvg _),
-    "q39_strings"             -> (Relational2.q39Strings _),
-    "q40_dedup_clusters"      -> (TrainingData.q40DedupClusters _),
-    "q41_snapshot_files"      -> (Metadata.q41SnapshotFiles _),
-    "q42_profile"             -> (graft.operators.Profile.q42Profile _),
-    "q43_json_path"           -> (Metadata.q43JsonPath _),
-    "q44_array_agg"           -> (Relational3.q44ArrayAgg _),
-    "q45_cube"                -> (Relational3.q45Cube _),
-    "q46_percentiles"         -> (Relational3.q46Percentiles _),
-    "q47_dedup_clusters_lsh"  -> (TrainingData.q47DedupClustersLsh _),
-    "q48_stratified_sample"   -> (graft.operators.Sampling.q48StratifiedSample _),
-    "q49_decontaminate"       -> (graft.operators.Decontaminate.q49Decontaminate _),
-    "q50_sequence_packing"    -> (graft.operators.Packing.q50SequencePacking _),
-    "q51_repetition"          -> (graft.operators.TextAnalysis.repetitionMetrics _),
-    "q52_asof_attribution"    -> (Streams.q52AsOfAttribution _),
-    "q53_vocab_coverage"      -> ((s, d) => graft.operators.TextAnalysis.vocabCoverage(s, d)),
-    "q54_top_tokens"          -> ((s, d) => graft.operators.TextAnalysis.topTokensPerLang(s, d)),
-    "q55_ann_pq"              -> ((s, d) => graft.operators.ProductQuantization.annPq(s, d)),
-    "q56_order_timeline"      -> (Relational3.q56OrderTimeline _),
-    "q57_order_count_dist"    -> (Relational2.q57OrderCountDist _),
-    "q58_large_orders"        -> ((s, d) => Relational2.q58LargeOrders(s, d)),
-    "q59_chunks"              -> (graft.operators.Chunking.q59Chunks _),
-    "q60_top_bigrams"         -> ((s, d) => graft.operators.TextAnalysis.topBigrams(s, d)),
-    "q61_rolling_activity"    -> (Streams.q61RollingActivity _),
-    "q62_decontaminate_bloom" -> (graft.operators.Decontaminate.q62DecontaminateBloom _),
-    "q63_interval_attribution" -> (graft.operators.IntervalJoin.q63IntervalAttribution _),
-    "q64_mixture_sample"      -> (graft.operators.Sampling.q64MixtureSample _),
-    "q65_pii_redact"          -> (graft.operators.Redact.q65PiiRedact _),
-    "q66_pivot"               -> (Relational3.q66Pivot _),
-    "q67_gap_fill"            -> (Relational3.q67GapFill _),
-    "q68_overlap_pairs"       -> (graft.operators.IntervalJoin.q68OverlapPairs _),
-    "q69_segment_dedup"       -> (graft.operators.Dedup.q69SegmentDedup _),
-    "q70_bm25"                -> (graft.operators.Relevance.q70Bm25 _),
-    "q71_cohort_retention"    -> (graft.operators.Cohorts.q71CohortRetention _),
-    "q72_funnel"              -> (graft.operators.Cohorts.q72Funnel _),
-    "q73_kmeans_clusters"     -> ((s, d) => graft.operators.Clustering.q73KmeansClusters(s, d)),
-    "q74_tfidf_terms"         -> (graft.operators.Relevance.q74TfidfTerms _),
-    "q75_splits"              -> (graft.operators.Sampling.q75Splits _),
-    "q76_quality_checks"      -> (graft.operators.QualityChecks.q76QualityChecks _),
-    "q77_heavy_hitters"       -> ((s, d) => graft.operators.HeavyHitters.q77HeavyHitters(s, d)),
-    "q78_fuzzy_names"         -> (graft.operators.FuzzyJoin.q78FuzzyNames _),
-    "q79_streaks"             -> (Relational4.q79Streaks _),
-    "q80_rank_windows"        -> (Relational4.q80RankWindows _),
-    "q81_time_rollup"         -> (Relational4.q81TimeRollup _),
-    "q82_array_stats"         -> (Relational4.q82ArrayStats _),
-    "q83_similar_topk"        -> ((s, d) => graft.operators.Dedup.similarTopK(s, d)),
-    "q84_compression"         -> (graft.operators.TextAnalysis.compressionRatio _),
-    "q85_forward_asof"        -> (Streams.q85ForwardAsOf _),
-    "q86_exact_corr"          -> (Relational4.q86ExactCorr _),
-    "q87_rollup_partials"     -> (graft.operators.IncrementalAgg.q87RollupPartials _),
-    "q88_mode"                -> (Relational4.q88Mode _),
-    "q89_co_occurrence"       -> ((s, d) => Relational4.q89CoOccurrence(s, d)),
-    "q90_scd2"                -> (Relational4.q90Scd2 _),
-    "q91_rolling_dau"         -> (Relational4.q91RollingDau _),
-    "q92_dedup_priority"      -> (TrainingData.q92DedupPriority _),
-    "q93_source_mix"          -> (graft.operators.Sampling.q93SourceMix _),
-    "q94_contamination_pairs" -> (graft.operators.Decontaminate.q94ContaminationPairs _),
-    "q95_value_histogram"     -> (graft.operators.Profile.q95ValueHistogram _),
-    "q96_boilerplate"         -> (TrainingData.q96Boilerplate _),
-    "q97_source_overlap"      -> (TrainingData.q97SourceOverlap _),
-    "q98_bigram_lift"         -> (TrainingData.q98BigramLift _),
-    // model training is not SQL-expressible → no oracle entry (rows-only);
-    // invariants live in QualityClassifierSpec
-    "q99_quality_model"       -> (graft.operators.QualityClassifier.q99QualityModel _),
-    "q100_hard_negatives"     -> (TrainingData.q100HardNegatives _),
-    "q101_clean_text"         -> (graft.operators.TextAnalysis.q101CleanText _),
-    "q102_dup_spans"          -> (TrainingData.q102DupSpans _),
-    "q103_intradoc_dedup"     -> (TrainingData.q103IntraDocDedup _),
-    "q104_familiarity"        -> (TrainingData.q104Familiarity _),
-    "q105_source_cap"         -> (graft.operators.Sampling.q105SourceCap _),
-    "q106_curriculum"         -> (graft.operators.Sampling.q106Curriculum _),
-    "q107_bpe_merges"         -> (graft.operators.BpeTrain.q107BpeMerges _),
-    "q108_frame_neardup"      -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.multimodal.Multimodal.frameNearDup(s, d)),
-    "q109_visual_clusters"    -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.multimodal.Multimodal.visualDupClusters(s, d)),
-    "q110_audio_groups"       -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.multimodal.Multimodal.audioDupGroups(s, d)),
-    "q111_template_share"     -> (graft.operators.Dedup.q111TemplateShare _),
-    "q112_sessionize"         -> (Streams.q112Sessionize _),
-    "q113_shuffle_shards"     -> (graft.operators.Sampling.q113ShuffleShards _),
-    "q114_length_batches"     -> (graft.operators.Sampling.q114LengthBatches _),
-    "q115_bpe_encode"         -> (graft.operators.BpeTrain.q115BpeEncode _),
-    "q116_containment"        -> (graft.operators.Dedup.q116Containment _),
-    "q117_modality_checks"    -> (graft.operators.QualityChecks.q117ModalityChecks _),
-    "q118_pii_risk"           -> (graft.operators.Redact.q118PiiRisk _),
-    "q119_corpus_diff"        -> (graft.operators.CorpusDiff.q119CorpusDiff _),
-    "q120_sole_late_supplier" -> (Relational4.q120SoleLateSupplier(_, _)),
-    "q121_span_pairs"         -> (graft.operators.SpanDedup.q121SpanPairs _),
-    "q122_cdc_dedup"          -> ((s, d) => graft.operators.Chunking.q122CdcDedup(s, d)),
-    "q123_cluster_sample"     -> ((s, d) => graft.operators.Clustering.q123ClusterSample(s, d)),
-    "q124_split_leakage"      -> ((s, d) => graft.operators.Sampling.q124SplitLeakage(s, d)),
-    "q125_code_switch"        -> ((s, d) => graft.operators.TextAnalysis.q125CodeSwitch(s, d)),
-    "q126_rate_anomaly"       -> (graft.operators.Anomaly.q126RateAnomaly _),
-    "q127_token_budget"       -> (graft.operators.Sampling.q127TokenBudget _),
-    "q128_label_fragmentation" -> ((s, d) => graft.operators.Clustering.q128LabelFragmentation(s, d)),
-    "q129_reshard_audit"      -> ((s, d) => graft.operators.Sampling.q129ReshardAudit(s, d)),
-    "q130_hll_registers"      -> (graft.operators.DistinctSketch.q130HllRegisters _),
-    "q131_kanon_risk"         -> (graft.operators.Redact.q131KanonRisk _),
-    "q132_idle_rich"          -> ((s, d) => Relational4.q132IdleRich(s, d)),
-    "q133_dedup_yield"        -> (graft.operators.Dedup.q133DedupYield _),
-    "q134_release_manifest"   -> (graft.operators.CorpusDiff.q134ReleaseManifest _),
-    "q135_fingerprint_pairs"  -> ((s, d) => graft.operators.TextAnalysis.q135FingerprintPairs(s, d)),
-    "q136_clustering_quality" -> (Metadata.q136ClusteringQuality _),
-    "q137_disjunctive_revenue" -> (Relational5.q137DisjunctiveRevenue _),
-    "q138_supplier_breadth"   -> ((s, d) => Relational5.q138SupplierBreadth(s, d)),
-    "q139_doc_fates"          -> (graft.operators.PipelineAudit.q139DocFates _),
-    "q140_cluster_splits"     -> ((s, d) => graft.operators.Sampling.q140ClusterSplits(s, d)),
-    "q141_table_growth"       -> (Metadata.q141TableGrowth _),
-    "q142_rewrite_advisory"   -> ((s, d) => Metadata.q142RewriteAdvisory(s, d)),
-    "q143_embedding_drift"    -> (graft.operators.EmbeddingDrift.q143EmbeddingDrift _),
-    "q144_min_cost_supplier"  -> (Relational5.q144MinCostSupplier _),
-    "q145_top_rev_supplier"   -> (Relational5.q145TopRevenueSupplier _),
-    "q146_join_advisor"       -> ((s, d) => graft.operators.JoinAdvisor.q146JoinAdvisor(s, d)),
-    "q147_bpe_fertility"      -> (graft.operators.BpeTrain.q147BpeFertility _),
-    "q148_semantic_dedup"     -> ((s, d) => graft.operators.Clustering.q148SemanticDedup(s, d)),
-    "q149_lm_fluency"         -> (graft.operators.LmScore.q149LmFluency _),
-    "q150_target_affinity"    -> (graft.operators.LmScore.q150TargetAffinity _),
-    "q151_range_join_auto"    -> (graft.operators.IntervalJoin.q151RangeJoinAuto _),
-    "q152_overlap_auto"       -> (graft.operators.IntervalJoin.q152OverlapAuto _),
-    "q153_leftouter_auto"     -> (graft.operators.IntervalJoin.q153LeftOuterAuto _),
-    "q154_date_range_auto"    -> (graft.operators.IntervalJoin.q154DateRangeAuto _),
-    "q155_anti_join_auto"     -> (graft.operators.IntervalJoin.q155AntiJoinAuto _),
-    "q156_standing_attribution" -> (graft.operators.IntervalIndexStore.q156StandingAttribution _),
-    "q157_scd2_lookup_store"  -> (graft.operators.IntervalIndexStore.q157Scd2LookupStore _),
-    "q158_skipping_scan"      -> (graft.operators.SkippingIndex.q158SkippingScan _),
-    "q159_scd2_merge"         -> (graft.operators.ScdMerge.q159Scd2Merge _),
-    "q160_scd2_store"         -> (graft.operators.ScdStore.q160Scd2Store _),
-    "q161_zorder_scan"        -> (graft.operators.SkippingIndex.q161ZOrderScan _),
-    "q162_equality_deletes"   -> (graft.operators.RowDeletes.q162EqualityDeletes _),
-    "q163_delete_store"       -> (graft.operators.DeleteStore.q163DeleteStore _),
-    "q164_bloom_scan"         -> (graft.operators.SkippingIndex.q164BloomScan _),
-    "q165_transparent_scan"   -> (graft.sources.SkippingScan.q165TransparentScan _),
-    "q166_scd2_time_travel"   -> (graft.operators.ScdStore.q166TimeTravel _),
-    "q167_scd2_changes"       -> (graft.operators.ScdStore.q167ChangesFeed _),
-    "q168_composed_table"     -> (graft.operators.GraftTable.q168ComposedTable _),
-    "q169_optimized_table"    -> (graft.operators.GraftTable.q169OptimizedTable _),
-    "q170_transparent_table"  -> (graft.operators.GraftTable.q170TransparentTable _),
-    "q171_table_travel"       -> (graft.operators.GraftTable.q171TableTravel _),
-    "q172_table_changes"      -> (graft.operators.GraftTable.q172TableChanges _),
-    "q173_table_mirror"       -> (graft.operators.GraftTable.q173TableMirror _),
-    "q174_table_evolution"    -> (graft.operators.GraftTable.q174TableEvolution _),
-    "q175_table_history"      -> (graft.operators.GraftTable.q175TableHistory _),
-    "q176_agg_mirror"         -> (graft.operators.GraftTable.q176AggMirror _),
-    "q177_agg_minmax"         -> (graft.operators.GraftTable.q177AggMinMax _),
-    "q178_filtered_mirror"    -> (graft.operators.GraftTable.q178FilteredMirror _),
-    "q179_join_mirror"        -> (graft.operators.GraftTable.q179JoinMirror _),
-  )
+  def queries: Map[String, Q] = registry.map(d => d.name -> d.build).toMap
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg"          -> Relational.q1Sql,
-    "q2_drilldown"    -> Relational.q2Sql,
-    "q3_antijoin"     -> Relational.q3Sql,
-    "q4_files_browse" -> Relational.q4Sql,
-    "q5_latest_per_key" -> Relational.q5Sql,
-    "q6_page"         -> Relational.q6Sql,
-    "q7_join_agg"     -> Relational.q7Sql,
-    "q8_setops"       -> Relational.q8Sql,
-    "q9_predicates"   -> Relational.q9Sql,
-    "q10_rollup"      -> Relational.q10Sql,
-    "q11_partition_stats"     -> Metadata.q11Sql,
-    "q12_table_summary"       -> Metadata.q12Sql,
-    "q13_files_browse"        -> Metadata.q13Sql,
-    "q14_missing_files"       -> Metadata.q14Sql,
-    "q15_optimize_candidates" -> Metadata.q15Sql,
-    "q16_s3_parse"            -> Metadata.q16Sql,
-    "q17_claim_oldest"        -> Metadata.q17Sql,
-    "q20_dedup_exact"         -> TrainingData.q20Sql,
-    "q21_ngram_jaccard"       -> TrainingData.q21Sql,
-    "q22_minhash_lsh"         -> TrainingData.q22Sql,
-    "q24_embedding_neardup"   -> TrainingData.q24Sql,
-    "q25_ann_topk"            -> TrainingData.q25Sql,
-    "q27_token_stats"         -> TrainingData.q27Sql,
-    "q28_quality"             -> TrainingData.q28Sql,
-    "q29_langid"              -> TrainingData.q29Sql,
-    "q23_simhash_pairs"       -> TrainingData.q23Sql,
-    "q30_fingerprint"         -> TrainingData.q30Sql,
-    "q32_windowed_counts"     -> Streams.q32Sql,
-    "q33_sessions"            -> Streams.q33Sql,
-    "q34_multimodal_summary"  -> graft.multimodal.Multimodal.q34Sql,
-    "q35_outer_join"          -> Relational2.q35Sql,
-    "q36_semi_join"           -> Relational2.q36Sql,
-    "q37_union"               -> Relational2.q37Sql,
-    "q38_correlated_avg"      -> Relational2.q38Sql,
-    "q39_strings"             -> Relational2.q39Sql,
-    "q40_dedup_clusters"      -> TrainingData.q40Sql,
-    "q41_snapshot_files"      -> Metadata.q41Sql,
-    "q42_profile"             -> graft.operators.Profile.q42Sql,
-    "q43_json_path"           -> Metadata.q43Sql,
-    "q44_array_agg"           -> Relational3.q44Sql,
-    "q45_cube"                -> Relational3.q45Sql,
-    "q46_percentiles"         -> Relational3.q46Sql,
-    "q47_dedup_clusters_lsh"  -> TrainingData.q47Sql,
-    "q48_stratified_sample"   -> graft.operators.Sampling.q48Sql,
-    "q49_decontaminate"       -> graft.operators.Decontaminate.q49Sql,
-    "q50_sequence_packing"    -> graft.operators.Packing.q50Sql,
-    "q51_repetition"          -> graft.operators.TextAnalysis.repetitionMetricsSql,
-    "q52_asof_attribution"    -> Streams.q52Sql,
-    "q53_vocab_coverage"      -> graft.operators.TextAnalysis.vocabCoverageSql(20),
-    "q54_top_tokens"          -> graft.operators.TextAnalysis.topTokensPerLangSql(10),
-    "q56_order_timeline"      -> Relational3.q56Sql,
-    "q57_order_count_dist"    -> Relational2.q57Sql,
-    "q58_large_orders"        -> Relational2.q58Sql(300),
-    "q59_chunks"              -> graft.operators.Chunking.q59Sql,
-    "q60_top_bigrams"         -> graft.operators.TextAnalysis.topBigramsSql(20),
-    "q61_rolling_activity"    -> Streams.q61Sql,
-    "q62_decontaminate_bloom" -> graft.operators.Decontaminate.q49Sql,
-    "q63_interval_attribution" -> graft.operators.IntervalJoin.q63Sql,
-    "q64_mixture_sample"      -> graft.operators.Sampling.q64Sql,
-    "q65_pii_redact"          -> graft.operators.Redact.q65Sql,
-    "q66_pivot"               -> Relational3.q66Sql,
-    "q67_gap_fill"            -> Relational3.q67Sql,
-    "q68_overlap_pairs"       -> graft.operators.IntervalJoin.q68Sql,
-    "q69_segment_dedup"       -> graft.operators.Dedup.q69Sql,
-    "q70_bm25"                -> graft.operators.Relevance.q70Sql,
-    "q71_cohort_retention"    -> graft.operators.Cohorts.q71Sql,
-    "q72_funnel"              -> graft.operators.Cohorts.q72Sql,
-    "q74_tfidf_terms"         -> graft.operators.Relevance.q74Sql,
-    "q75_splits"              -> graft.operators.Sampling.q75Sql,
-    "q76_quality_checks"      -> graft.operators.QualityChecks.q76Sql,
-    "q77_heavy_hitters"       -> graft.operators.HeavyHitters.q77Sql,
-    "q78_fuzzy_names"         -> graft.operators.FuzzyJoin.q78Sql,
-    "q79_streaks"             -> Relational4.q79Sql,
-    "q80_rank_windows"        -> Relational4.q80Sql,
-    "q81_time_rollup"         -> Relational4.q81Sql,
-    "q82_array_stats"         -> Relational4.q82Sql,
-    "q83_similar_topk"        -> graft.operators.Dedup.similarTopKSql(3, 20),
-    "q85_forward_asof"        -> Streams.q85Sql,
-    "q86_exact_corr"          -> Relational4.q86Sql,
-    "q87_rollup_partials"     -> graft.operators.IncrementalAgg.q87Sql,
-    "q88_mode"                -> Relational4.q88Sql,
-    "q89_co_occurrence"       -> Relational4.q89Sql(3, 20),
-    "q90_scd2"                -> Relational4.q90Sql,
-    "q91_rolling_dau"         -> Relational4.q91Sql,
-    "q92_dedup_priority"      -> TrainingData.q92Sql,
-    "q93_source_mix"          -> graft.operators.Sampling.q93Sql,
-    "q94_contamination_pairs" -> graft.operators.Decontaminate.q94Sql,
-    "q95_value_histogram"     -> graft.operators.Profile.q95Sql,
-    "q96_boilerplate"         -> TrainingData.q96Sql,
-    "q97_source_overlap"      -> TrainingData.q97Sql,
-    "q98_bigram_lift"         -> TrainingData.q98Sql,
-    "q100_hard_negatives"     -> TrainingData.q100Sql,
-    "q101_clean_text"         -> graft.operators.TextAnalysis.q101Sql,
-    "q102_dup_spans"          -> TrainingData.q102Sql,
-    "q103_intradoc_dedup"     -> TrainingData.q103Sql,
-    "q104_familiarity"        -> TrainingData.q104Sql,
-    "q105_source_cap"         -> graft.operators.Sampling.q105Sql,
-    "q106_curriculum"         -> graft.operators.Sampling.q106Sql,
-    "q107_bpe_merges"         -> graft.operators.BpeTrain.q107Sql,
-    "q108_frame_neardup"      -> graft.multimodal.Multimodal.q108Sql,
-    "q109_visual_clusters"    -> graft.multimodal.Multimodal.q109Sql,
-    "q110_audio_groups"       -> graft.multimodal.Multimodal.q110Sql,
-    "q111_template_share"     -> graft.operators.Dedup.q111Sql,
-    "q112_sessionize"         -> Streams.q112Sql,
-    "q113_shuffle_shards"     -> graft.operators.Sampling.q113Sql,
-    "q114_length_batches"     -> graft.operators.Sampling.q114Sql,
-    "q115_bpe_encode"         -> graft.operators.BpeTrain.q115Sql,
-    "q116_containment"        -> graft.operators.Dedup.q116Sql,
-    "q117_modality_checks"    -> graft.operators.QualityChecks.q117Sql,
-    "q118_pii_risk"           -> graft.operators.Redact.q118Sql,
-    "q119_corpus_diff"        -> graft.operators.CorpusDiff.q119Sql,
-    "q120_sole_late_supplier" -> Relational4.q120Sql,
-    "q121_span_pairs"         -> graft.operators.SpanDedup.q121Sql,
-    "q122_cdc_dedup"          -> graft.operators.Chunking.q122Sql(),
-    "q124_split_leakage"      -> graft.operators.Sampling.q124Sql(),
-    "q125_code_switch"        -> graft.operators.TextAnalysis.q125Sql(),
-    "q126_rate_anomaly"       -> graft.operators.Anomaly.q126Sql,
-    "q127_token_budget"       -> graft.operators.Sampling.q127Sql,
-    "q129_reshard_audit"      -> graft.operators.Sampling.q129Sql(),
-    "q130_hll_registers"      -> graft.operators.DistinctSketch.q130Sql,
-    "q131_kanon_risk"         -> graft.operators.Redact.q131Sql,
-    "q132_idle_rich"          -> Relational4.q132Sql,
-    "q133_dedup_yield"        -> graft.operators.Dedup.q133Sql,
-    "q134_release_manifest"   -> graft.operators.CorpusDiff.q134Sql,
-    "q135_fingerprint_pairs"  -> graft.operators.TextAnalysis.q135Sql(),
-    "q136_clustering_quality" -> Metadata.q136Sql,
-    "q137_disjunctive_revenue" -> Relational5.q137Sql,
-    "q138_supplier_breadth"   -> Relational5.q138Sql(),
-    "q139_doc_fates"          -> graft.operators.PipelineAudit.q139Sql(),
-    "q140_cluster_splits"     -> graft.operators.Sampling.q140Sql(),
-    "q141_table_growth"       -> Metadata.q141Sql,
-    "q142_rewrite_advisory"   -> Metadata.q142Sql(),
-    "q143_embedding_drift"    -> graft.operators.EmbeddingDrift.q143Sql,
-    "q144_min_cost_supplier"  -> Relational5.q144Sql,
-    "q145_top_rev_supplier"   -> Relational5.q145Sql,
-    "q146_join_advisor"       -> graft.operators.JoinAdvisor.q146Sql(),
-    "q147_bpe_fertility"      -> graft.operators.BpeTrain.q147Sql,
-    "q149_lm_fluency"         -> graft.operators.LmScore.q149Sql,
-    "q150_target_affinity"    -> graft.operators.LmScore.q150Sql,
-    "q151_range_join_auto"    -> graft.operators.IntervalJoin.q151Sql,
-    "q152_overlap_auto"       -> graft.operators.IntervalJoin.q152Sql,
-    "q153_leftouter_auto"     -> graft.operators.IntervalJoin.q153Sql,
-    "q154_date_range_auto"    -> graft.operators.IntervalJoin.q154Sql,
-    "q155_anti_join_auto"     -> graft.operators.IntervalJoin.q155Sql,
+  /** Oracle SQL by query name. A trained oracle is present only once its
+    * query has run in this JVM, so read this after the queries (Verify
+    * does). */
+  def oracleSql: Map[String, String] =
+    registry.flatMap(d => d.oracle().map(d.name -> _)).toMap
+
+  /** The registered queries named in `only`, or all of them for None. An
+    * unregistered name is an error, never a silently shorter run. */
+  def select(only: Option[Set[String]]): Map[String, Q] = {
+    val all = queries
+    val unknown = only.getOrElse(Set.empty) -- all.keySet
+    require(unknown.isEmpty,
+      s"unregistered query name(s): ${unknown.toSeq.sorted.mkString(",")}")
+    only.fold(all)(names => all.filter { case (name, _) => names.contains(name) })
+  }
+
+  /** One query: its name, its builder and its oracle, read lazily. */
+  private final case class Def(name: String, build: Q, oracle: () => Option[String])
+  private def query(name: String, build: Q, sql: => String): Def =
+    Def(name, build, () => Some(sql))
+  // Iterative training (Lloyd rounds, L-BFGS) isn't SQL, but replaying
+  // the TRAINED artifact as literals is: centroid argmax for k-means and
+  // IVF search, fitted-weight linear scoring for the quality model. The
+  // artifact exists once the query has trained in this JVM, so its
+  // oracle is None until then.
+  private def trained(name: String, build: Q, sql: => Option[String]): Def =
+    Def(name, build, () => sql)
+
+  private lazy val registry: Seq[Def] = unique(Seq(
+    query("q1_agg", Relational.q1Agg _, Relational.q1Sql),
+    query("q2_drilldown", Relational.q2Drilldown _, Relational.q2Sql),
+    query("q3_antijoin", Relational.q3AntiJoin _, Relational.q3Sql),
+    query("q4_files_browse", Relational.q4FilesBrowse _, Relational.q4Sql),
+    query("q5_latest_per_key", Relational.q5LatestPerKey _, Relational.q5Sql),
+    query("q6_page", Relational.q6Page _, Relational.q6Sql),
+    query("q7_join_agg", Relational.q7JoinAgg _, Relational.q7Sql),
+    query("q8_setops", Relational.q8SetOps _, Relational.q8Sql),
+    query("q9_predicates", Relational.q9Predicates _, Relational.q9Sql),
+    query("q10_rollup", Relational.q10Rollup _, Relational.q10Sql),
+    query("q11_partition_stats", Metadata.q11PartitionStats _, Metadata.q11Sql),
+    query("q12_table_summary", Metadata.q12TableSummary _, Metadata.q12Sql),
+    query("q13_files_browse", Metadata.q13FilesBrowse _, Metadata.q13Sql),
+    query("q14_missing_files", Metadata.q14MissingFiles _, Metadata.q14Sql),
+    query("q15_optimize_candidates", Metadata.q15OptimizeCandidates _, Metadata.q15Sql),
+    query("q16_s3_parse", Metadata.q16S3Parse _, Metadata.q16Sql),
+    query("q17_claim_oldest", Metadata.q17ClaimOldest _, Metadata.q17Sql),
+    query("q20_dedup_exact", TrainingData.q20DedupExact _, TrainingData.q20Sql),
+    query("q21_ngram_jaccard", TrainingData.q21NgramJaccard _, TrainingData.q21Sql),
+    query("q22_minhash_lsh", TrainingData.q22MinhashLsh _, TrainingData.q22Sql),
+    query("q23_simhash_pairs", TrainingData.q23SimhashPairs _, TrainingData.q23Sql),
+    query("q24_embedding_neardup", TrainingData.q24EmbeddingNearDup _, TrainingData.q24Sql),
+    query("q25_ann_topk", TrainingData.q25AnnTopK _, TrainingData.q25Sql),
+    // q26's plane literals are a pure function of the hash: its oracle
+    // needs no training run
+    query("q26_ann_lsh", TrainingData.q26AnnLsh _, Similarity.annLshOracleSql(5, 10, 64)),
+    query("q27_token_stats", TrainingData.q27TokenStats _, TrainingData.q27Sql),
+    query("q28_quality", TrainingData.q28Quality _, TrainingData.q28Sql),
+    query("q29_langid", TrainingData.q29LangId _, TrainingData.q29Sql),
+    query("q30_fingerprint", TrainingData.q30Fingerprint _, TrainingData.q30Sql),
+    trained("q31_ann_ivf", TrainingData.q31AnnIvf _, Similarity.annIvfOracleSql),
+    query("q32_windowed_counts", Streams.q32WindowedCounts _, Streams.q32Sql),
+    query("q33_sessions", Streams.q33Sessions _, Streams.q33Sql),
+    query("q34_multimodal_summary", Streams.q34MultimodalSummary _, Multimodal.q34Sql),
+    query("q35_outer_join", Relational2.q35OuterJoin _, Relational2.q35Sql),
+    query("q36_semi_join", Relational2.q36SemiJoin _, Relational2.q36Sql),
+    query("q37_union", Relational2.q37Union _, Relational2.q37Sql),
+    query("q38_correlated_avg", Relational2.q38CorrelatedAvg _, Relational2.q38Sql),
+    query("q39_strings", Relational2.q39Strings _, Relational2.q39Sql),
+    query("q40_dedup_clusters", TrainingData.q40DedupClusters _, TrainingData.q40Sql),
+    query("q41_snapshot_files", Metadata.q41SnapshotFiles _, Metadata.q41Sql),
+    query("q42_profile", Profile.q42Profile _, Profile.q42Sql),
+    query("q43_json_path", Metadata.q43JsonPath _, Metadata.q43Sql),
+    query("q44_array_agg", Relational3.q44ArrayAgg _, Relational3.q44Sql),
+    query("q45_cube", Relational3.q45Cube _, Relational3.q45Sql),
+    query("q46_percentiles", Relational3.q46Percentiles _, Relational3.q46Sql),
+    query("q47_dedup_clusters_lsh", TrainingData.q47DedupClustersLsh _, TrainingData.q47Sql),
+    query("q48_stratified_sample", Sampling.q48StratifiedSample _, Sampling.q48Sql),
+    query("q49_decontaminate", Decontaminate.q49Decontaminate _, Decontaminate.q49Sql),
+    query("q50_sequence_packing", Packing.q50SequencePacking _, Packing.q50Sql),
+    query("q51_repetition", TextAnalysis.repetitionMetrics _, TextAnalysis.repetitionMetricsSql),
+    query("q52_asof_attribution", Streams.q52AsOfAttribution _, Streams.q52Sql),
+    query("q53_vocab_coverage", (s, d) => TextAnalysis.vocabCoverage(s, d),
+      TextAnalysis.vocabCoverageSql(20)),
+    query("q54_top_tokens", (s, d) => TextAnalysis.topTokensPerLang(s, d),
+      TextAnalysis.topTokensPerLangSql(10)),
+    trained("q55_ann_pq", (s, d) => ProductQuantization.annPq(s, d),
+      ProductQuantization.annPqOracleSql),
+    query("q56_order_timeline", Relational3.q56OrderTimeline _, Relational3.q56Sql),
+    query("q57_order_count_dist", Relational2.q57OrderCountDist _, Relational2.q57Sql),
+    query("q58_large_orders", (s, d) => Relational2.q58LargeOrders(s, d), Relational2.q58Sql(300)),
+    query("q59_chunks", Chunking.q59Chunks _, Chunking.q59Sql),
+    query("q60_top_bigrams", (s, d) => TextAnalysis.topBigrams(s, d),
+      TextAnalysis.topBigramsSql(20)),
+    query("q61_rolling_activity", Streams.q61RollingActivity _, Streams.q61Sql),
+    query("q62_decontaminate_bloom", Decontaminate.q62DecontaminateBloom _, Decontaminate.q49Sql),
+    query("q63_interval_attribution", IntervalJoin.q63IntervalAttribution _, IntervalJoin.q63Sql),
+    query("q64_mixture_sample", Sampling.q64MixtureSample _, Sampling.q64Sql),
+    query("q65_pii_redact", Redact.q65PiiRedact _, Redact.q65Sql),
+    query("q66_pivot", Relational3.q66Pivot _, Relational3.q66Sql),
+    query("q67_gap_fill", Relational3.q67GapFill _, Relational3.q67Sql),
+    query("q68_overlap_pairs", IntervalJoin.q68OverlapPairs _, IntervalJoin.q68Sql),
+    query("q69_segment_dedup", Dedup.q69SegmentDedup _, Dedup.q69Sql),
+    query("q70_bm25", Relevance.q70Bm25 _, Relevance.q70Sql),
+    query("q71_cohort_retention", Cohorts.q71CohortRetention _, Cohorts.q71Sql),
+    query("q72_funnel", Cohorts.q72Funnel _, Cohorts.q72Sql),
+    trained("q73_kmeans_clusters", (s, d) => Clustering.q73KmeansClusters(s, d),
+      Clustering.q73OracleSql),
+    query("q74_tfidf_terms", Relevance.q74TfidfTerms _, Relevance.q74Sql),
+    query("q75_splits", Sampling.q75Splits _, Sampling.q75Sql),
+    query("q76_quality_checks", QualityChecks.q76QualityChecks _, QualityChecks.q76Sql),
+    query("q77_heavy_hitters", (s, d) => HeavyHitters.q77HeavyHitters(s, d), HeavyHitters.q77Sql),
+    query("q78_fuzzy_names", FuzzyJoin.q78FuzzyNames _, FuzzyJoin.q78Sql),
+    query("q79_streaks", Relational4.q79Streaks _, Relational4.q79Sql),
+    query("q80_rank_windows", Relational4.q80RankWindows _, Relational4.q80Sql),
+    query("q81_time_rollup", Relational4.q81TimeRollup _, Relational4.q81Sql),
+    query("q82_array_stats", Relational4.q82ArrayStats _, Relational4.q82Sql),
+    query("q83_similar_topk", (s, d) => Dedup.similarTopK(s, d), Dedup.similarTopKSql(3, 20)),
+    trained("q84_compression", TextAnalysis.compressionRatio _, TextAnalysis.q84OracleSql),
+    query("q85_forward_asof", Streams.q85ForwardAsOf _, Streams.q85Sql),
+    query("q86_exact_corr", Relational4.q86ExactCorr _, Relational4.q86Sql),
+    query("q87_rollup_partials", IncrementalAgg.q87RollupPartials _, IncrementalAgg.q87Sql),
+    query("q88_mode", Relational4.q88Mode _, Relational4.q88Sql),
+    query("q89_co_occurrence", (s, d) => Relational4.q89CoOccurrence(s, d),
+      Relational4.q89Sql(3, 20)),
+    query("q90_scd2", Relational4.q90Scd2 _, Relational4.q90Sql),
+    query("q91_rolling_dau", Relational4.q91RollingDau _, Relational4.q91Sql),
+    query("q92_dedup_priority", TrainingData.q92DedupPriority _, TrainingData.q92Sql),
+    query("q93_source_mix", Sampling.q93SourceMix _, Sampling.q93Sql),
+    query("q94_contamination_pairs", Decontaminate.q94ContaminationPairs _, Decontaminate.q94Sql),
+    query("q95_value_histogram", Profile.q95ValueHistogram _, Profile.q95Sql),
+    query("q96_boilerplate", TrainingData.q96Boilerplate _, TrainingData.q96Sql),
+    query("q97_source_overlap", TrainingData.q97SourceOverlap _, TrainingData.q97Sql),
+    query("q98_bigram_lift", TrainingData.q98BigramLift _, TrainingData.q98Sql),
+    trained("q99_quality_model", QualityClassifier.q99QualityModel _,
+      QualityClassifier.q99OracleSql),
+    query("q100_hard_negatives", TrainingData.q100HardNegatives _, TrainingData.q100Sql),
+    query("q101_clean_text", TextAnalysis.q101CleanText _, TextAnalysis.q101Sql),
+    query("q102_dup_spans", TrainingData.q102DupSpans _, TrainingData.q102Sql),
+    query("q103_intradoc_dedup", TrainingData.q103IntraDocDedup _, TrainingData.q103Sql),
+    query("q104_familiarity", TrainingData.q104Familiarity _, TrainingData.q104Sql),
+    query("q105_source_cap", Sampling.q105SourceCap _, Sampling.q105Sql),
+    query("q106_curriculum", Sampling.q106Curriculum _, Sampling.q106Sql),
+    query("q107_bpe_merges", BpeTrain.q107BpeMerges _, BpeTrain.q107Sql),
+    query("q108_frame_neardup", (s, d) => Multimodal.frameNearDup(s, d), Multimodal.q108Sql),
+    query("q109_visual_clusters", (s, d) => Multimodal.visualDupClusters(s, d), Multimodal.q109Sql),
+    query("q110_audio_groups", (s, d) => Multimodal.audioDupGroups(s, d), Multimodal.q110Sql),
+    query("q111_template_share", Dedup.q111TemplateShare _, Dedup.q111Sql),
+    query("q112_sessionize", Streams.q112Sessionize _, Streams.q112Sql),
+    query("q113_shuffle_shards", Sampling.q113ShuffleShards _, Sampling.q113Sql),
+    query("q114_length_batches", Sampling.q114LengthBatches _, Sampling.q114Sql),
+    query("q115_bpe_encode", BpeTrain.q115BpeEncode _, BpeTrain.q115Sql),
+    query("q116_containment", Dedup.q116Containment _, Dedup.q116Sql),
+    query("q117_modality_checks", QualityChecks.q117ModalityChecks _, QualityChecks.q117Sql),
+    query("q118_pii_risk", Redact.q118PiiRisk _, Redact.q118Sql),
+    query("q119_corpus_diff", CorpusDiff.q119CorpusDiff _, CorpusDiff.q119Sql),
+    query("q120_sole_late_supplier", Relational4.q120SoleLateSupplier(_, _), Relational4.q120Sql),
+    query("q121_span_pairs", SpanDedup.q121SpanPairs _, SpanDedup.q121Sql),
+    query("q122_cdc_dedup", (s, d) => Chunking.q122CdcDedup(s, d), Chunking.q122Sql()),
+    trained("q123_cluster_sample", (s, d) => Clustering.q123ClusterSample(s, d),
+      Clustering.q123OracleSql),
+    query("q124_split_leakage", (s, d) => Sampling.q124SplitLeakage(s, d), Sampling.q124Sql()),
+    query("q125_code_switch", (s, d) => TextAnalysis.q125CodeSwitch(s, d), TextAnalysis.q125Sql()),
+    query("q126_rate_anomaly", Anomaly.q126RateAnomaly _, Anomaly.q126Sql),
+    query("q127_token_budget", Sampling.q127TokenBudget _, Sampling.q127Sql),
+    trained("q128_label_fragmentation", (s, d) => Clustering.q128LabelFragmentation(s, d),
+      Clustering.q128OracleSql),
+    query("q129_reshard_audit", (s, d) => Sampling.q129ReshardAudit(s, d), Sampling.q129Sql()),
+    query("q130_hll_registers", DistinctSketch.q130HllRegisters _, DistinctSketch.q130Sql),
+    query("q131_kanon_risk", Redact.q131KanonRisk _, Redact.q131Sql),
+    query("q132_idle_rich", (s, d) => Relational4.q132IdleRich(s, d), Relational4.q132Sql),
+    query("q133_dedup_yield", Dedup.q133DedupYield _, Dedup.q133Sql),
+    query("q134_release_manifest", CorpusDiff.q134ReleaseManifest _, CorpusDiff.q134Sql),
+    query("q135_fingerprint_pairs", (s, d) => TextAnalysis.q135FingerprintPairs(s, d),
+      TextAnalysis.q135Sql()),
+    query("q136_clustering_quality", Metadata.q136ClusteringQuality _, Metadata.q136Sql),
+    query("q137_disjunctive_revenue", Relational5.q137DisjunctiveRevenue _, Relational5.q137Sql),
+    query("q138_supplier_breadth", (s, d) => Relational5.q138SupplierBreadth(s, d),
+      Relational5.q138Sql()),
+    query("q139_doc_fates", PipelineAudit.q139DocFates _, PipelineAudit.q139Sql()),
+    query("q140_cluster_splits", (s, d) => Sampling.q140ClusterSplits(s, d), Sampling.q140Sql()),
+    query("q141_table_growth", Metadata.q141TableGrowth _, Metadata.q141Sql),
+    query("q142_rewrite_advisory", (s, d) => Metadata.q142RewriteAdvisory(s, d),
+      Metadata.q142Sql()),
+    query("q143_embedding_drift", EmbeddingDrift.q143EmbeddingDrift _, EmbeddingDrift.q143Sql),
+    query("q144_min_cost_supplier", Relational5.q144MinCostSupplier _, Relational5.q144Sql),
+    query("q145_top_rev_supplier", Relational5.q145TopRevenueSupplier _, Relational5.q145Sql),
+    query("q146_join_advisor", (s, d) => JoinAdvisor.q146JoinAdvisor(s, d), JoinAdvisor.q146Sql()),
+    query("q147_bpe_fertility", BpeTrain.q147BpeFertility _, BpeTrain.q147Sql),
+    trained("q148_semantic_dedup", (s, d) => Clustering.q148SemanticDedup(s, d),
+      Clustering.q148OracleSql),
+    query("q149_lm_fluency", LmScore.q149LmFluency _, LmScore.q149Sql),
+    query("q150_target_affinity", LmScore.q150TargetAffinity _, LmScore.q150Sql),
+    query("q151_range_join_auto", IntervalJoin.q151RangeJoinAuto _, IntervalJoin.q151Sql),
+    query("q152_overlap_auto", IntervalJoin.q152OverlapAuto _, IntervalJoin.q152Sql),
+    query("q153_leftouter_auto", IntervalJoin.q153LeftOuterAuto _, IntervalJoin.q153Sql),
+    query("q154_date_range_auto", IntervalJoin.q154DateRangeAuto _, IntervalJoin.q154Sql),
+    query("q155_anti_join_auto", IntervalJoin.q155AntiJoinAuto _, IntervalJoin.q155Sql),
     // the standing-store path must be semantically invisible: q156 is
     // hash-checked against q63's plain range-join SQL
-    "q156_standing_attribution" -> graft.operators.IntervalJoin.q63Sql,
-    "q157_scd2_lookup_store"  -> graft.operators.IntervalIndexStore.q157Sql,
+    query("q156_standing_attribution", IntervalIndexStore.q156StandingAttribution _,
+      IntervalJoin.q63Sql),
+    query("q157_scd2_lookup_store", IntervalIndexStore.q157Scd2LookupStore _,
+      IntervalIndexStore.q157Sql),
     // the index is a pruner, never a filter: q158 hashes against the
     // same query stated on the ORIGINAL single-file table
-    "q158_skipping_scan"      -> graft.operators.SkippingIndex.q158Sql,
+    query("q158_skipping_scan", SkippingIndex.q158SkippingScan _, SkippingIndex.q158Sql),
     // incremental merge vs one-pass full compress: same table
-    "q159_scd2_merge"         -> graft.operators.ScdMerge.q159Sql,
+    query("q159_scd2_merge", ScdMerge.q159Scd2Merge _, ScdMerge.q159Sql),
     // the standing store (init + two committed batches) must reproduce
     // the same one-pass compression
-    "q160_scd2_store"         -> graft.operators.ScdStore.q160Sql,
+    query("q160_scd2_store", ScdStore.q160Scd2Store _, ScdStore.q160Sql),
     // two-column conjunction through the z-ordered layout: same
     // pruner-honesty contract, stated on the original table
-    "q161_zorder_scan"        -> graft.operators.SkippingIndex.q161Sql,
+    query("q161_zorder_scan", SkippingIndex.q161ZOrderScan _, SkippingIndex.q161Sql),
     // merge-on-read equality deletes vs the NOT EXISTS statement of
     // the same erasure
-    "q162_equality_deletes"   -> graft.operators.RowDeletes.q162Sql,
+    query("q162_equality_deletes", RowDeletes.q162EqualityDeletes _, RowDeletes.q162Sql),
     // the STANDING delete store must reproduce q162's oracle exactly
-    "q163_delete_store"       -> graft.operators.DeleteStore.q163Sql,
+    query("q163_delete_store", DeleteStore.q163DeleteStore _, DeleteStore.q163Sql),
     // a bloom-pruned point probe vs the same IN-list on the raw table
-    "q164_bloom_scan"         -> graft.operators.SkippingIndex.q164Sql,
+    query("q164_bloom_scan", SkippingIndex.q164BloomScan _, SkippingIndex.q164Sql),
     // the transparent FileIndex scan vs the same query on the raw table
-    "q165_transparent_scan"   -> graft.sources.SkippingScan.q165Sql,
+    query("q165_transparent_scan", SkippingScan.q165TransparentScan _, SkippingScan.q165Sql),
     // commit-2 snapshot vs a recompression of only the events it saw
-    "q166_scd2_time_travel"   -> graft.operators.ScdStore.q166Sql,
+    query("q166_scd2_time_travel", ScdStore.q166TimeTravel _, ScdStore.q166Sql),
     // the commit-window CDC delta vs the full-log compression's slice
-    "q167_scd2_changes"       -> graft.operators.ScdStore.q167Sql,
+    query("q167_scd2_changes", ScdStore.q167ChangesFeed _, ScdStore.q167Sql),
     // the composed table (append+append+delete, pruned MOR read) vs
     // the same band + NOT EXISTS stated on the raw tables
-    "q168_composed_table"     -> graft.operators.GraftTable.q168Sql,
+    query("q168_composed_table", GraftTable.q168ComposedTable _, GraftTable.q168Sql),
     // the same query and oracle AFTER optimize folded+z-ordered the
     // table and materialized the deletes — maintenance is invisible
-    "q169_optimized_table"    -> graft.operators.GraftTable.q169Sql,
+    query("q169_optimized_table", GraftTable.q169OptimizedTable _, GraftTable.q169Sql),
     // the same semantics again through the transparent FileIndex read
-    "q170_transparent_table"  -> graft.operators.GraftTable.q170Sql,
+    query("q170_transparent_table", GraftTable.q170TransparentTable _, GraftTable.q170Sql),
     // commit-3 snapshot (pre-erasure): the same band WITHOUT deletes
-    "q171_table_travel"       -> graft.operators.GraftTable.q171Sql,
+    query("q171_table_travel", GraftTable.q171TableTravel _, GraftTable.q171Sql),
     // the erasure commit's CDC window vs EXISTS on the raw tables
-    "q172_table_changes"      -> graft.operators.GraftTable.q172Sql,
-    "q173_table_mirror"       -> graft.operators.GraftTable.q173Sql,
-    "q174_table_evolution"    -> graft.operators.GraftTable.q174Sql,
-    "q175_table_history"      -> graft.operators.GraftTable.q175Sql,
-    "q176_agg_mirror"         -> graft.operators.GraftTable.q176Sql,
-    "q177_agg_minmax"         -> graft.operators.GraftTable.q177Sql,
-    "q178_filtered_mirror"    -> graft.operators.GraftTable.q178Sql,
-    "q179_join_mirror"        -> graft.operators.GraftTable.q179Sql,
-  ) ++
-    // Dynamic oracles: present once the query has trained in this JVM
-    // (the Verify flow runs queries before dumping oracle SQL).
-    // Iterative training — Lloyd rounds, L-BFGS — isn't SQL, but
-    // replaying the TRAINED artifact as literals is: centroid argmax
-    // for k-means and IVF search, fitted-weight linear scoring for the
-    // quality model. q26's plane literals are a pure function of the
-    // hash, so its oracle is unconditionally present.
-    graft.operators.Clustering.q73OracleSql.map("q73_kmeans_clusters" -> _) ++
-    graft.operators.Clustering.q123OracleSql.map("q123_cluster_sample" -> _) ++
-    graft.operators.Clustering.q128OracleSql.map("q128_label_fragmentation" -> _) ++
-    graft.operators.Clustering.q148OracleSql.map("q148_semantic_dedup" -> _) ++
-    graft.operators.Similarity.annIvfOracleSql.map("q31_ann_ivf" -> _) ++
-    graft.operators.ProductQuantization.annPqOracleSql.map("q55_ann_pq" -> _) ++
-    graft.operators.QualityClassifier.q99OracleSql.map("q99_quality_model" -> _) ++
-    graft.operators.TextAnalysis.q84OracleSql.map("q84_compression" -> _) ++
-    Map("q26_ann_lsh" -> graft.operators.Similarity.annLshOracleSql(5, 10, 64))
+    query("q172_table_changes", GraftTable.q172TableChanges _, GraftTable.q172Sql),
+    query("q173_table_mirror", GraftTable.q173TableMirror _, GraftTable.q173Sql),
+    query("q174_table_evolution", GraftTable.q174TableEvolution _, GraftTable.q174Sql),
+    query("q175_table_history", GraftTable.q175TableHistory _, GraftTable.q175Sql),
+    query("q176_agg_mirror", GraftTable.q176AggMirror _, GraftTable.q176Sql),
+    query("q177_agg_minmax", GraftTable.q177AggMinMax _, GraftTable.q177Sql),
+    query("q178_filtered_mirror", GraftTable.q178FilteredMirror _, GraftTable.q178Sql),
+    query("q179_join_mirror", GraftTable.q179JoinMirror _, GraftTable.q179Sql),
+  ))
+
+  // `toMap` keeps one of two same-named entries without a word.
+  private def unique(defs: Seq[Def]): Seq[Def] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"query name(s) registered twice: ${dups.toSeq.sorted.mkString(",")}")
+    defs
+  }
 }

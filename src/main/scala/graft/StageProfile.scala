@@ -18,6 +18,7 @@ object StageProfile {
     val sfDir = args.head
     val names = args.tail.toSeq
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "2").toInt
+    val fns = SparkEntry.select(Some(names.toSet))
     val spark = Sessions.local("graft-stageprofile", Sessions.defaultCores)
     val sc = spark.sparkContext
 
@@ -26,8 +27,7 @@ object StageProfile {
         inputB: Long, site: String)
 
     names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
+      val fn = fns(name)
       (1 to rounds).foreach { r =>
         val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]
         val listener = new SparkListener {

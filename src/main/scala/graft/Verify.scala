@@ -12,15 +12,10 @@ object Verify {
     // full run.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unregistered query name(s): ${unknown.toSeq.sorted.mkString(",")}")
-    def selected(name: String) = only.forall(_.contains(name))
+    val selected = SparkEntry.select(only)
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => selected(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -40,7 +35,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .collect { case (k, v) if selected(k) => s"${q(k)}: ${q(v)}" }
+      .collect { case (k, v) if selected.contains(k) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

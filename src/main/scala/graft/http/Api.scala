@@ -604,7 +604,7 @@ object Json {
     else if (n.isBoolean) JBool(n.asBoolean)
     else if (n.isNull) JNull
     else if (n.isObject) {
-      val it = n.fields()
+      val it = n.properties().iterator()
       val fields = Map.newBuilder[String, JVal]
       while (it.hasNext) {
         val e = it.next()
