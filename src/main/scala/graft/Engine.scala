@@ -16,6 +16,7 @@ final class Engine(
     clock: () => Instant = () => Instant.now(),
     cfg: SmallFiles.Config = SmallFiles.Config(),
     engines: TaskEngines = TaskEngines.default) {
+  import Engine._
 
   val queue = new TaskQueue(store, clock)
 
@@ -72,12 +73,6 @@ final class Engine(
       engines.resolveOrThrow(Model.TaskKind.RemoveOrphanFiles),
       Map("retention_days" -> days.toString))
   }
-
-  /** One table's outcome inside a batch enqueue
-    * (service_tasks.go:46-55). */
-  final case class BatchFailure(table: String, error: String)
-  final case class BatchResult(taskIds: Seq[Long], enqueuedCount: Long,
-      failedTables: Seq[BatchFailure])
 
   /** Trim, drop blanks, first-occurrence dedupe — the reference's
     * normalizeBatchTables (service_tasks.go:479-497). */
@@ -163,9 +158,6 @@ final class Engine(
         else Left(s"task $taskId no longer running")
     }
   }
-
-  final case class CycleResult(tableCount: Int, optimizeTasks: Int,
-      expireTasks: Int, orphanTasks: Int)
 
   /** The daily maintenance cycle
     * (service_maintenance_schedule.go:55-110): for every stored table,
@@ -316,4 +308,15 @@ final class Engine(
       task.id
     }
   }
+}
+
+object Engine {
+  /** One table's outcome inside a batch enqueue
+    * (service_tasks.go:46-55). */
+  final case class BatchFailure(table: String, error: String)
+  final case class BatchResult(taskIds: Seq[Long], enqueuedCount: Long,
+      failedTables: Seq[BatchFailure])
+
+  final case class CycleResult(tableCount: Int, optimizeTasks: Int,
+      expireTasks: Int, orphanTasks: Int)
 }

@@ -431,7 +431,7 @@ final class Api(store: MetaStore, engine: Engine,
   }
 
   /** BatchEnqueueResult rendering (service_tasks.go:46-50). */
-  private def batchJson(result: Either[String, Engine#BatchResult]): (Int, String) =
+  private def batchJson(result: Either[String, Engine.BatchResult]): (Int, String) =
     result match {
       case Left(err) => (400, obj("error" -> str(err)))
       case Right(r) => ok(obj(

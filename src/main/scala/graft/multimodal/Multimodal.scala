@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column processing: image/audio/video as opaque `binary`
@@ -36,11 +36,11 @@ object Multimodal {
   final case class Thumbnail(asset_id: Long, width: Int, height: Int,
       thumb: Array[Byte])
 
-  implicit val assetEnc = Encoders.product[MediaAsset]
-  implicit val decodedEnc = Encoders.product[DecodedMeta]
-  implicit val featureEnc = Encoders.product[MediaFeature]
-  implicit val frameEnc = Encoders.product[Frame]
-  implicit val thumbEnc = Encoders.product[Thumbnail]
+  implicit val assetEnc: Encoder[MediaAsset] = Encoders.product[MediaAsset]
+  implicit val decodedEnc: Encoder[DecodedMeta] = Encoders.product[DecodedMeta]
+  implicit val featureEnc: Encoder[MediaFeature] = Encoders.product[MediaFeature]
+  implicit val frameEnc: Encoder[Frame] = Encoders.product[Frame]
+  implicit val thumbEnc: Encoder[Thumbnail] = Encoders.product[Thumbnail]
 
   /** Real codecs for the simple open formats; the seam for the rest. */
   object Codecs {

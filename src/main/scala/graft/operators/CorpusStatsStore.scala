@@ -97,7 +97,8 @@ object CorpusStatsStore {
     val mergedRegs = new graft.functions.HllAggregator().merge(
       graft.functions.HllBuf(readSketch(spark, dir, v)),
       graft.functions.HllBuf(DistinctSketch.vocabSketch(deltaDocs))).regs
-    writeSketch(spark, dir, v + 1, mergedRegs)
+    writeSketch(spark, dir, v + 1,
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(mergedRegs))
     v + 1
   }
 

@@ -1033,7 +1033,7 @@ object Dedup {
     // non-ANSI would silently wrap, risking a false fixpoint).
     // (Option-read: sum over an empty frame is a null cell, not 0.)
     def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val row = df.agg(sum($"label".cast("decimal(38,0)"))).head
+      val row = df.agg(sum($"label".cast("decimal(38,0)"))).head()
       if (row.isNullAt(0)) java.math.BigDecimal.ZERO else row.getDecimal(0)
     }
     var prevSum = labelSum(labels)

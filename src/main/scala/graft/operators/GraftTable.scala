@@ -118,7 +118,7 @@ object GraftTable {
         df.schema.fields)).asInstanceOf[StructType]
       pinnedSchema(man0.schemaJson)
         .orElse(if (man0.live.isEmpty) None
-          else Some(baseRead(spark, dir, man0.live, None).schema))
+          else Some(scan(spark, dir, man0).schema))
         .map(mergeSchemas(_, dfs)).getOrElse(dfs)
     }
     writePending(spark, dir, "append", label)
@@ -217,50 +217,90 @@ object GraftTable {
   def read(spark: SparkSession, dir: String): DataFrame = {
     val man = manifest(spark, dir)
     require(man.live.nonEmpty, s"table at $dir has no committed data")
-    withDeletes(spark, dir, baseRead(spark, dir, man.live, man.schemaJson))
+    minusDeletes(spark, dir, scan(spark, dir, man), delLive(spark, dir))
   }
 
-  /** The live-batch scan. Batches may EVOLVE the schema (new nullable
-    * columns — appends enforce only the indexed columns' presence);
-    * the union schema nulls the gaps, parquet-standard. The union
-    * comes from the COMMIT METADATA (`schemaJson`, pinned at append
-    * time): supplying it as the user schema makes Spark skip footer
-    * inference entirely — planning a read opens ZERO parquet files, at
-    * any live-file count. Only a pre-schema manifest (legacy table,
-    * handcrafted snapshot) pays the mergeSchema footer-merge job, as a
-    * repair path; the next append/optimize pins the schema. */
-  private def baseRead(spark: SparkSession, dir: String, live: Seq[String],
-      schemaJson: Option[String]): DataFrame = {
-    val paths = live.map(l => s"${dataPath(dir)}/batch=$l")
-    pinnedSchema(schemaJson) match {
-      case Some(st) =>
-        // the user schema names the DATA columns; the `batch` partition
-        // column is discovered from the paths and appended, then shed
-        spark.read.schema(st)
-          .option("basePath", dataPath(dir))
-          .parquet(paths: _*)
-          .drop("batch")
+  /** The one scan every read plans through: the live batch dirs of
+    * `man` (the current manifest, or a commit snapshot's), or — for
+    * the pruned reads — the explicit data-file subset `files` of them,
+    * conformed to the same schema. Batches may EVOLVE the schema (new
+    * nullable columns — appends enforce only the indexed columns'
+    * presence); the union schema nulls the gaps, parquet-standard. The
+    * union comes from the COMMIT METADATA (`schemaJson`, pinned at
+    * append time): supplying it as the user schema makes Spark skip
+    * footer inference entirely — planning a read opens ZERO parquet
+    * files, at any live-file count. Only a pre-schema manifest (legacy
+    * table, handcrafted snapshot) pays the mergeSchema footer-merge
+    * job, as a repair path; the next append/optimize pins the schema.
+    * The result schema never varies with `files`: a subset that drops
+    * every file carrying an evolved column would otherwise narrow the
+    * frame (and could un-resolve the delete key) — the pin conforms the
+    * subset for free, the legacy path conforms its footer merge to the
+    * full live set's explicitly, and an empty subset reads as the full
+    * schema with no rows. */
+  private def scan(spark: SparkSession, dir: String, man: Manifest,
+      files: Option[Seq[String]] = None): DataFrame = {
+    if (files.exists(_.isEmpty)) return scan(spark, dir, man).where(lit(false))
+    val paths = files.getOrElse(man.live.map(l => s"${dataPath(dir)}/batch=$l"))
+    val reader = spark.read.option("basePath", dataPath(dir))
+    // the user schema names the DATA columns; the `batch` partition
+    // column is discovered from the paths and appended, then shed
+    pinnedSchema(man.schemaJson) match {
+      case Some(st) => reader.schema(st).parquet(paths: _*).drop("batch")
       case None =>
-        spark.read
-          .option("basePath", dataPath(dir))
-          .option("mergeSchema", "true")
-          .parquet(paths: _*)
-          .drop("batch")
+        val merged = reader.option("mergeSchema", "true")
+          .parquet(paths: _*).drop("batch")
+        if (files.isEmpty) merged
+        else conformTo(scan(spark, dir, man).schema, merged)
     }
   }
 
-  private def withDeletes(spark: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
-    val m = meta(spark, dir)
-    if (m.delKeys.isEmpty) df else DeleteStore.morRead(df, delPath(dir))
+  /** The index-pruned [[scan]] of `man`: ONLY the live files the
+    * skipping index cannot rule out for the constraints —
+    * [[SkippingIndex.prunedRead]]'s prune intersected with `man`'s
+    * read-committed guarantee (a crashed append's orphan directory stays
+    * invisible even though the raw listing, and possibly the index,
+    * knows its files). `man` may be a commit snapshot: the min/max
+    * repair rescan prunes against the snapshot the sync pins (a commit
+    * landing mid-sync cannot leak into the repaired extrema), the CDC
+    * delete-preimage probe against the window's `to` snapshot (it
+    * otherwise pays a table-sized scan to emit a delete-batch-sized
+    * preimage set). Coverage stays conservative at any index staleness:
+    * qualify() returns on-disk files the index has NO row for as
+    * `unknown`, so a crash-window-unindexed batch or a
+    * superseded-but-snapshot-live dir is still read. No index yet
+    * degrades to the full scan — correct, just unpruned. Callers apply
+    * their deletes and re-apply the exact predicate on top. */
+  private def pruned(spark: SparkSession, dir: String, man: Manifest,
+      ranges: Seq[ColumnRange] = Nil,
+      equalities: Seq[ColumnEquals] = Nil,
+      nullness: Seq[ColumnNullness] = Nil): DataFrame = {
+    val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
+    if (!fs.exists(metaP)) return scan(spark, dir, man)
+    val (qualifying, unknown) =
+      SkippingIndex.qualify(spark, indexPath(dir), ranges, equalities, nullness)
+    // distinct: duplicate stat rows (e.g. a file statted twice by
+    // overlapping refreshes) must never read a file's data twice —
+    // the transparent scan is already set-based (SkippingScan)
+    scan(spark, dir, man, Some((qualifying ++ unknown).distinct
+      .filter(liveFiles(spark, dir, man.live))))
   }
 
-  /** The filtered read, scanning ONLY live files the index cannot rule
-    * out — [[SkippingIndex.prunedRead]]'s prune intersected with the
-    * manifest's read-committed guarantee (a crashed append's orphan
-    * directory stays invisible even though the raw listing, and
-    * possibly the index, knows its files). Deletes apply on top; the
-    * exact predicate is re-applied after the prune as always. */
+  /** `df` minus the rows the delete batches `labels` address
+    * ([[RowDeletes]] semantics: NULL-safe equality, broadcast-probe
+    * plan) — a no-op for no labels or a table without delete keys. */
+  private def minusDeletes(spark: SparkSession, dir: String, df: DataFrame,
+      labels: Seq[String]): DataFrame =
+    if (labels.isEmpty) df
+    else {
+      val keys = meta(spark, dir).delKeys
+      if (keys.isEmpty) df
+      else RowDeletes.applyEqualityDeletes(df,
+        DeleteStore.deletesOf(spark, delPath(dir), labels), keys)
+    }
+
+  /** The filtered read: [[pruned]] against the current manifest, the
+    * exact predicate re-applied after the prune, deletes on top. */
   def readWhere(spark: SparkSession, dir: String,
       ranges: Seq[ColumnRange] = Nil,
       equalities: Seq[ColumnEquals] = Nil,
@@ -270,35 +310,9 @@ object GraftTable {
     val man = manifest(spark, dir)
     require(man.live.nonEmpty, s"table at $dir has no committed data")
     val pred = SkippingIndex.predicateOf(ranges, equalities, nullness)
-    val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
-    if (!fs.exists(metaP)) // no index yet: correct, just unpruned
-      return withDeletes(spark, dir,
-        baseRead(spark, dir, man.live, man.schemaJson).where(pred))
-    val (qualifying, unknown) =
-      SkippingIndex.qualify(spark, indexPath(dir), ranges, equalities, nullness)
-    val live = liveFiles(spark, dir, man.live)
-    // distinct: duplicate stat rows (e.g. a file statted twice by
-    // overlapping refreshes) must never read a file's data twice —
-    // the transparent scan is already set-based (SkippingScan)
-    val paths = (qualifying ++ unknown).distinct.filter(live)
-    // the result schema must not vary with the predicate: a prune that
-    // drops every file carrying an evolved column would otherwise
-    // narrow the frame (and could un-resolve the delete key) — the
-    // pinned union schema conforms the surviving files for free; the
-    // legacy path conforms the footer-merged subset explicitly
-    val full = baseRead(spark, dir, man.live, man.schemaJson)
-    val base =
-      if (paths.isEmpty) full.where(lit(false))
-      else pinnedSchema(man.schemaJson) match {
-        case Some(st) =>
-          spark.read.schema(st).option("basePath", dataPath(dir))
-            .parquet(paths: _*).drop("batch")
-        case None => conformTo(full.schema,
-          spark.read.option("basePath", dataPath(dir))
-            .option("mergeSchema", "true").parquet(paths: _*)
-            .drop("batch"))
-      }
-    withDeletes(spark, dir, base.where(pred))
+    minusDeletes(spark, dir,
+      pruned(spark, dir, man, ranges, equalities, nullness).where(pred),
+      delLive(spark, dir))
   }
 
   /** Project `df` to exactly `schema`'s columns, typed NULLs for its
@@ -377,16 +391,17 @@ object GraftTable {
     // no index yet (a crash between the first append's commit and its
     // refreshIndex): degrade to the unpruned live read, like readWhere
     val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
-    if (!fs.exists(metaP))
-      return withDeletes(spark, dir,
-        baseRead(spark, dir, man.live, man.schemaJson))
-    // data cols only; pinned = zero footer opens to resolve it
-    val schema = pinnedSchema(man.schemaJson)
-      .getOrElse(baseRead(spark, dir, man.live, None).schema)
-    val pinned = liveFileStatuses(spark, dir, man.live)
-    val base = graft.sources.SkippingScan.tableWith(spark, indexPath(dir),
-      schema, Some(() => pinned))
-    withDeletes(spark, dir, base)
+    val base =
+      if (!fs.exists(metaP)) scan(spark, dir, man)
+      else {
+        // data cols only; pinned = zero footer opens to resolve it
+        val schema = pinnedSchema(man.schemaJson)
+          .getOrElse(scan(spark, dir, man).schema)
+        val pinned = liveFileStatuses(spark, dir, man.live)
+        graft.sources.SkippingScan.tableWith(spark, indexPath(dir),
+          schema, Some(() => pinned))
+      }
+    minusDeletes(spark, dir, base, delLive(spark, dir))
   }
 
   /** Continuous ingest: one committed [[append]] per micro-batch under
@@ -495,11 +510,8 @@ object GraftTable {
         // leave the commit below pointing at deleted data)
         writePending(spark, dir, "retire", intoLabel,
           StoreIO.renderJson(StoreIO.putArr(_, "retired", dels)))
-        val base = baseRead(spark, dir, man.live, man.schemaJson)
-        val snapshot =
-          if (dels.isEmpty) base
-          else RowDeletes.applyEqualityDeletes(base,
-            DeleteStore.deletesOf(spark, delPath(dir), dels), m.delKeys)
+        val base = scan(spark, dir, man)
+        val snapshot = minusDeletes(spark, dir, base, dels)
         val laidOut =
           if (m.zoneCols.size >= 2) {
             val z = graft.functions.ZOrder.zvalueOf(snapshot, m.zoneCols)
@@ -545,7 +557,7 @@ object GraftTable {
             fresh.commit + 1,
             // carry the pinned union; a LEGACY table gets pinned here
             // (the rewrite's input schema IS the union, footer-merged
-            // one final time by the baseRead above)
+            // one final time by the scan above)
             fresh.schemaJson.orElse(Some(toNullable(
               org.apache.spark.sql.types.StructType(base.schema.fields))
               .asInstanceOf[StructType].json))),
@@ -828,13 +840,9 @@ object GraftTable {
     val snap = commitAt(spark, dir, c)
     require(snap.manifest.live.nonEmpty,
       s"commit $c has no committed data (kind ${snap.kind})")
-    // the SNAPSHOT's pinned schema: travel reads plan footer-free too
-    val base = baseRead(spark, dir, snap.manifest.live,
-      snap.manifest.schemaJson)
-    if (snap.delLive.isEmpty) base
-    else RowDeletes.applyEqualityDeletes(base,
-      DeleteStore.deletesOf(spark, delPath(dir), snap.delLive),
-      meta(spark, dir).delKeys)
+    // the SNAPSHOT's pinned schema and delete labels: travel reads
+    // plan footer-free too
+    minusDeletes(spark, dir, scan(spark, dir, snap.manifest), snap.delLive)
   }
 
   /** CDC READ: the visible delta between commit `from` (exclusive)
@@ -863,23 +871,19 @@ object GraftTable {
     // ONE full-live frame under the `to`-snapshot's pinned schema: it
     // conforms every branch, and the window reads reuse the same pin —
     // CDC planning opens zero footers like every other read
-    val full = baseRead(spark, dir, ct.manifest.live,
-      ct.manifest.schemaJson)
+    val full = scan(spark, dir, ct.manifest)
     val inserts0 = {
       val labels = window.filter(_.kind == "append").map(_.label)
       if (labels.isEmpty) full.where(lit(false))
-      else baseRead(spark, dir, labels, ct.manifest.schemaJson)
+      else scan(spark, dir, ct.manifest.copy(live = labels))
     }
     // rows appended in the window under a key a PRE-WINDOW delete
     // still holds live at `to` were never visible — emitting them as
     // inserts (with no compensating delete event, since their label is
     // not a window commit) would make a mirror keep rows read() hides.
     // Keys deleted IN the window stay: those emit insert AND delete.
-    val preDel = cf.delLive.intersect(ct.delLive)
-    val inserts =
-      if (preDel.isEmpty || m.delKeys.isEmpty) inserts0
-      else RowDeletes.applyEqualityDeletes(inserts0,
-        DeleteStore.deletesOf(spark, delPath(dir), preDel), m.delKeys)
+    val inserts = minusDeletes(spark, dir, inserts0,
+      cf.delLive.intersect(ct.delLive))
     val delLabels = window.filter(_.kind == "delete").map(_.label)
     val deletes =
       if (delLabels.isEmpty) full.where(lit(false))
@@ -890,40 +894,29 @@ object GraftTable {
         // mirror would diverge from read()
         val keys = DeleteStore.deletesOf(spark, delPath(dir), delLabels)
           .select(m.delKeys.map(k => col(k).as(s"__d_$k")): _*).distinct()
-        val probe = preimageBase(spark, dir, m, ct.manifest.live,
-          ct.manifest.schemaJson, full,
+        val probe = preimageBase(spark, dir, m, ct.manifest, full,
           keys.select(col(s"__d_${m.delKeys.head}"))
             .limit(RepairPruneCap + 1).collect().map(_.get(0)))
         val hit = probe.join(keys,
           m.delKeys.map(k => probe(k) <=> keys(s"__d_$k")).reduce(_ && _),
           "left_semi")
-        if (cf.delLive.isEmpty) hit
-        else RowDeletes.applyEqualityDeletes(hit,
-          DeleteStore.deletesOf(spark, delPath(dir), cf.delLive), m.delKeys)
+        minusDeletes(spark, dir, hit, cf.delLive)
       }
     conformTo(full.schema, inserts).withColumn("_change_type", lit("insert"))
       .unionByName(conformTo(full.schema, deletes)
         .withColumn("_change_type", lit("delete")))
   }
 
-  /** The frame the delete-preimage semi-join PROBES: by default the
-    * full live read — which makes every delete-carrying CDC window pay
-    * a table-sized scan to emit a delete-batch-sized preimage set (the
-    * 30× probe's dominant steady-state IVM cost). When the single
-    * delete key is a zone/bloom-indexed column and the window's
-    * distinct keys fit a driver IN-list, the skipping index prunes the
-    * probe to the files that can hold ANY of the keys. Coverage stays
-    * conservative at any index staleness: qualify() returns on-disk
-    * files the index has NO row for as `unknown`, so a
-    * crash-window-unindexed batch or a superseded-but-snapshot-live
-    * dir is still read; the exact null-safe predicate is re-applied by
-    * the semi-join either way. NULL keys (they address data NULLs —
-    * no index opinion) and oversized key sets fall back to the full
-    * probe. `keyVals` is by-name: the driver collect only runs once
-    * the cheap gates pass. */
+  /** The frame the delete-preimage semi-join PROBES: [[pruned]] to the
+    * files that can hold ANY of the window's delete keys when the
+    * single delete key is a zone/bloom-indexed column and its distinct
+    * values fit a driver IN-list, else `full`, the whole live read. NULL
+    * keys (they address data NULLs — no index opinion) and oversized key
+    * sets take `full`; the exact null-safe predicate is re-applied by
+    * the semi-join either way. `keyVals` is by-name: the driver collect
+    * only runs once the cheap gates pass. */
   private def preimageBase(spark: SparkSession, dir: String, m: Meta,
-      live: Seq[String], schemaJson: Option[String], full: DataFrame,
-      keyVals: => Array[Any]): DataFrame = {
+      man: Manifest, full: DataFrame, keyVals: => Array[Any]): DataFrame = {
     val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
     if (m.delKeys.size != 1 || !fs.exists(metaP)) return full
     val im = SkippingIndex.meta(spark, indexPath(dir))
@@ -931,20 +924,8 @@ object GraftTable {
     if (!im.cols.contains(k) && !im.bloomCols.contains(k)) return full
     val vals = keyVals
     if (vals.isEmpty || vals.length > RepairPruneCap || vals.contains(null))
-      return full
-    val (qual, unknown) = SkippingIndex.qualify(spark, indexPath(dir),
-      Nil, Seq(ColumnEquals(k, vals.toSeq)), Nil)
-    val liveSet = liveFiles(spark, dir, live)
-    val paths = (qual ++ unknown).distinct.filter(liveSet)
-    if (paths.isEmpty) full.where(lit(false))
-    else pinnedSchema(schemaJson) match {
-      case Some(st) =>
-        spark.read.schema(st).option("basePath", dataPath(dir))
-          .parquet(paths: _*).drop("batch")
-      case None => conformTo(full.schema,
-        spark.read.option("basePath", dataPath(dir))
-          .option("mergeSchema", "true").parquet(paths: _*).drop("batch"))
-    }
+      full
+    else pruned(spark, dir, man, equalities = Seq(ColumnEquals(k, vals.toSeq)))
   }
 
   // ---- downstream views: the bucketed versioned layout -----------------
@@ -1610,8 +1591,10 @@ object GraftTable {
                   val rescan = dirtyProbe match {
                     case Some(vals) if vals.length <= RepairPruneCap &&
                         !vals.contains(null) =>
-                      pinnedReadWhere(spark, dir, snap,
-                        Seq(ColumnEquals(keys.head, vals.toSeq)))
+                      val eq = Seq(ColumnEquals(keys.head, vals.toSeq))
+                      val pred = SkippingIndex.predicateOf(Nil, eq, Nil)
+                      minusDeletes(spark, dir, pruned(spark, dir,
+                        snap.manifest, equalities = eq), snap.delLive).where(pred)
                     case _ =>
                       val rKeys = merged.where(col("__repair"))
                         .select(keys.map(col): _*)
@@ -1694,45 +1677,6 @@ object GraftTable {
       ViewDef(st.family, st.pred, st.cols, st.dimCommit), st.nBuckets, cur,
       st.bucketCols, fold = multi, append = Set.empty, keepLast = keepLast)
     multi.size
-  }
-
-  /** [[readWhere]] against a PINNED commit snapshot: the index prune
-    * intersected with the SNAPSHOT's live files (not the current
-    * manifest's), the snapshot's delete labels applied, the exact
-    * predicate re-applied. The min/max repair rescan runs through
-    * this so a commit landing mid-sync cannot leak into the repaired
-    * extrema (ADVICE r16). Index staleness stays conservative: files
-    * the index has no row for come back `unknown` and are read. */
-  private def pinnedReadWhere(spark: SparkSession, dir: String,
-      snap: Commit, equalities: Seq[ColumnEquals]): DataFrame = {
-    val pred = SkippingIndex.predicateOf(Nil, equalities, Nil)
-    val full = baseRead(spark, dir, snap.manifest.live,
-      snap.manifest.schemaJson)
-    val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
-    val base =
-      if (!fs.exists(metaP)) full
-      else {
-        val (qual, unknown) = SkippingIndex.qualify(spark, indexPath(dir),
-          Nil, equalities, Nil)
-        val liveSet = liveFiles(spark, dir, snap.manifest.live)
-        val paths = (qual ++ unknown).distinct.filter(liveSet)
-        if (paths.isEmpty) full.where(lit(false))
-        else pinnedSchema(snap.manifest.schemaJson) match {
-          case Some(stp) => spark.read.schema(stp)
-            .option("basePath", dataPath(dir)).parquet(paths: _*)
-            .drop("batch")
-          case None => conformTo(full.schema,
-            spark.read.option("mergeSchema", "true")
-              .option("basePath", dataPath(dir)).parquet(paths: _*)
-              .drop("batch"))
-        }
-      }
-    val m = meta(spark, dir)
-    val deleted =
-      if (snap.delLive.isEmpty || m.delKeys.isEmpty) base
-      else RowDeletes.applyEqualityDeletes(base,
-        DeleteStore.deletesOf(spark, delPath(dir), snap.delLive), m.delKeys)
-    deleted.where(pred)
   }
 
   /** The SNAPSHOT LOG as a queryable frame — one row per RETAINED

@@ -2,7 +2,9 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
+import scala.collection.immutable.ArraySeq
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,82 +49,14 @@ object Maintenance {
       zorderCols: Seq[String] = Seq.empty): CompactResult = {
     require(sortCols.isEmpty || zorderCols.isEmpty,
       "choose either sort clustering or z-order clustering, not both")
-    import spark.implicits._
-
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Per-partition (bytes, fileCount) from a one-level listing — the
-    // partition dirs of the range only.
-    val parts = fs.listStatus(new Path(tablePath)).toSeq
+    // the partition dirs, from a one-level listing
+    val days = fs.listStatus(new Path(tablePath)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .map(_.getPath)
-      .filter { p =>
-        val d = p.getName.stripPrefix("date=")
-        d >= from && d < until
-      }
-    val stats = parts.map { p =>
-      val files = fs.listStatus(p).filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      (p.getName.stripPrefix("date="), files.length.toLong, files.map(_.getLen).sum)
-    }
-    val toRewrite = stats.filter(_._2 >= minInputFiles)
-    if (toRewrite.isEmpty) return CompactResult(0, stats.map(_._2).sum, stats.map(_._2).sum, 0)
-
-    val targets = toRewrite.map { case (d, _, bytes) =>
-      d -> math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    }.toMap
-    val targetsDf = targets.toSeq.toDF("date", "n_files")
-
-    val slice = spark.read.parquet(tablePath)
-      .where($"date".isin(toRewrite.map(_._1): _*))
-    val bucketed = slice
-      .join(broadcast(targetsDf), "date")
-      .withColumn("__bucket", pmod(xxhash64(struct(slice.columns.map(col): _*)), $"n_files"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // Optional clustering: sort rows within each output file so
-      // parquet column min/max stats become selective (data clustering
-      // for scan pruning — the sort-order half of a rewrite_data_files
-      // sort strategy). The sort must come AFTER the drop and reference
-      // only output columns: otherwise the writer can't see the
-      // ordering and inserts its own non-stable partition-column sort,
-      // destroying the clustering.
-      val totalTargets = math.max(1L, targets.values.sum).toInt
-      // Clustered rewrites must RANGE-partition on the cluster key so
-      // each output file owns a contiguous key range — file-level
-      // min/max stats only prune when the file *assignment* follows
-      // the key; sorting rows inside random hash buckets would leave
-      // every file spanning the full key range. Cluster keys are bare
-      // expressions (never projected-away columns — the writer must
-      // still see an ordering satisfying its partition-column
-      // requirement).
-      val clusterExprs: Seq[Column] =
-        if (zorderCols.nonEmpty)
-          Seq(graft.functions.ZOrder.zvalueOf(slice, zorderCols))
-        else sortCols.map(col)
-      val sorted =
-        if (clusterExprs.isEmpty) partitionByOrdinal(bucketed, "date", targets)
-        else bucketed.drop("n_files", "__bucket")
-          .repartitionByRange(totalTargets, (col("date") +: clusterExprs): _*)
-          .sortWithinPartitions((col("date") +: clusterExprs): _*)
-      sorted
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("date")
-        .parquet(tablePath)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-    val after = toRewrite.map { case (d, _, _) =>
-      fs.listStatus(new Path(tablePath, s"date=$d"))
-        .count(f => f.isFile && !f.getPath.getName.startsWith("_")).toLong
-    }.sum
-    CompactResult(
-      partitionsRewritten = toRewrite.size.toLong,
-      filesBefore = stats.map(_._2).sum,
-      filesAfter = after + stats.filterNot(s => targets.contains(s._1)).map(_._2).sum,
-      bytesRewritten = toRewrite.map(_._3).sum)
+      .map(s => (s.getPath.getName.stripPrefix("date="), s.getPath))
+    rewriteDays(spark, fs, tablePath, days, from, until, targetFileBytes,
+      minInputFiles, spark.read.parquet(tablePath), "date", Seq("date"),
+      sortCols, zorderCols)
   }
 
   /** Exact one-shuffle-partition-per-target-file distribution for the
@@ -181,64 +115,104 @@ object Maintenance {
     * the walk touches only directory metadata, never data files. */
   def compactNested(spark: SparkSession, tablePath: String, from: String,
       until: String, targetFileBytes: Long, minInputFiles: Int = 2): CompactResult = {
-    import spark.implicits._
-
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def subdirs(p: Path, prefix: String): Seq[Path] =
       fs.listStatus(p).toSeq.filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
         .map(_.getPath)
-    val dayDirs = for {
+    val days = for {
       y <- subdirs(new Path(tablePath), "year=")
       m <- subdirs(y, "month=")
       d <- subdirs(m, "day=")
-      date = s"${y.getName.stripPrefix("year=")}-${m.getName.stripPrefix("month=")}-${d.getName.stripPrefix("day=")}"
-      if date >= from && date < until
-    } yield (date, d)
+    } yield (Seq(y, m, d).map(_.getName.split("=", 2)(1)).mkString("-"), d)
+    // Partition-type inference reads day=05 back as int 5; normalize to
+    // zero-padded strings so the dynamic overwrite targets the SAME
+    // directories it read (else day=5 dirs appear beside day=05).
+    def read = spark.read.parquet(tablePath)
+      .withColumn("year", lpad(col("year").cast("string"), 4, "0"))
+      .withColumn("month", lpad(col("month").cast("string"), 2, "0"))
+      .withColumn("day", lpad(col("day").cast("string"), 2, "0"))
+      .withColumn("__date", concat(col("year"), lit("-"), col("month"), lit("-"), col("day")))
+    rewriteDays(spark, fs, tablePath, days, from, until, targetFileBytes,
+      minInputFiles, read, "__date", Seq("year", "month", "day"))
+  }
 
-    val stats = dayDirs.map { case (date, p) =>
-      val files = fs.listStatus(p).filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      (date, files.length.toLong, files.map(_.getLen).sum)
+  private val OverwriteMode = "spark.sql.sources.partitionOverwriteMode"
+
+  /** The binpack rewrite both layouts share. `days` pairs each day
+    * partition dir with its `YYYY-MM-DD` key; `read` (by-name: a range
+    * with nothing to rewrite reads nothing) is the table carrying that
+    * key as `dateCol`, which the write keeps only as one of
+    * `partitionCols`. Rows hash on their stored columns into their
+    * target file. */
+  private def rewriteDays(spark: SparkSession, fs: FileSystem, tablePath: String,
+      days: Seq[(String, Path)], from: String, until: String,
+      targetFileBytes: Long, minInputFiles: Int, read: => DataFrame,
+      dateCol: String, partitionCols: Seq[String],
+      sortCols: Seq[String] = Seq.empty,
+      zorderCols: Seq[String] = Seq.empty): CompactResult = {
+    import spark.implicits._
+    def dataFiles(p: Path) =
+      fs.listStatus(p).filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+    val inRange = days.filter { case (d, _) => d >= from && d < until }
+    // Per-partition (bytes, fileCount) — the partition dirs of the range only.
+    val stats = inRange.map { case (d, p) =>
+      val files = dataFiles(p)
+      (d, files.length.toLong, files.map(_.getLen).sum)
     }
     val toRewrite = stats.filter(_._2 >= minInputFiles)
-    if (toRewrite.isEmpty)
-      return CompactResult(0, stats.map(_._2).sum, stats.map(_._2).sum, 0)
+    if (toRewrite.isEmpty) return CompactResult(0, stats.map(_._2).sum, stats.map(_._2).sum, 0)
 
     val targets = toRewrite.map { case (d, _, bytes) =>
       d -> math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     }.toMap
-    val targetsDf = targets.toSeq.toDF("__date", "n_files")
+    val targetsDf = targets.toSeq.toDF(dateCol, "n_files")
 
-    // Partition-type inference reads day=05 back as int 5; normalize to
-    // zero-padded strings so the dynamic overwrite targets the SAME
-    // directories it read (else day=5 dirs appear beside day=05).
-    val slice0 = spark.read.parquet(tablePath)
-      .withColumn("year", lpad(col("year").cast("string"), 4, "0"))
-      .withColumn("month", lpad(col("month").cast("string"), 2, "0"))
-      .withColumn("day", lpad(col("day").cast("string"), 2, "0"))
-    val dateCol = concat(col("year"), lit("-"), col("month"), lit("-"), col("day"))
-    val slice = slice0.withColumn("__date", dateCol)
-      .where(col("__date").isin(toRewrite.map(_._1): _*))
+    val slice = read.where(col(dateCol).isin(toRewrite.map(_._1): _*))
+    val rowCols = ArraySeq.unsafeWrapArray(slice.columns)
+      .filter(c => c != dateCol || partitionCols.contains(c))
     val bucketed = slice
-      .join(broadcast(targetsDf), "__date")
-      .withColumn("__bucket",
-        pmod(xxhash64(struct(slice0.columns.map(col): _*)), col("n_files")))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      .join(broadcast(targetsDf), dateCol)
+      .withColumn("__bucket", pmod(xxhash64(struct(rowCols.map(col): _*)), col("n_files")))
+    val prev = spark.conf.getOption(OverwriteMode)
+    spark.conf.set(OverwriteMode, "dynamic")
     try {
-      partitionByOrdinal(bucketed, "__date", targets)
-        .drop("__date")
+      // Optional clustering: sort rows within each output file so
+      // parquet column min/max stats become selective (data clustering
+      // for scan pruning — the sort-order half of a rewrite_data_files
+      // sort strategy). The sort must come AFTER the drop and reference
+      // only output columns: otherwise the writer can't see the
+      // ordering and inserts its own non-stable partition-column sort,
+      // destroying the clustering.
+      val totalTargets = math.max(1L, targets.values.sum).toInt
+      // Clustered rewrites must RANGE-partition on the cluster key so
+      // each output file owns a contiguous key range — file-level
+      // min/max stats only prune when the file *assignment* follows
+      // the key; sorting rows inside random hash buckets would leave
+      // every file spanning the full key range. Cluster keys are bare
+      // expressions (never projected-away columns — the writer must
+      // still see an ordering satisfying its partition-column
+      // requirement).
+      val clusterExprs: Seq[Column] =
+        if (zorderCols.nonEmpty)
+          Seq(graft.functions.ZOrder.zvalueOf(slice, zorderCols))
+        else sortCols.map(col)
+      val laidOut =
+        if (clusterExprs.isEmpty) partitionByOrdinal(bucketed, dateCol, targets)
+        else bucketed.drop("n_files", "__bucket")
+          .repartitionByRange(totalTargets, (col(dateCol) +: clusterExprs): _*)
+          .sortWithinPartitions((col(dateCol) +: clusterExprs): _*)
+      (if (partitionCols.contains(dateCol)) laidOut else laidOut.drop(dateCol))
         .write.mode(SaveMode.Overwrite)
-        .partitionBy("year", "month", "day")
+        .partitionBy(partitionCols: _*)
         .parquet(tablePath)
     } finally {
       prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        case Some(v) => spark.conf.set(OverwriteMode, v)
+        case None => spark.conf.unset(OverwriteMode)
       }
     }
-    val after = dayDirs.filter { case (d, _) => targets.contains(d) }.map { case (_, p) =>
-      fs.listStatus(p).count(f => f.isFile && !f.getPath.getName.startsWith("_")).toLong
-    }.sum
+    val after = inRange.filter { case (d, _) => targets.contains(d) }
+      .map { case (_, p) => dataFiles(p).length.toLong }.sum
     CompactResult(
       partitionsRewritten = toRewrite.size.toLong,
       filesBefore = stats.map(_._2).sum,

@@ -26,7 +26,7 @@ final class PlanCache[K, V <: AnyRef](val maxEntries: Int, onEvict: V => Unit,
 
   private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-      if (size() > maxEntries) { onEvict(e.getValue); evictCount += 1; true }
+      if (this.size() > maxEntries) { onEvict(e.getValue); evictCount += 1; true }
       else false
   }
 

@@ -91,7 +91,7 @@ class SqlEntrySpec extends SparkSpec {
     SqlEntry.registerFunctions(spark)
     val r = spark.sql(
       """SELECT partition_to_date('2025', '6', '05') AS d,
-        |       partition_string(map('b', '2', 'a', '1')) AS s""".stripMargin).head
+        |       partition_string(map('b', '2', 'a', '1')) AS s""".stripMargin).head()
     assert(r.getDate(0).toString == "2025-06-05")
     assert(r.getString(1) == "{a=1, b=2}")
   }

@@ -29,7 +29,7 @@ class CosineSimilaritySpec extends SparkSpec {
     CosineSimilarity.register(spark)
     val r = spark.sql(
       "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c," +
-        " cosine_similarity(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS o").head
+        " cosine_similarity(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS o").head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
     assert(math.abs(r.getDouble(1)) < 1e-15)
   }

@@ -45,7 +45,7 @@ class ZOrderSpec extends SparkSpec {
     // per-file spans of both dims, as fractions of the global 0..4095 span
     val spans = files.map { f =>
       val r = spark.read.parquet(f)
-        .agg(min($"x"), max($"x"), min($"y"), max($"y")).head
+        .agg(min($"x"), max($"x"), min($"y"), max($"y")).head()
       ((r.getDouble(1) - r.getDouble(0)) / 4095.0,
         (r.getDouble(3) - r.getDouble(2)) / 4095.0)
     }

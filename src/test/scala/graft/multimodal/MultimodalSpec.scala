@@ -153,7 +153,7 @@ class MultimodalSpec extends SparkSpec {
     val hashes = Multimodal.frameHashes(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // union-find over ALL frame pairs within hamming 7
-    val parent = scala.collection.mutable.HashMap(hashes.map(h => h._1 -> h._1): _*)
+    val parent = scala.collection.mutable.HashMap(hashes.toIndexedSeq.map(h => h._1 -> h._1): _*)
     def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
     for { (ka, ha) <- hashes; (kb, hb) <- hashes
           if ka < kb && java.lang.Long.bitCount(ha ^ hb) <= 7 } {

@@ -16,9 +16,9 @@ class DistributionSpec extends SparkSpec {
       .withColumn("payload", $"id" * 2)
     val small = spark.range(100).select($"id".as("k"), ($"id" * 10).as("dim"))
     val plain = large.join(small, Seq("k"))
-      .agg(count(lit(1)), sum($"payload" + $"dim")).head
+      .agg(count(lit(1)), sum($"payload" + $"dim")).head()
     val salted = Distribution.saltedJoin(large, small, "k", salt = 8)
-      .agg(count(lit(1)), sum($"payload" + $"dim")).head
+      .agg(count(lit(1)), sum($"payload" + $"dim")).head()
     assert(plain == salted)
   }
 

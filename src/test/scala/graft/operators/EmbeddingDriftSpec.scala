@@ -66,7 +66,7 @@ class EmbeddingDriftSpec extends SparkSpec {
     val minGap = vOld.select($"vec_id", $"embedding".as("a"))
       .join(vNew.select($"vec_id", $"embedding".as("b")), "vec_id")
       .select(abs(Similarity.cos(dv("a"), dv("b")) - lit(0.99)).as("gap"))
-      .agg(min($"gap")).head.getDouble(0)
+      .agg(min($"gap")).head().getDouble(0)
     assert(minGap > 1e-6, s"min |cos - 0.99| = $minGap: too close to the drift gate")
   }
 }

@@ -125,12 +125,12 @@ class EmptyInputSpec extends SparkSpec {
       StructType(Seq(StructField("k", LongType))))
     val dim = (1 to 3).map(_.toLong).toDF("id")
     val r = JoinAdvisor.adviseJoin(emptyK, org.apache.spark.sql.functions.col("k"),
-      "k", dim, "d", 5000, 5).head
+      "k", dim, "d", 5000, 5).head()
     // empty fact: null stats must not crash the gates; dim still counts
     assert(r.getAs[Long]("dim_rows") == 3)
     assert(r.getAs[String]("strategy") == "broadcast_dim")
     val r2 = JoinAdvisor.adviseJoin(dim.withColumnRenamed("id", "k"),
-      org.apache.spark.sql.functions.col("k"), "k", emptyK, "d", 5000, 5).head
+      org.apache.spark.sql.functions.col("k"), "k", emptyK, "d", 5000, 5).head()
     assert(r2.getAs[Long]("dim_rows") == 0)
     assert(r2.getAs[String]("strategy") == "broadcast_dim")
   }

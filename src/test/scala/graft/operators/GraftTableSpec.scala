@@ -68,6 +68,25 @@ class GraftTableSpec extends SparkSpec {
     val allFiles = read(spark, dir).inputFiles.length
     assert(point.inputFiles.length < allFiles,
       s"point probe read ${point.inputFiles.length} of $allFiles live files")
+    // the same probes over a LEGACY (pre-schema) manifest: the pruned
+    // scan footer-merges the surviving files and conforms them to the
+    // full live set's schema — same rows, still pruned
+    val p = java.nio.file.Paths.get(s"$dir/_live.json")
+    val raw = java.nio.file.Files.readString(p)
+    val i = raw.indexOf(""""schema":""")
+    assert(i > 0, "manifest carried no schema to strip")
+    java.nio.file.Files.writeString(p, raw.substring(0, i - 1) + "}")
+    assert(manifest(spark, dir).schemaJson.isEmpty)
+    assert(sortedRows(readWhere(spark, dir, ranges = band)) ==
+      sortedRows(expect))
+    val legacyPoint = readWhere(spark, dir,
+      equalities = Seq(ColumnEquals("l_orderkey", Seq(key))))
+    assert(sortedRows(legacyPoint) ==
+      sortedRows(expected.where($"l_orderkey" === key)))
+    val legacyAll = read(spark, dir).inputFiles.length
+    assert(legacyPoint.inputFiles.length < legacyAll,
+      s"legacy point probe read ${legacyPoint.inputFiles.length} of " +
+        s"$legacyAll live files")
   }
 
   test("a crashed append is invisible — through read() AND the pruned path — then converges") {
@@ -551,12 +570,12 @@ class GraftTableSpec extends SparkSpec {
       .drop("_change_type")
     val expect = li.join(victims, Seq("l_orderkey"), "left_semi")
     assert(sortedRows(preimages) == sortedRows(
-      expect.select(preimages.columns.map(col): _*)),
+      expect.select(preimages.columns.toIndexedSeq.map(col): _*)),
       "index-pruned preimages diverged from the deleted rows")
     // and the full-frame invariant: read() == b1+b2 minus the victims
     assert(sortedRows(read(spark, dir)) == sortedRows(
       li.join(victims, Seq("l_orderkey"), "left_anti")
-        .select(read(spark, dir).columns.map(col): _*)))
+        .select(read(spark, dir).columns.toIndexedSeq.map(col): _*)))
   }
 
   test("syncMirrorWhere: delta windows maintain the filtered projection; drift and lost keys fail loudly") {

@@ -14,16 +14,16 @@ class JoinAdvisorSpec extends SparkSpec {
       .toDF("k")
     val bigDim = (1 to 9000).map(_.toLong).toDF("id")
     val smallDim = (1 to 10).map(_.toLong).toDF("id")
-    val salt = JoinAdvisor.adviseJoin(skewed, $"k", "k", bigDim, "big", 5000, 5).head
+    val salt = JoinAdvisor.adviseJoin(skewed, $"k", "k", bigDim, "big", 5000, 5).head()
     assert(salt.getAs[Boolean]("skewed"))
     assert(salt.getAs[String]("strategy") == "salt_fact")
     assert(salt.getAs[Long]("max_key_rows") == 60)
 
-    val bcast = JoinAdvisor.adviseJoin(skewed, $"k", "k", smallDim, "small", 5000, 5).head
+    val bcast = JoinAdvisor.adviseJoin(skewed, $"k", "k", smallDim, "small", 5000, 5).head()
     assert(bcast.getAs[String]("strategy") == "broadcast_dim") // broadcast wins over salt
 
     val uniform = (1 to 100).map(_.toLong).toDF("k")
-    val plain = JoinAdvisor.adviseJoin(uniform, $"k", "k", bigDim, "big", 5000, 5).head
+    val plain = JoinAdvisor.adviseJoin(uniform, $"k", "k", bigDim, "big", 5000, 5).head()
     assert(!plain.getAs[Boolean]("skewed"))
     assert(plain.getAs[String]("strategy") == "hash_shuffle")
   }
@@ -34,11 +34,11 @@ class JoinAdvisorSpec extends SparkSpec {
     // max key = 5 of 100 rows = exactly 5%: 5*100 > 100*5 is FALSE
     val atBoundary = ((1 to 5).map(_ => 1L) ++ (2 to 96).map(_.toLong)).toDF("k")
     assert(!JoinAdvisor.adviseJoin(atBoundary, $"k", "k", dim, "d", 5000, 5)
-      .head.getAs[Boolean]("skewed"))
+      .head().getAs[Boolean]("skewed"))
     // 6 of 101 rows: 6*100 > 101*5 is TRUE
     val above = ((1 to 6).map(_ => 1L) ++ (2 to 96).map(_.toLong)).toDF("k")
     assert(JoinAdvisor.adviseJoin(above, $"k", "k", dim, "d", 5000, 5)
-      .head.getAs[Boolean]("skewed"))
+      .head().getAs[Boolean]("skewed"))
   }
 
   test("q146 on the real corpus: one row per axis, dims drive the picks") {

@@ -32,7 +32,7 @@ class MaintenanceSpec extends SparkSpec {
 
     val before = spark.read.parquet(dir)
     val rowsBefore = before.count()
-    val sumBefore = before.agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0)
+    val sumBefore = before.agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0)
 
     val res = Maintenance.compact(spark, dir, "1996-01-01", "1996-02-01",
       targetFileBytes = 1024L * 1024 * 1024)
@@ -42,7 +42,7 @@ class MaintenanceSpec extends SparkSpec {
 
     val after = spark.read.parquet(dir)
     assert(after.count() == rowsBefore)
-    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0) == sumBefore)
+    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0) == sumBefore)
     // With a 1 GiB target every partition should compact to one file.
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -66,7 +66,7 @@ class MaintenanceSpec extends SparkSpec {
 
     val before = spark.read.parquet(dir)
     val rowsBefore = before.count()
-    val sumBefore = before.agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0)
+    val sumBefore = before.agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0)
 
     val res = Maintenance.compactNested(spark, dir, "1996-01-01", "1996-01-16",
       targetFileBytes = 1024L * 1024 * 1024)
@@ -75,7 +75,7 @@ class MaintenanceSpec extends SparkSpec {
 
     val after = spark.read.parquet(dir)
     assert(after.count() == rowsBefore)
-    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0) == sumBefore)
+    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0) == sumBefore)
     // In-range days have 1 file; out-of-range days keep their many files.
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

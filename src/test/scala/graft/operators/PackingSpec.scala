@@ -71,8 +71,8 @@ class PackingSpec extends SparkSpec {
       val bins = r.getAs[scala.collection.Seq[Long]]("bins").sorted
       assert(bins == (0L until bins.size.toLong)) // 0..max, no gaps
     }
-    val tokSum = p.agg(org.apache.spark.sql.functions.sum($"n_tok")).head.getLong(0)
-    val direct = docs.selectExpr("sum(size(split(text, ' ')))").head.getLong(0)
+    val tokSum = p.agg(org.apache.spark.sql.functions.sum($"n_tok")).head().getLong(0)
+    val direct = docs.selectExpr("sum(size(split(text, ' ')))").head().getLong(0)
     assert(tokSum == direct)
   }
 }

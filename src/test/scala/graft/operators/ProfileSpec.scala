@@ -64,7 +64,7 @@ class ProfileSpec extends SparkSpec {
       .repartition(6, $"date", pmod($"l_orderkey", lit(6)))
       .write.mode("overwrite").partitionBy("date").parquet(dir)
     val sumBefore = spark.read.parquet(dir)
-      .agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0)
+      .agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0)
 
     // minInputFiles=1 so every partition (even single-file days) is
     // rewritten with the cluster sort.
@@ -74,7 +74,7 @@ class ProfileSpec extends SparkSpec {
     assert(res.filesAfter < res.filesBefore)
 
     val after = spark.read.parquet(dir)
-    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head.getDecimal(0) == sumBefore)
+    assert(after.agg(sum($"l_quantity".cast("decimal(18,2)"))).head().getDecimal(0) == sumBefore)
     // Every output file is sorted by the cluster column.
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

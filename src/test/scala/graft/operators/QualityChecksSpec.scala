@@ -25,7 +25,7 @@ class QualityChecksSpec extends SparkSpec {
       .unionByName(orders.limit(1).withColumn("o_custkey", lit(-99L)))
 
     val dup = planted.groupBy($"o_orderkey").count().where($"count" > 1)
-      .agg(coalesce(sum($"count" - 1), lit(0L))).head.getLong(0)
+      .agg(coalesce(sum($"count" - 1), lit(0L))).head().getLong(0)
     assert(dup >= 2L)
 
     val customer = Tables.customer(spark, sfDir)

@@ -121,7 +121,7 @@ class QualityClassifierSpec extends SparkSpec {
     val model = QualityClassifier.distillFromRules(docs)
     val minAbsZ = QualityClassifier.featuresOf(docs)
       .select(abs(QualityClassifier.linearExpr(model)).as("az"))
-      .agg(min($"az")).head.getDouble(0)
+      .agg(min($"az")).head().getDouble(0)
     assert(minAbsZ > 1e-9, s"min |z| = $minAbsZ: too close to the z=0 boundary")
   }
 }

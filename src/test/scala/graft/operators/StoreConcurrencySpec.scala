@@ -585,7 +585,7 @@ class StoreConcurrencySpec extends SparkSpec {
     GraftTable.delete(victims, dir, "e1")
     assert(rows(GraftTable.read(spark, dir)) ==
       rows(li.join(victims, Seq("l_orderkey"), "left_anti")
-        .select(GraftTable.read(spark, dir).columns.map(col): _*)),
+        .select(GraftTable.read(spark, dir).columns.toIndexedSeq.map(col): _*)),
       "the converged table diverged from append minus deletes")
   }
 

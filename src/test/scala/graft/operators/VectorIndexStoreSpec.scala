@@ -119,12 +119,12 @@ class VectorIndexStoreSpec extends SparkSpec {
     val ivfDir = java.nio.file.Files.createTempDirectory("ivf-stale").toString
     VectorIndexStore.buildIvf(base, ivfDir)
     VectorIndexStore.appendIvf(delta, ivfDir, "b1")
-    val fresh = VectorIndexStore.ivfStaleness(e, ivfDir).head
+    val fresh = VectorIndexStore.ivfStaleness(e, ivfDir).head()
     assert(fresh.getAs[Boolean]("fresh"))
     assert(fresh.getAs[Long]("n_missing") == 0 && fresh.getAs[Long]("n_orphaned") == 0)
     // corpus grew: vectors the index has never seen
     val grown = VectorIndexStore.ivfStaleness(
-      norm(sfDirMid).withColumn("vec_id", col("vec_id") + 1), ivfDir).head
+      norm(sfDirMid).withColumn("vec_id", col("vec_id") + 1), ivfDir).head()
     assert(!grown.getAs[Boolean]("fresh"))
     assert(grown.getAs[Long]("n_missing") == 1 && grown.getAs[Long]("n_orphaned") == 1)
   }
@@ -136,7 +136,7 @@ class VectorIndexStoreSpec extends SparkSpec {
     VectorIndexStore.buildIvf(e.where(col("vec_id") < 350), dir)
     val n1 = VectorIndexStore.refreshIvf(e, dir, "r1")
     assert(n1 == e.count() - 350)
-    assert(VectorIndexStore.ivfStaleness(e, dir).head.getAs[Boolean]("fresh"))
+    assert(VectorIndexStore.ivfStaleness(e, dir).head().getAs[Boolean]("fresh"))
     // nothing missing -> a second refresh is a no-op (and writes no batch)
     val n2 = VectorIndexStore.refreshIvf(e, dir, "r2")
     assert(n2 == 0)
