@@ -3,6 +3,7 @@ package graft
 import java.time.{Instant, LocalDate}
 
 import graft.meta.{MetaStore, Model, PartitionModel, Planner, SmallFiles}
+import graft.meta.MetaStore.tableMetaEnc
 import graft.queue.{TaskEngines, TaskQueue}
 
 /** The engine façade — ties MetaStore, TaskQueue, Planner and the
@@ -165,7 +166,7 @@ final class Engine(
     * ([today-(lookback-1), today]), plus expire + orphan removal. */
   def runCycle(now: Instant, lookbackDays: Int = 30, targetFileSizeMb: Int = 512,
       chunkBy: String = "day", retentionDays: Int = 7): CycleResult = {
-    val tables = store.tables.collect().toSeq
+    val tables = store.rows[Model.TableMeta]("tables")
     val today = now.atZone(java.time.ZoneOffset.UTC).toLocalDate
     val from = today.minusDays((lookbackDays - 1).toLong)
     var opt = 0
@@ -208,7 +209,7 @@ final class Engine(
       targetBytes: Long): Option[Either[String, Map[String, String]]] =
     if (!graft.meta.IcebergRuntime.available) None
     else Some {
-      store.tables.collect()
+      store.rows[Model.TableMeta]("tables")
         .find(t => t.database == task.database && t.name == task.table)
         .flatMap(_.partitions.collectFirst {
           case f if f.isHidden && f.hidden.exists(_.`type` == "day") =>
@@ -261,7 +262,7 @@ final class Engine(
             case Model.TaskKind.ExpireSnapshots =>
               val days = task.input.get("retention_days").flatMap(_.toIntOption).getOrElse(7)
               val cutoff = java.sql.Timestamp.from(clock().minusSeconds(days.toLong * 86400))
-              val current = store.tables.collect()
+              val current = store.rows[Model.TableMeta]("tables")
                 .find(t => t.database == task.database && t.name == task.table)
                 .flatMap(_.currentSnapshotId)
               forwardCall(operators.IcebergCalls.expireSnapshots(

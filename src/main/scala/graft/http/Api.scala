@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.functions.{coalesce, col, count, explode, lit, map_keys, max, min, sum}
+import org.apache.spark.sql.functions.{coalesce, col, count, explode, lit, map_keys, max, sum}
 
 import graft.Engine
 import graft.meta.{MetaStore, Model, PartitionModel}
@@ -81,21 +81,18 @@ final class Api(store: MetaStore, engine: Engine,
       query: Map[String, Seq[String]]): (Int, String) =
     (method, segs) match {
       // -- iceberg (handler_iceberg.go) -------------------------------
-      // All metadata reads below filter/aggregate ON the Dataset and
-      // only collect the (bounded) response payload — never a whole
-      // metadata table to the driver; a deployment with 10^6 partitions
-      // or 10^4 tables stays executor-side until the final rows.
+      // The per-partition and per-file slices (`partitions`, `files`)
+      // are filtered/aggregated ON the Dataset and only the (bounded)
+      // response payload is collected — a deployment with 10^6
+      // partitions stays executor-side until the final rows. The
+      // control-plane slices (`tables`, `snapshots`: one row per table
+      // or commit) come from the store's driver copy (MetaStore.rows).
       case ("GET", "iceberg" :: "databases" :: Nil) =>
-        ok(arr(store.tables.select(col("database")).distinct()
-          .as[String](org.apache.spark.sql.Encoders.STRING)
-          .collect().sorted.toSeq.map(str)))
+        ok(arr(tableRows.map(_.database).distinct.sorted.map(str)))
       case ("GET", "iceberg" :: db :: "tables" :: Nil) =>
-        ok(arr(store.tables.filter(col("database") === db)
-          .select(col("name")).as[String](org.apache.spark.sql.Encoders.STRING)
-          .collect().sorted.toSeq.map(str)))
+        ok(arr(tableRows.filter(_.database == db).map(_.name).sorted.map(str)))
       case ("GET", "iceberg" :: db :: table :: Nil) =>
-        store.tables.filter(col("database") === db && col("name") === table)
-          .take(1).headOption match {
+        tableRow(db, table) match {
           case None => notFound(s"$db.$table")
           case Some(t) => ok(obj(
             "database" -> str(t.database), "table" -> str(t.name),
@@ -156,8 +153,7 @@ final class Api(store: MetaStore, engine: Engine,
 
       // -- browse (handler_browse.go) ---------------------------------
       case ("GET", "browse" :: db :: "tables" :: Nil) =>
-        ok(arr(store.tables.filter(col("database") === db)
-          .orderBy(col("name")).collect().toSeq.map(t => obj(
+        ok(arr(tableRows.filter(_.database == db).sortBy(_.name).map(t => obj(
             "name" -> str(t.name), "updatedAt" -> str(t.updatedAt.toString)))))
       case ("GET", "browse" :: db :: table :: Nil) =>
         // The q12 table-summary shape (Metadata.scala q12TableSummary):
@@ -199,8 +195,7 @@ final class Api(store: MetaStore, engine: Engine,
       // selection order (F9) like the reference's DataFileItem rows.
       case ("POST", "browse" :: db :: table :: "files" :: Nil) =>
         val filters = bind(partitionFilters(body))
-        store.tables.filter(col("database") === db && col("name") === table)
-          .take(1).headOption match {
+        tableRow(db, table) match {
           case None => notFound(s"$db.$table")
           case Some(t) =>
             val snapPred = t.currentSnapshotId
@@ -457,10 +452,17 @@ final class Api(store: MetaStore, engine: Engine,
       "needsOptimize" -> p.needsOptimize.toString))))
   }
 
+  private def tableRows: Seq[Model.TableMeta] =
+    store.rows[Model.TableMeta]("tables")(MetaStore.tableMetaEnc)
+
+  private def tableRow(db: String, table: String): Option[Model.TableMeta] =
+    tableRows.find(t => t.database == db && t.name == table)
+
   private def snapshotsJson(db: String, table: String): (Int, String) = {
-    val rows = store.snapshots
-      .filter(col("database") === db && col("table") === table)
-      .orderBy(col("snapshotId").desc).collect().toSeq
+    // newest first, sorted on the driver like partitionsJson
+    val rows = store.rows[Model.SnapshotMeta]("snapshots")(MetaStore.snapshotMetaEnc)
+      .filter(s => s.database == db && s.table == table)
+      .sortBy(_.snapshotId)(Ordering[Long].reverse)
     ok(arr(rows.map(s => obj(
       "snapshotId" -> num(s.snapshotId),
       "parentId" -> s.parentId.map(num).getOrElse("null"),
@@ -483,9 +485,7 @@ final class Api(store: MetaStore, engine: Engine,
             val live = files.toSeq
               .filter(x => x.isFile && x.getName.endsWith(".parquet"))
               .map(x => x.getName.stripSuffix(".parquet") -> x.getPath).toMap
-            // min(database) == distinct.sorted.headOption, one agg row.
-            val db = Option(store.tables.agg(min(col("database"))).head().getString(0))
-              .getOrElse("default")
+            val db = tableRows.map(_.database).minOption.getOrElse("default")
             f(db, live)
         }
     }

@@ -1,6 +1,8 @@
 package graft.meta
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 
 /** Parquet-backed metadata store — the Spark-native replacement for the
   * reference's MySQL cache (SURVEY.md §7.1 MetaStore; DDL under
@@ -14,10 +16,28 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SaveMode, Sp
   * DELETE+INSERT refresh pattern, service_refresh.go:111-199) —
   * format-level atomic per table, single-writer by design (the
   * reference is also a single process).
+  *
+  * Control-plane slices (one row per task, setting, table or commit:
+  * `tasks`, `settings`, `tables`, `snapshots`) are read and written
+  * whole from the driver through [[rows]] and [[put]], which keep one
+  * driver copy per slice. A copy is valid while the slice directory's
+  * listing — the sorted (name, length, mtime) of its entries — is the
+  * one it was read (or written) under. Every Spark write creates part
+  * files named with a fresh per-write UUID, so a listing never recurs:
+  * any other writer (a second MetaStore, the other JVM of `serve` /
+  * `work`, an Append, a distributed [[rewrite]]) changes it, and the
+  * next [[rows]] re-reads. `partitions` and `files` stay distributed
+  * Datasets — they are per-partition and per-file in scale.
   */
 final class MetaStore(val spark: SparkSession, val root: String) {
 
   def path(name: String): String = s"$root/$name"
+
+  private def fs: FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private val copies =
+    new java.util.concurrent.ConcurrentHashMap[String, MetaStore.Copy]()
 
   def write[T](name: String, ds: Dataset[T], mode: SaveMode = SaveMode.Overwrite): Unit =
     ds.write.mode(mode).parquet(path(name))
@@ -29,17 +49,24 @@ final class MetaStore(val spark: SparkSession, val root: String) {
     * so write the new content to a temp dir fully distributed, then swap
     * directories. Single-writer by design (like the reference's single
     * process), so the non-transactional swap window is fine. */
-  def rewrite[T](name: String, ds: Dataset[T]): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path(name))
-    val tmp = new org.apache.hadoop.fs.Path(path(name) + "__tmp")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def rewrite[T](name: String, ds: Dataset[T]): Unit = { promote(name, ds); () }
+
+  /** The [[rewrite]] body; returns the listing of the promoted content,
+    * taken in the temp dir before the swap (a rename keeps entry names,
+    * lengths and mtimes, so it equals the slice's listing afterwards
+    * unless another writer got in between). */
+  private def promote[T](name: String, ds: Dataset[T]): Option[MetaStore.Stamp] = {
+    val fs = this.fs
+    val target = new Path(path(name))
+    val tmp = new Path(path(name) + "__tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     ds.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val stamp = listing(tmp)
     // Crash-durable promotion: move the old slice ASIDE (rename, not
     // delete) before promoting tmp — a kill between the two renames
     // leaves both the old and new content on disk for manual recovery,
     // where delete-then-rename would lose the slice entirely.
-    val old = new org.apache.hadoop.fs.Path(path(name) + "__old")
+    val old = new Path(path(name) + "__old")
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(target) && !fs.rename(target, old))
       throw new java.io.IOException(s"could not move $target aside to $old")
@@ -47,13 +74,60 @@ final class MetaStore(val spark: SparkSession, val root: String) {
       throw new java.io.IOException(s"could not swap $tmp into $target " +
         s"(previous content preserved at $old)")
     fs.delete(old, true)
+    stamp
+  }
+
+  /** A directory's validity stamp: the sorted (name, length, mtime) of
+    * its entries; None when it does not exist. */
+  private def listing(dir: Path): Option[MetaStore.Stamp] =
+    try Some(fs.listStatus(dir).toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** A control-plane slice's rows: the driver copy while the slice's
+    * listing is unchanged, else one read (taken after the listing, so a
+    * write racing the read only costs the next call a re-read). A
+    * missing slice reads as empty. Safe under concurrent callers. */
+  def rows[T: Encoder](name: String): Seq[T] = {
+    val enc = implicitly[Encoder[T]]
+    listing(new Path(path(name))) match {
+      case None => Seq.empty
+      case Some(stamp) =>
+        val copy = copies.get(name)
+        if (copy != null && copy.stamp == stamp && copy.cls == enc.clsTag.runtimeClass)
+          copy.rows.asInstanceOf[Seq[T]]
+        else {
+          val fresh = scala.collection.immutable.ArraySeq.unsafeWrapArray(
+            spark.read.schema(enc.schema).parquet(path(name)).as[T].collect())
+          copies.put(name, MetaStore.Copy(stamp, enc.clsTag.runtimeClass, fresh))
+          fresh
+        }
+    }
+  }
+
+  /** Replace a control-plane slice with `rows` (one part file, through
+    * the rename-swap [[rewrite]]) and seed its driver copy. The seeded
+    * rows pass through the encoder's serializer and deserializer, so
+    * they equal what a fresh read returns (timestamps truncated to
+    * microseconds). Serialized per store: the swap's temp dir is
+    * shared by every writer of a slice. */
+  def put[T: Encoder](name: String, rows: Seq[T]): Unit = synchronized {
+    val enc = encoderFor(implicitly[Encoder[T]])
+    promote(name, spark.createDataset(rows).coalesce(1)) match {
+      case None => copies.remove(name)
+      case Some(stamp) =>
+        val ser = enc.createSerializer()
+        val de = enc.resolveAndBind().createDeserializer()
+        copies.put(name, MetaStore.Copy(stamp, enc.clsTag.runtimeClass,
+          rows.map(r => de(ser(r))).toVector))
+    }
+    ()
   }
 
   def exists(name: String): Boolean = {
     // Hadoop FS, not java.io.File: a non-local root (s3a://, hdfs://)
     // would otherwise read every slice as silently empty.
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    fs.exists(new Path(path(name)))
   }
 
   /** Read a metadata table; empty typed Dataset when absent. */
@@ -72,18 +146,18 @@ final class MetaStore(val spark: SparkSession, val root: String) {
   def partitions: Dataset[Model.PartitionStat] = read[Model.PartitionStat]("partitions")(MetaStore.partitionStatEnc)
   def snapshots: Dataset[Model.SnapshotMeta] = read[Model.SnapshotMeta]("snapshots")(MetaStore.snapshotMetaEnc)
   def files: Dataset[Model.FileMeta] = read[Model.FileMeta]("files")(MetaStore.fileMetaEnc)
-  def tasks: Dataset[Model.TaskRow] = read[Model.TaskRow]("tasks")(MetaStore.taskRowEnc)
-  def settings: Dataset[Model.Setting] = read[Model.Setting]("settings")(MetaStore.settingEnc)
   def columnStats: Dataset[Model.ColumnStat] = read[Model.ColumnStat]("column_stats")(MetaStore.columnStatEnc)
 
   /** Setting lookup with reference defaults (service_settings.go:15-23,
-    * GetSetting go:50-61). Settings are read *at use time*, not cached —
-    * the reference re-queries the settings table on every claim/scoring
-    * call so operators pick up changes without a restart. */
-  def setting(key: String, default: String): String = {
-    if (!exists("settings")) return default
-    settings.filter(_.key == key).take(1).headOption.map(_.value).getOrElse(default)
-  }
+    * GetSetting go:50-61). Settings are read *at use time* — the
+    * reference re-queries the settings table on every claim/scoring
+    * call so operators pick up changes without a restart. The lookup
+    * is a listing check against the slice's driver copy ([[rows]]): a
+    * changed settings row, from any writer, is re-read; an unchanged
+    * slice costs no Spark job. */
+  def setting(key: String, default: String): String =
+    rows[Model.Setting]("settings")(MetaStore.settingEnc)
+      .find(_.key == key).map(_.value).getOrElse(default)
 
   /** GetIntSetting (service_settings.go:79-96): absent → default,
     * unparsable → error. */
@@ -100,18 +174,23 @@ final class MetaStore(val spark: SparkSession, val root: String) {
       throw new IllegalArgumentException(s"could not parse setting $key as int64: $raw"))
   }
 
-  /** SetSetting upsert (service_settings.go:63-77). The settings table
-    * is a handful of rows — the read-modify-write collect is fine. */
+  /** SetSetting upsert (service_settings.go:63-77): one write of the
+    * handful-row slice. */
   def setSetting(key: String, value: String,
-      now: java.time.Instant = java.time.Instant.now()): Unit = {
-    val ts = java.sql.Timestamp.from(now)
-    val rows = if (exists("settings")) settings.collect().toSeq else Seq.empty
-    val updated = rows.filterNot(_.key == key) :+ Model.Setting(key, value, ts)
-    write("settings", spark.createDataset(updated)(MetaStore.settingEnc))
+      now: java.time.Instant = java.time.Instant.now()): Unit = synchronized {
+    import MetaStore.settingEnc
+    put("settings", rows[Model.Setting]("settings").filterNot(_.key == key) :+
+      Model.Setting(key, value, java.sql.Timestamp.from(now)))
   }
 }
 
 object MetaStore {
+  /** A slice directory's sorted (name, length, mtime) entries. */
+  type Stamp = Seq[(String, Long, Long)]
+
+  /** One slice's driver copy and the listing it is valid under. */
+  private final case class Copy(stamp: Stamp, cls: Class[_], rows: Seq[Any])
+
   implicit val tableMetaEnc: Encoder[Model.TableMeta] = Encoders.product[Model.TableMeta]
   implicit val partitionStatEnc: Encoder[Model.PartitionStat] = Encoders.product[Model.PartitionStat]
   implicit val snapshotMetaEnc: Encoder[Model.SnapshotMeta] = Encoders.product[Model.SnapshotMeta]

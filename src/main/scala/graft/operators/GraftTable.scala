@@ -278,7 +278,8 @@ object GraftTable {
     val (fs, metaP) = StoreIO.hadoopFs(spark, s"${indexPath(dir)}/_meta.json")
     if (!fs.exists(metaP)) return scan(spark, dir, man)
     val (qualifying, unknown) =
-      SkippingIndex.qualify(spark, indexPath(dir), ranges, equalities, nullness)
+      SkippingIndex.qualify(spark, indexPath(dir), ranges, equalities, nullness,
+        pinnedSchema(man.schemaJson))
     // distinct: duplicate stat rows (e.g. a file statted twice by
     // overlapping refreshes) must never read a file's data twice —
     // the transparent scan is already set-based (SkippingScan)

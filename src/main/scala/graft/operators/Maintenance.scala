@@ -259,14 +259,14 @@ object Maintenance {
 
     // Snapshot lineage is control-plane metadata (one row per commit) —
     // the id/parent lookups stay driver-side by design.
-    val mine = store.snapshots.filter(s => s.database == database && s.table == table)
-      .map(_.snapshotId).collect()
+    val mine = store.rows[Model.SnapshotMeta]("snapshots")
+      .filter(s => s.database == database && s.table == table).map(_.snapshotId)
     // Never below the clock's epoch-millis: max(live)+1 alone can
     // REUSE the id of an expired snapshot (expire drops rows, the max
     // shrinks) and corrupt anything still referencing the old id —
     // table formats never reuse snapshot ids.
     val newId = math.max((mine :+ 0L).max + 1, now.toEpochMilli)
-    val parent = store.tables.collect()
+    val parent = store.rows[Model.TableMeta]("tables")
       .find(t => t.database == database && t.name == table)
       .flatMap(_.currentSnapshotId)
 
@@ -439,26 +439,23 @@ object Maintenance {
   /** M2: expire snapshots older than `olderThan`, preserving the whole
     * ancestor chain of `currentId` (keep-chain semantics, SURVEY.md
     * §7.4 #2). Snapshot lineage is control-plane metadata (small) — the
-    * chain walk collects (id, parent) pairs only; the row deletes stay
-    * in Spark. */
+    * chain walk and the slice rewrite run on the driver from one read
+    * of the store's copy; the manifest row deletes stay in Spark. */
   def expireSnapshots(store: MetaStore, database: String, table: String,
       currentId: Long, olderThan: Timestamp): ExpireResult = {
-    import store.spark.implicits._
     import MetaStore._
 
-    val snaps = store.snapshots.filter(s => s.database == database && s.table == table)
-    val lineage = snaps.map(s => (s.snapshotId, s.parentId)).collect().toMap
+    val (mine, others) = store.rows[Model.SnapshotMeta]("snapshots")
+      .partition(s => s.database == database && s.table == table)
+    val lineage = mine.map(s => (s.snapshotId, s.parentId)).toMap
     val keepChain = Iterator.iterate(Option(currentId)) {
       case Some(id) => lineage.get(id).flatten
       case None => None
     }.takeWhile(_.isDefined).map(_.get).toSet
-
-    val all = store.snapshots.collect().toSeq
-    val (mine, others) = all.partition(s => s.database == database && s.table == table)
     val (kept, expired) = mine.partition(s =>
       keepChain.contains(s.snapshotId) || !s.committedAt.before(olderThan))
 
-    store.write("snapshots", store.spark.createDataset(others ++ kept))
+    store.put("snapshots", others ++ kept)
 
     // Drop manifest rows of expired snapshots (data files referenced
     // only by expired snapshots become orphans for M3). The expired-id
@@ -552,19 +549,17 @@ object Maintenance {
     import store.spark.implicits._
     import MetaStore._
 
-    val snapExists = store.snapshots
-      .filter(s => s.database == database && s.table == table && s.snapshotId == snapshotId)
-      .take(1).nonEmpty
+    val snapExists = store.rows[Model.SnapshotMeta]("snapshots")
+      .exists(s => s.database == database && s.table == table && s.snapshotId == snapshotId)
     require(snapExists, s"unknown snapshot $snapshotId for $database.$table")
 
     // Move the pointer.
-    val tables = store.tables.collect().toSeq.map { t =>
+    store.put("tables", store.rows[Model.TableMeta]("tables").map { t =>
       if (t.database == database && t.name == table)
         t.copy(currentSnapshotId = Some(snapshotId),
           updatedAt = Timestamp.from(now))
       else t
-    }
-    store.write("tables", store.spark.createDataset(tables))
+    })
 
     // Rebuild partition stats from the snapshot's file manifest.
     val manifest = store.files.filter(f =>

@@ -23,12 +23,15 @@ object Refresh {
   /** Describe one live parquet table into a `tables` row. The snapshot
     * pointer of an existing row is PRESERVED — refresh rebuilds the
     * description, it does not abandon manifest lineage (resetting it
-    * broke the next expire/commit on manifest-tracked tables). */
+    * broke the next expire/commit on manifest-tracked tables). The
+    * schema comes from the memoized footer inference
+    * ([[graft.sources.Tables.schemaOf]]): a live table whose files are
+    * unchanged is described without a Spark job. */
   private def describeRow(store: MetaStore, database: String, name: String,
       dataPath: String, now: Instant,
       existing: Seq[Model.TableMeta]): Model.TableMeta = {
-    val df = store.spark.read.parquet(dataPath)
-    val columns = df.schema.fields.toSeq.map(f =>
+    val schema = graft.sources.Tables.schemaOf(store.spark, dataPath)
+    val columns = schema.fields.toSeq.map(f =>
       Model.TableColumn(f.name, f.dataType.simpleString))
     val prior = existing.find(t => t.database == database && t.name == name)
     Model.TableMeta(database, name, columns,
@@ -40,13 +43,11 @@ object Refresh {
   /** Describe + refresh one live parquet table into the store. */
   def refreshTable(store: MetaStore, database: String, name: String,
       dataPath: String, now: Instant): Unit = {
-    val spark = store.spark
-    import spark.implicits._
     import MetaStore._
-    val existing = store.tables.collect().toSeq
+    val existing = store.rows[Model.TableMeta]("tables")
     val row = describeRow(store, database, name, dataPath, now, existing)
-    store.write("tables", spark.createDataset(
-      existing.filterNot(t => t.database == database && t.name == name) :+ row))
+    store.put("tables",
+      existing.filterNot(t => t.database == database && t.name == name) :+ row)
   }
 
   /** Full refresh: refresh every live table, then cascade-delete stale
@@ -58,31 +59,25 @@ object Refresh {
     import spark.implicits._
     import MetaStore._
 
-    // one read + one write for the whole batch, not a collect/overwrite
+    // one read + one write for the whole batch, not a read/overwrite
     // cycle per table
-    val existing = store.tables.collect().toSeq
+    val existing = store.rows[Model.TableMeta]("tables")
     val refreshed = liveTables.toSeq.sortBy(_._1).map { case (name, path) =>
       describeRow(store, database, name, path, now, existing)
     }
-    val untouched = existing.filterNot(t =>
-      t.database == database && liveTables.contains(t.name))
-    store.write("tables", spark.createDataset(untouched ++ refreshed))
-
     // J1 stale diff: stored minus live → cascade delete. The `tables`
-    // slice is control-plane-small (one row per table) so the stale list
-    // itself may collect; the dependent slices — `files` especially, which
-    // is millions–billions of rows at 100 TB — are deleted as a
-    // broadcast anti-join + distributed rewrite, never on the driver.
-    val live = liveTables.keySet
-    val stale = store.tables.collect().toSeq
-      .filter(t => t.database == database && !live.contains(t.name))
+    // slice is control-plane-small (one row per table), so the stale
+    // list is computed on the driver and leaves with the same write;
+    // the dependent slices — `files` especially, which is
+    // millions–billions of rows at 100 TB — are deleted as a broadcast
+    // anti-join + distributed rewrite.
+    val (mine, others) = existing.partition(_.database == database)
+    val stale = mine.filterNot(t => liveTables.contains(t.name))
       .map(t => (t.database, t.name))
+    store.put("tables", others ++ refreshed)
     if (stale.nonEmpty) {
       import org.apache.spark.sql.functions.broadcast
-      val staleSet = stale.toSet
       val staleDf = spark.createDataset(stale).toDF("database", "table")
-      store.write("tables", spark.createDataset(
-        store.tables.collect().toSeq.filterNot(t => staleSet((t.database, t.name)))))
       if (store.exists("partitions"))
         store.rewrite("partitions", store.partitions.toDF()
           .join(broadcast(staleDf), Seq("database", "table"), "left_anti")
@@ -115,7 +110,7 @@ object Refresh {
     import MetaStore._
     val (fileSizes, recordCount) = liveFootprint(store, dataPath)
     val effective = SmallFiles.fromSettings(store, cfg)
-    val snapshotId = store.tables.collect()
+    val snapshotId = store.rows[Model.TableMeta]("tables")
       .find(t => t.database == database && t.name == table)
       .flatMap(_.currentSnapshotId).getOrElse(0L)
     val fresh = Seq(Model.PartitionStat(database, table, Map.empty, 0,
@@ -140,9 +135,8 @@ object Refresh {
   def refreshSnapshotsLive(store: MetaStore, database: String, table: String,
       dataPath: String, now: Instant): Seq[Model.SnapshotMeta] = {
     val spark = store.spark
-    import spark.implicits._
     import MetaStore._
-    val snapshotId = store.tables.collect()
+    val snapshotId = store.rows[Model.TableMeta]("tables")
       .find(t => t.database == database && t.name == table)
       .flatMap(_.currentSnapshotId).getOrElse(1L)
     val mtime = {
@@ -153,12 +147,8 @@ object Refresh {
     }
     val fresh = Seq(Model.SnapshotMeta(database, table, Timestamp.from(mtime),
       snapshotId, None, "append", dataPath, Map.empty))
-    val keep =
-      if (store.exists("snapshots"))
-        store.snapshots.collect().toSeq
-          .filterNot(s => s.database == database && s.table == table)
-      else Seq.empty
-    store.write("snapshots", spark.createDataset(keep ++ fresh))
+    store.put("snapshots", store.rows[Model.SnapshotMeta]("snapshots")
+      .filterNot(s => s.database == database && s.table == table) ++ fresh)
     fresh
   }
 
@@ -174,7 +164,8 @@ object Refresh {
 
   /** File sizes + row count of a live parquet table (file or directory
     * of part files). The listing is control-plane-small (one table's
-    * data files); the row count is a distributed parquet count. */
+    * data files); the row count is a distributed parquet count, read
+    * under the memoized schema so it starts no inference job. */
   private def liveFootprint(store: MetaStore, dataPath: String): (Seq[Long], Long) = {
     val spark = store.spark
     val p = new org.apache.hadoop.fs.Path(dataPath)
@@ -186,7 +177,8 @@ object Refresh {
             !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
           .map(_.getLen)
       else Seq(status.getLen)
-    (sizes, spark.read.parquet(dataPath).count())
+    (sizes, spark.read.schema(graft.sources.Tables.schemaOf(spark, dataPath))
+      .parquet(dataPath).count())
   }
 
   /** Rebuild the `partitions` slice of one table from a `files`-shaped

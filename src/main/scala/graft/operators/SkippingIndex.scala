@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A FILE-GRAIN zone-map index: per-file min/max/value-count stats for
   * chosen columns, persisted once and consulted at read time to scan
@@ -236,10 +237,13 @@ object SkippingIndex {
   /** The files a conjunction of ranges may match, per the index: zones
     * intersecting every range, plus every live file the index has no
     * row for. NULL zones (all-NULL column in that file) drop out of the
-    * comparison — a range predicate cannot match NULL. */
+    * comparison — a range predicate cannot match NULL. `schema` is the
+    * table's schema when the caller holds one (a GraftTable commit's
+    * pin); without it a bloom probe looks its column's type up through
+    * [[graft.sources.Tables.schemaOf]]. */
   private[graft] def qualify(spark: SparkSession, dir: String,
       ranges: Seq[ColumnRange], equalities: Seq[ColumnEquals] = Nil,
-      nullness: Seq[ColumnNullness] = Nil)
+      nullness: Seq[ColumnNullness] = Nil, schema: Option[StructType] = None)
       : (Seq[String], Seq[String]) = {
     val m = meta(spark, dir)
     ranges.foreach(r => require(m.cols.contains(r.column),
@@ -270,7 +274,8 @@ object SkippingIndex {
             col(s"max_${e.column}") >= lit(v)).reduce(_ || _))
       val bloom =
         if (!m.bloomCols.contains(e.column)) None
-        else literalHashes(spark, m.table, e.column, e.values).map { hashes =>
+        else literalHashes(spark, columnType(spark, m.table, e.column, schema),
+            e.values).map { hashes =>
           // None = an uncastable probe value: no bloom verdict (the
           // zone test, if any, still prunes; the exact predicate is
           // re-applied either way)
@@ -306,33 +311,40 @@ object SkippingIndex {
   private def normPath(s: String): String =
     new org.apache.hadoop.fs.Path(s).toUri.toString
 
-  /** xxhash64 of each probe literal, cast to the table column's actual
-    * type — an Int literal probing a BIGINT column must hash the LONG,
-    * or no build-time bit would ever match. One driver-local one-row
-    * job (LocalTableScan over `range(1)`), no table data touched.
+  private def columnType(spark: SparkSession, tablePath: String, column: String,
+      schema: Option[StructType]): DataType =
+    schema.getOrElse(graft.sources.Tables.schemaOf(spark, tablePath))
+      .find(_.name == column)
+      .getOrElse(throw new IllegalArgumentException(
+        s"column '$column' not in $tablePath")).dataType
+
+  /** xxhash64 of each probe literal, cast to the table column's type
+    * `dt` — an Int literal probing a BIGINT column must hash the LONG,
+    * or no build-time bit would ever match. The `Cast` (session time
+    * zone and ANSI mode, as in a query) and the `XxHash64` (the seed
+    * `functions.xxhash64` uses) are evaluated on the driver: no job,
+    * no table data touched. Under ANSI an uncastable value throws.
     *
     * Returns None when ANY non-null probe value's cast NULLs out
-    * (e.g. "abc" probing an INT column): xxhash64(NULL) is the bare
-    * seed, and a seed-bit miss would silently prune files the
+    * (e.g. "abc" probing an INT column, non-ANSI): xxhash64(NULL) is
+    * the bare seed, and a seed-bit miss would silently prune files the
     * re-applied, engine-coerced predicate could still match — the
     * caller must fall back to the zone-only verdict. NULL probe
     * values themselves are dropped: equality never matches NULL, so
     * they cannot widen the file set. */
-  private def literalHashes(spark: SparkSession, tablePath: String,
-      column: String, values: Seq[Any]): Option[Seq[Long]] = {
-    val dt = graft.sources.Tables.schemaOf(spark, tablePath)
-      .find(_.name == column)
-      .getOrElse(throw new IllegalArgumentException(
-        s"column '$column' not in $tablePath")).dataType
-    val probes = values.filter(_ != null)
-    if (probes.isEmpty) return Some(Nil) // isin(NULL…) matches nothing
-    val row = spark.range(1)
-      .select(probes.flatMap(v =>
-        Seq(xxhash64(lit(v).cast(dt)), lit(v).cast(dt).isNull)): _*)
-      .collect().head
-    val (hashes, nulled) = probes.indices
-      .map(i => (row.getLong(2 * i), row.getBoolean(2 * i + 1))).unzip
-    if (nulled.exists(identity)) None else Some(hashes)
+  private[operators] def literalHashes(spark: SparkSession, dt: DataType,
+      values: Seq[Any]): Option[Seq[Long]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal, XxHash64}
+    val conf = spark.sessionState.conf
+    val cast = values.filter(_ != null).map { v =>
+      val c = Cast(Literal(v), dt, Some(conf.sessionLocalTimeZone),
+        EvalMode.fromSQLConf(conf))
+      require(c.checkInputDataTypes().isSuccess,
+        s"cannot cast probe value $v (${c.child.dataType.simpleString}) to ${dt.simpleString}")
+      c.eval()
+    }
+    if (cast.contains(null)) None
+    else Some(cast.map(v => XxHash64(Seq(Literal(v, dt)), 42L).eval().asInstanceOf[Long]))
   }
 
   /** The table filtered by `ranges`, reading only files the index

@@ -3,13 +3,12 @@ package graft.queue
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.SaveMode
-
 import graft.meta.{MetaStore, Model}
 import graft.meta.Model.{TaskRow, TaskStatus}
 
-/** Maintenance task queue over MetaStore.tasks — re-expression of the
-  * reference's MySQL queue (service_task_queue.go):
+/** Maintenance task queue over the MetaStore `tasks` slice —
+  * re-expression of the reference's MySQL queue
+  * (service_task_queue.go):
   *
   *  - enqueue: insert queued row (go:52-69)
   *  - claim: running-count gate < concurrency, oldest-queued first,
@@ -22,24 +21,33 @@ import graft.meta.Model.{TaskRow, TaskStatus}
   *  - counts: GROUP BY status over {queued, running} (go:411-443)
   *
   * State lives in the parquet `tasks` table; mutual exclusion lives in
-  * this object (in-JVM lock). Mutations rewrite the whole table — tasks
-  * are control-plane metadata (thousands of rows, not data-plane scale).
+  * this object (in-JVM lock) plus an advisory file lock across JVMs.
+  * Mutations rewrite the whole table — tasks are control-plane metadata
+  * (thousands of rows, not data-plane scale). Reads come from the
+  * store's driver copy ([[MetaStore.rows]]), checked against the
+  * slice's file listing on every call: a write by another queue,
+  * store or process changes the listing and is re-read; this queue's
+  * own writes seed the copy ([[MetaStore.put]]), so an unchanged queue
+  * is read without a Spark job and an enqueue is one write.
+  *
+  * Ids are never reused. A new id is one above both the live maximum
+  * and the `task_id_seq` setting, the high-water mark. The mark is
+  * written only by [[flush]], before its rewrite, when it removes the
+  * highest live id — the one moment the live maximum would fall.
   */
 final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now()) {
 
-  import store.spark.implicits._
   import MetaStore.taskRowEnc
 
   private val lock = new Object
   private def now(): Timestamp = Timestamp.from(clock())
 
-  private def all(): Seq[TaskRow] = store.tasks.collect().toSeq
+  private def all(): Seq[TaskRow] = store.rows[TaskRow]("tasks")
 
-  // rename-swap write (MetaStore.rewrite): a plain Overwrite deletes
-  // the part files before rewriting them, so any concurrent reader sees
-  // an empty or partial queue mid-save.
-  private def save(rows: Seq[TaskRow]): Unit =
-    store.rewrite("tasks", store.spark.createDataset(rows))
+  // rename-swap write (MetaStore.put): a plain Overwrite deletes the
+  // part files before rewriting them, so any concurrent reader sees an
+  // empty or partial queue mid-save.
+  private def save(rows: Seq[TaskRow]): Unit = store.put("tasks", rows)
 
   // Cross-process mutual exclusion for the shipped CLI surface: `serve`
   // and `work` run as separate JVMs against the same store, where the
@@ -104,13 +112,12 @@ final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now
     * high-water mark — ids are never reused after flush() deletes
     * terminal rows (the reference's auto-increment never reuses either;
     * a recycled id would let a stale status poll or late procedure
-    * callback hit an unrelated task). */
-  private def nextId(rows: Seq[TaskRow]): Long = {
-    val id = math.max(rows.map(_.id).maxOption.getOrElse(0L),
-      store.longSetting("task_id_seq", 0L)) + 1
-    store.setSetting("task_id_seq", id.toString, clock())
-    id
-  }
+    * callback hit an unrelated task). Allocation writes nothing: the
+    * live max covers every id until [[flush]] removes it. */
+  private def nextId(rows: Seq[TaskRow]): Long =
+    math.max(rows.map(_.id).maxOption.getOrElse(0L), highWater()) + 1
+
+  private def highWater(): Long = store.longSetting("task_id_seq", 0L)
 
   def enqueue(database: String, table: String, kind: String, engine: String,
       input: Map[String, String]): Long = lock.synchronized { withProcessLock {
@@ -272,7 +279,12 @@ final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now
     val (gone, keep) = rows.partition(t =>
       (t.status == TaskStatus.Success || t.status == TaskStatus.Error) &&
         database.forall(_ == t.database))
-    save(keep)
+    // the highest id leaves the table: persist it first, so a crash
+    // between the two writes can only leave the mark too high
+    val top = rows.map(_.id).maxOption.getOrElse(0L)
+    if (gone.exists(_.id == top) && top > highWater())
+      store.setSetting("task_id_seq", top.toString, clock())
+    if (gone.nonEmpty) save(keep)
     gone.size.toLong
   } }
 
@@ -286,11 +298,9 @@ final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now
     * the reference adds `WHERE database = ?` to the same GROUP BY
     * (service_task_queue.go:411-443). */
   def counts(database: Option[String]): Map[String, Long] = lock.synchronized { withProcessLock {
-    import org.apache.spark.sql.functions._
-    database.foldLeft(store.tasks.toDF())((df, db) => df.filter(col("database") === db))
-      .filter(col("status").isin(TaskStatus.Queued, TaskStatus.Running))
-      .groupBy(col("status")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    all().filter(t => database.forall(_ == t.database) &&
+        (t.status == TaskStatus.Queued || t.status == TaskStatus.Running))
+      .groupBy(_.status).map { case (s, ts) => s -> ts.size.toLong }
   } }
 
   /** Paginated list + total (A5, service_task_queue.go:469-507). */
@@ -300,7 +310,8 @@ final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now
   /** The reference's full filter surface (service_task_queue.go:445-535):
     * optional database/table equality, kind/status IN-lists, started_at
     * DESC, limit defaulting to 20 when non-positive, offset clamped to
-    * ≥0. Total counts the filtered set before pagination. */
+    * ≥0 (offset + limit saturates at Int.MaxValue). Total counts the
+    * filtered set before pagination. */
   def list(database: Option[String], table: Option[String], kinds: Seq[String],
       statuses: Seq[String], limit: Int, offset: Int): (Seq[TaskRow], Long) =
     lock.synchronized { withProcessLock {
@@ -312,6 +323,7 @@ final class TaskQueue(store: MetaStore, clock: () => Instant = () => Instant.now
           (kinds.isEmpty || kinds.contains(t.kind)) &&
           (statuses.isEmpty || statuses.contains(t.status)))
         .sortBy(t => (-t.startedAt.getTime, -t.id))
-      (filtered.slice(effOffset, effOffset + effLimit), filtered.size.toLong)
+      val end = math.min(effOffset.toLong + effLimit, Int.MaxValue.toLong).toInt
+      (filtered.slice(effOffset, end), filtered.size.toLong)
     } }
 }

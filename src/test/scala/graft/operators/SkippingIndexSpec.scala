@@ -400,6 +400,30 @@ class SkippingIndexSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", "true")
   }
 
+  test("literal hashes are computed on the driver and equal the query's xxhash64") {
+    import org.apache.spark.sql.types._
+    val cases: Seq[(Any, DataType)] = Seq(
+      (7, LongType),
+      ("abc", StringType),
+      (java.sql.Date.valueOf("2024-01-05"), DateType),
+      ("2024-01-05", DateType),
+      (java.sql.Timestamp.valueOf("2024-01-05 10:11:12.345678"), TimestampType),
+      ("2024-01-05 10:11:12", TimestampType),
+      (BigDecimal("12.34"), DecimalType(12, 2)))
+    cases.foreach { case (v, dt) =>
+      val job = spark.range(1).select(xxhash64(lit(v).cast(dt))).head().getLong(0)
+      var got: Option[Seq[Long]] = None
+      assert(jobsDuring { got = literalHashes(spark, dt, Seq(v, null)) } == 0)
+      assert(got.contains(Seq(job)), s"$v as $dt")
+    }
+    // a NULL-ing cast still withholds the bloom verdict (non-ANSI);
+    // under ANSI it throws, like the query would
+    intercept[Exception](literalHashes(spark, IntegerType, Seq("abc")))
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(literalHashes(spark, IntegerType, Seq(1, "abc")).isEmpty)
+    finally spark.conf.set("spark.sql.ansi.enabled", "true")
+  }
+
   test("unindexed predicate columns are rejected with the indexed set named") {
     val root = tmp("skip-reject")
     val table = clustered(root)

@@ -158,4 +158,72 @@ class TaskQueueSpec extends SparkSpec {
     assert(q.flush(Some("db1")) == 1L)
     assert(q.list(Seq.empty, 100, 0)._2 == 2L)
   }
+
+  test("list pagination saturates offset + limit instead of overflowing") {
+    val q = newQueue()
+    val a = q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+    q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+    // newest first: offset 1 skips the second task, leaving the first
+    val (rows, total) = q.list(Seq.empty, Int.MaxValue, 1)
+    assert(total == 2L)
+    assert(rows.map(_.id) == Seq(a))
+    assert(q.list(Seq.empty, Int.MaxValue, Int.MaxValue)._1.isEmpty)
+  }
+
+  test("two queues over two stores on one root interleave and agree") {
+    val root = Files.createTempDirectory("queue-two").toString
+    val tick = new AtomicLong(0)
+    val clock = () => Instant.parse("2026-01-01T00:00:00Z").plusSeconds(tick.incrementAndGet())
+    val q1 = new TaskQueue(new MetaStore(spark, root), clock)
+    val q2 = new TaskQueue(new MetaStore(spark, root), clock)
+    try {
+      val a = q1.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+      val b = q2.enqueue("db", "t", Model.TaskKind.ExpireSnapshots, "spark", Map.empty)
+      assert(b == a + 1)
+      assert(q2.claim(1).map(_.id).contains(a)) // oldest first, across stores
+      assert(q1.claim(1).isEmpty)               // q1 sees q2's running row
+      assert(q1.counts() == Map(Model.TaskStatus.Running -> 1L, Model.TaskStatus.Queued -> 1L))
+      assert(q1.complete(a, Map("n" -> "1"), None))
+      assert(!q2.complete(a, Map.empty, None))  // q2 sees q1's completion
+      assert(q2.counts() == Map(Model.TaskStatus.Queued -> 1L))
+      assert(q2.claim(1).map(_.id).contains(b))
+      assert(q2.complete(b, Map.empty, Some("boom")))
+      val c = q1.retryAuto(b)
+      assert(c.contains(b + 1))
+      assert(q1.list(Seq.empty, 10, 0) == q2.list(Seq.empty, 10, 0))
+      assert(q2.counts(Some("db")) == q1.counts(Some("db")))
+      assert(q2.flush() == 2L)
+      assert(q1.list(Seq.empty, 10, 0)._1.map(_.id) == c.toSeq)
+    } finally { q1.close(); q2.close() }
+  }
+
+  test("after flush a fresh queue allocates above the flushed maximum; allocation writes no setting") {
+    val root = Files.createTempDirectory("queue-hwm").toString
+    val q = new TaskQueue(new MetaStore(spark, root))
+    val a = q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+    val b = q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "settings")))
+    // removing a lower id leaves the live maximum in place: no mark
+    q.claim(1); q.complete(a, Map.empty, None)
+    assert(q.flush() == 1L)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "settings")))
+    // removing the highest id persists it first
+    q.claim(1); q.complete(b, Map.empty, None)
+    assert(q.flush() == 1L)
+    q.close()
+    val fresh = new TaskQueue(new MetaStore(spark, root))
+    try {
+      val c = fresh.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+      assert(c == b + 1, s"id $c after flushing up to $b")
+    } finally fresh.close()
+  }
+
+  test("a repeat enqueue starts exactly one Spark job") {
+    val q = newQueue()
+    q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
+    assert(jobsDuring {
+      q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty); ()
+    } == 1)
+    assert(jobsDuring { q.counts(); q.list(Seq.empty, 10, 0); () } == 0)
+  }
 }
