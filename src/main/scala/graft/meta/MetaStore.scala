@@ -1,8 +1,11 @@
 package graft.meta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 
 /** Parquet-backed metadata store — the Spark-native replacement for the
   * reference's MySQL cache (SURVEY.md §7.1 MetaStore; DDL under
@@ -20,14 +23,17 @@ import org.apache.spark.sql.catalyst.encoders.encoderFor
   * Control-plane slices (one row per task, setting, table or commit:
   * `tasks`, `settings`, `tables`, `snapshots`) are read and written
   * whole from the driver through [[rows]] and [[put]], which keep one
-  * driver copy per slice. A copy is valid while the slice directory's
-  * listing — the sorted (name, length, mtime) of its entries — is the
-  * one it was read (or written) under. Every Spark write creates part
-  * files named with a fresh per-write UUID, so a listing never recurs:
-  * any other writer (a second MetaStore, the other JVM of `serve` /
-  * `work`, an Append, a distributed [[rewrite]]) changes it, and the
-  * next [[rows]] re-reads. `partitions` and `files` stay distributed
-  * Datasets — they are per-partition and per-file in scale.
+  * driver copy per slice. [[put]] writes its one Parquet file on the
+  * driver, with Spark's own Parquet writer and no Spark job. A copy is
+  * valid while the slice directory's listing — the sorted (name,
+  * length, mtime) of its entries — is the one it was read (or written)
+  * under. Every Spark write, the driver write of [[put]] included,
+  * creates part files named with a fresh per-write UUID, so a listing
+  * never recurs: any other writer (a second MetaStore, the other JVM of
+  * `serve` / `work`, an Append, a distributed [[rewrite]]) changes it,
+  * and the next [[rows]] re-reads. `partitions` and `files` stay
+  * distributed Datasets — they are per-partition and per-file in scale,
+  * so [[write]] and [[rewrite]] stay Spark jobs.
   */
 final class MetaStore(val spark: SparkSession, val root: String) {
 
@@ -49,18 +55,21 @@ final class MetaStore(val spark: SparkSession, val root: String) {
     * so write the new content to a temp dir fully distributed, then swap
     * directories. Single-writer by design (like the reference's single
     * process), so the non-transactional swap window is fine. */
-  def rewrite[T](name: String, ds: Dataset[T]): Unit = { promote(name, ds); () }
+  def rewrite[T](name: String, ds: Dataset[T]): Unit = {
+    promote(name)(tmp => ds.write.mode(SaveMode.Overwrite).parquet(tmp.toString)); ()
+  }
 
-  /** The [[rewrite]] body; returns the listing of the promoted content,
-    * taken in the temp dir before the swap (a rename keeps entry names,
-    * lengths and mtimes, so it equals the slice's listing afterwards
-    * unless another writer got in between). */
-  private def promote[T](name: String, ds: Dataset[T]): Option[MetaStore.Stamp] = {
+  /** The swap body of [[rewrite]] and [[put]]: `writeTo` fills a fresh
+    * temp dir, which then replaces the slice. Returns the listing of
+    * the promoted content, taken in the temp dir before the swap (a
+    * rename keeps entry names, lengths and mtimes, so it equals the
+    * slice's listing afterwards unless another writer got in between). */
+  private def promote(name: String)(writeTo: Path => Unit): Option[MetaStore.Stamp] = {
     val fs = this.fs
     val target = new Path(path(name))
     val tmp = new Path(path(name) + "__tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    ds.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    writeTo(tmp)
     val stamp = listing(tmp)
     // Crash-durable promotion: move the old slice ASIDE (rename, not
     // delete) before promoting tmp — a kill between the two renames
@@ -105,23 +114,52 @@ final class MetaStore(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Replace a control-plane slice with `rows` (one part file, through
-    * the rename-swap [[rewrite]]) and seed its driver copy. The seeded
-    * rows pass through the encoder's serializer and deserializer, so
-    * they equal what a fresh read returns (timestamps truncated to
+  /** One encoder codec per slice class: the serializer and the
+    * resolved, bound deserializer are built once, not per [[put]]. The
+    * serializer reuses its output row, so only [[put]] (synchronized)
+    * calls it. */
+  private val codecs =
+    new java.util.concurrent.ConcurrentHashMap[Class[_], MetaStore.Codec[_]]()
+
+  private def codec[T](enc: Encoder[T]): MetaStore.Codec[T] =
+    codecs.computeIfAbsent(enc.clsTag.runtimeClass,
+      _ => MetaStore.Codec(encoderFor(enc))).asInstanceOf[MetaStore.Codec[T]]
+
+  /** Replace a control-plane slice with `rows` and seed its driver
+    * copy. The rows are written on the driver as one
+    * `part-00000-<uuid>-c000<ext>` file plus `_SUCCESS`, through the
+    * rename swap of [[rewrite]]; no Spark job runs. The writer is the
+    * one a Spark write task uses, set up by the same `prepareWrite`,
+    * so codec, timestamp type, rebase modes and footer metadata follow
+    * the session conf exactly as a Spark write does. The seeded rows
+    * pass through the encoder's serializer and deserializer, so they
+    * equal what a fresh read returns (timestamps truncated to
     * microseconds). Serialized per store: the swap's temp dir is
-    * shared by every writer of a slice. */
+    * shared by every writer of a slice, and the codec's serializer is
+    * stateful. */
   def put[T: Encoder](name: String, rows: Seq[T]): Unit = synchronized {
-    val enc = encoderFor(implicitly[Encoder[T]])
-    promote(name, spark.createDataset(rows).coalesce(1)) match {
+    val c = codec(implicitly[Encoder[T]])
+    promote(name)(writeParquet(_, rows, c)) match {
       case None => copies.remove(name)
       case Some(stamp) =>
-        val ser = enc.createSerializer()
-        val de = enc.resolveAndBind().createDeserializer()
-        copies.put(name, MetaStore.Copy(stamp, enc.clsTag.runtimeClass,
-          rows.map(r => de(ser(r))).toVector))
+        copies.put(name, MetaStore.Copy(stamp, c.cls, rows.map(r => c.de(c.ser(r))).toVector))
     }
     ()
+  }
+
+  /** [[put]]'s driver write: one Parquet part file and `_SUCCESS` in
+    * `dir`, laid out as a one-task Spark write leaves them. */
+  private def writeParquet[T](dir: Path, rows: Seq[T], c: MetaStore.Codec[T]): Unit = {
+    val conf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(conf, job, c.schema,
+      new ParquetOptions(Map.empty[String, String], conf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val out = factory.newInstance(file.toString, c.schema, ctx)
+    try rows.foreach(r => out.write(c.ser(r))) finally out.close()
+    fs.create(new Path(dir, "_SUCCESS"), false).close()
   }
 
   def exists(name: String): Boolean = {
@@ -190,6 +228,14 @@ object MetaStore {
 
   /** One slice's driver copy and the listing it is valid under. */
   private final case class Copy(stamp: Stamp, cls: Class[_], rows: Seq[Any])
+
+  /** A slice class's encoder, serializer and bound deserializer. */
+  private final case class Codec[T](enc: ExpressionEncoder[T]) {
+    val cls: Class[_] = enc.clsTag.runtimeClass
+    val schema: org.apache.spark.sql.types.StructType = enc.schema
+    val ser: ExpressionEncoder.Serializer[T] = enc.createSerializer()
+    val de: ExpressionEncoder.Deserializer[T] = enc.resolveAndBind().createDeserializer()
+  }
 
   implicit val tableMetaEnc: Encoder[Model.TableMeta] = Encoders.product[Model.TableMeta]
   implicit val partitionStatEnc: Encoder[Model.PartitionStat] = Encoders.product[Model.PartitionStat]

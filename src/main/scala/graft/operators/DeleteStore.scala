@@ -30,8 +30,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object DeleteStore {
 
-  import StoreIO.{hasDataFiles, readString, requireColName, requireLabel,
-    writeString}
+  import StoreIO.{readString, requireColName, requireLabel, writeString}
 
   private def deletesPath(dir: String) = s"$dir/deletes"
   private def metaPath(dir: String) = s"$dir/_meta.json"
@@ -62,21 +61,19 @@ object DeleteStore {
       StoreIO.clearPending(spark, dir, "append", label)
       return
     }
-    val keyed = deletes.select(m.keys.map(col): _*)
-    // rows, not files: Spark writes one EMPTY parquet file for an
-    // empty frame (so hasDataFiles alone would commit a no-op label,
-    // growing the live list — and the per-read listing — forever)
-    if (keyed.isEmpty) return
+    val batchDir = s"${deletesPath(dir)}/batch=$label"
     // announce before writing (StoreIO's shared protocol) so a
     // concurrent [[vacuum]] never sweeps the in-flight directory
     StoreIO.writePending(spark, dir, "append", label)
-    keyed.write.mode(SaveMode.Overwrite)
-      .parquet(s"${deletesPath(dir)}/batch=$label")
-    if (!hasDataFiles(spark, s"${deletesPath(dir)}/batch=$label")) {
-      // abandon: dir + sidecar together (dir first), never an
-      // existing-but-unannounced directory (see StoreIO.abandonPending)
-      StoreIO.abandonPending(spark, dir, "append", label,
-        s"${deletesPath(dir)}/batch=$label")
+    deletes.select(m.keys.map(col): _*).write.mode(SaveMode.Overwrite)
+      .parquet(batchDir)
+    // rows, not files: Spark writes one EMPTY parquet file for an empty
+    // frame, and a no-op label would grow the live list — and the
+    // per-read listing — forever. Abandon: dir + sidecar together (dir
+    // first), never an existing-but-unannounced directory (see
+    // StoreIO.abandonPending)
+    if (StoreIO.dirRowCount(spark, batchDir) == 0L) {
+      StoreIO.abandonPending(spark, dir, "append", label, batchDir)
       return
     }
     beforeCommit()
@@ -89,8 +86,7 @@ object DeleteStore {
         case e: java.util.ConcurrentModificationException =>
           // swap CAS lost: abandon (dir WITH sidecar) and let the
           // caller retry against the new state — nothing committed
-          StoreIO.abandonPending(spark, dir, "append", label,
-            s"${deletesPath(dir)}/batch=$label")
+          StoreIO.abandonPending(spark, dir, "append", label, batchDir)
           throw e
       }
     StoreIO.clearPending(spark, dir, "append", label) // success path only

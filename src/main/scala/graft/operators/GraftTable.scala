@@ -34,8 +34,7 @@ import SkippingIndex.{ColumnEquals, ColumnNullness, ColumnRange}
   */
 object GraftTable {
 
-  import StoreIO.{hasDataFiles, readString, requireColName, requireLabel,
-    writeString}
+  import StoreIO.{readString, requireColName, requireLabel, writeString}
   import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
   private def dataPath(dir: String) = s"$dir/data"
@@ -105,33 +104,38 @@ object GraftTable {
       s"append is missing indexed column '$c'"))
     require(!df.columns.contains("batch"),
       "'batch' is the table's partition label column")
-    if (df.isEmpty) return // an empty committed dir would grow reads forever
     // evolve the PINNED union schema before any data byte is written:
     // a type conflict fails here, at the writer, never at read time
-    // inside a footer merge. A legacy (pre-schema) manifest self-heals
-    // through one last footer merge — which is why this sits AFTER the
-    // isEmpty return: an empty batch on exactly the many-file legacy
-    // table the pin rescues must not pay a table-sized footer job for
-    // a commit that will never happen. Every commit after carries it.
-    val unionSchema = {
-      val dfs = toNullable(org.apache.spark.sql.types.StructType(
-        df.schema.fields)).asInstanceOf[StructType]
-      pinnedSchema(man0.schemaJson)
-        .orElse(if (man0.live.isEmpty) None
-          else Some(scan(spark, dir, man0).schema))
-        .map(mergeSchemas(_, dfs)).getOrElse(dfs)
-    }
+    // inside a footer merge (the merge is driver-side metadata work)
+    val dfs = toNullable(org.apache.spark.sql.types.StructType(
+      df.schema.fields)).asInstanceOf[StructType]
+    val pinnedUnion = pinnedSchema(man0.schemaJson).map(mergeSchemas(_, dfs))
+    val batchDir = s"${dataPath(dir)}/batch=$label"
     writePending(spark, dir, "append", label)
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(s"${dataPath(dir)}/batch=$label")
-    if (!hasDataFiles(spark, s"${dataPath(dir)}/batch=$label")) {
-      // abandon, not just un-announce: the dir (Spark writes an empty
-      // file even for zero rows) must go WITH the sidecar, or an
-      // existing-but-unannounced directory survives
-      abandonPending(spark, dir, "append", label,
-        s"${dataPath(dir)}/batch=$label")
+    df.write.mode(SaveMode.Overwrite).parquet(batchDir)
+    // emptiness from the written footers, not a separate job: Spark
+    // writes one empty file for an empty frame, and an empty committed
+    // dir would grow reads forever. Abandon, not just un-announce: the
+    // dir must go WITH the sidecar, or an existing-but-unannounced
+    // directory survives
+    val rows = StoreIO.dirRowCount(spark, batchDir)
+    if (rows == 0L) {
+      abandonPending(spark, dir, "append", label, batchDir)
       return
     }
+    // A legacy (pre-schema) manifest self-heals through one last footer
+    // merge — only for a batch with rows: an empty batch on exactly the
+    // many-file legacy table the pin rescues must not pay a table-sized
+    // footer job for a commit that will never happen. Every commit
+    // after carries the pin. A conflict abandons the written batch.
+    val unionSchema = pinnedUnion.getOrElse(
+      if (man0.live.isEmpty) dfs
+      else try mergeSchemas(scan(spark, dir, man0).schema, dfs)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          abandonPending(spark, dir, "append", label, batchDir)
+          throw e
+      })
     beforeCommit()
     val fresh = manifest(spark, dir)
     if (!fresh.applied.contains(label)) {
@@ -145,8 +149,7 @@ object GraftTable {
       // nobody replays. Abort loudly and ABANDON the written dir
       // (announce-protocol rule: never an unannounced directory).
       if (fresh.commit != man0.commit) {
-        abandonPending(spark, dir, "append", label,
-          s"${dataPath(dir)}/batch=$label")
+        abandonPending(spark, dir, "append", label, batchDir)
         throw new java.util.ConcurrentModificationException(
           s"concurrent GraftTable commit detected (commit ${man0.commit}" +
             s" -> ${fresh.commit} during append '$label'); single writer" +
@@ -156,14 +159,12 @@ object GraftTable {
       try commit(spark, dir,
         Manifest(fresh.applied :+ label, fresh.live :+ label,
           fresh.commit + 1, Some(unionSchema.json)),
-        "append", label, delLive(spark, dir),
-        rows = dirRowCount(spark, s"${dataPath(dir)}/batch=$label"))
+        "append", label, delLive(spark, dir), rows = rows)
       catch {
         case e: java.util.ConcurrentModificationException =>
           // the slot CAS lost to an in-flight writer: same abandon as
           // the version-check abort above — nothing was committed
-          abandonPending(spark, dir, "append", label,
-            s"${dataPath(dir)}/batch=$label")
+          abandonPending(spark, dir, "append", label, batchDir)
           throw e
       }
     }
@@ -342,29 +343,6 @@ object GraftTable {
       }
     }
     out.result()
-  }
-
-  /** Row count of ONE batch dir from its parquet footers (driver-side,
-    * batch-bounded, no Spark job) — taken at WRITE time so commit
-    * snapshots carry per-commit row stats and [[history]] never scans
-    * data. Footer reads here are fine: the writer just wrote these
-    * files; it is READ planning that must stay footer-free. */
-  private def dirRowCount(spark: SparkSession, path: String): Long = {
-    val (fs, p) = StoreIO.hadoopFs(spark, path)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet") ||
-          f.getPath.getName.startsWith("part-")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
-            spark.sparkContext.hadoopConfiguration))
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
   }
 
   /** Normalized data-file paths under the LIVE batch dirs only. */
@@ -564,7 +542,7 @@ object GraftTable {
               .asInstanceOf[StructType].json))),
           "optimize", intoLabel,
           delLive(spark, dir).filterNot(dels.contains), retired = dels,
-          rows = dirRowCount(spark, s"${dataPath(dir)}/batch=$intoLabel"))
+          rows = StoreIO.dirRowCount(spark, s"${dataPath(dir)}/batch=$intoLabel"))
         catch {
           case e: java.util.ConcurrentModificationException =>
             // slot CAS lost to an in-flight writer: same abandon as the

@@ -311,8 +311,10 @@ object Maintenance {
         "added-data-files" -> addedCount.toString,
         "total-data-files" -> totalCount.toString))
 
-    // Append-only commits: neither slice needs to read itself back.
-    store.write("snapshots", spark.createDataset(Seq(newSnap)), SaveMode.Append)
+    // `snapshots` is control-plane (one row per commit): a driver put
+    // of the slice plus the new row, which also seeds the store's copy.
+    // `files` is per-file in scale and stays a distributed Append.
+    store.put("snapshots", store.rows[Model.SnapshotMeta]("snapshots") :+ newSnap)
     store.write("files", newRows, SaveMode.Append)
     // Move the current pointer + rebuild partition stats from the new
     // manifest (same path as M4).

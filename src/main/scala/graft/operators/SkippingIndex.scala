@@ -115,7 +115,7 @@ object SkippingIndex {
     * 16 MB per file — the upper end is parquet's own per-file bloom
     * budget). Derived from the parquet FOOTERS of exactly the delta
     * being indexed: driver-side and delta-bounded, and the caller just
-    * wrote these files (the GraftTable.dirRowCount argument — READ
+    * wrote these files (the StoreIO.dirRowCount argument — READ
     * planning stays footer-free; index maintenance may price its own
     * delta). The r16 motivation: a fixed 2^17 was 4× saturated at
     * 545k-row files and false-positived its prune away until

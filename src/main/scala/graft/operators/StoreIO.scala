@@ -113,6 +113,31 @@ private[graft] object StoreIO {
     }
   }
 
+  /** Row count of ONE written dir from its parquet footers (driver-side,
+    * dir-bounded, no Spark job) — the writers' emptiness test (Spark
+    * writes one empty file for an empty frame, so a file listing cannot
+    * see emptiness) and [[GraftTable]]'s per-commit row stat, so
+    * `history` never scans data. Footer reads here are fine: the writer
+    * just wrote these files; it is READ planning that must stay
+    * footer-free. A missing dir counts 0. */
+  def dirRowCount(spark: SparkSession, path: String): Long = {
+    val (fs, p) = hadoopFs(spark, path)
+    if (!fs.exists(p)) return 0L
+    val it = fs.listFiles(p, true)
+    var n = 0L
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet") ||
+          f.getPath.getName.startsWith("part-")) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
+            spark.sparkContext.hadoopConfiguration))
+        try n += r.getRecordCount finally r.close()
+      }
+    }
+    n
+  }
+
   // ---- manifest/snapshot JSON (one parser, one renderer) --------------
   // Jackson (already on Spark's classpath — zero new deps) replaces the
   // regex field-plucking this layer used through round 15. Two of that

@@ -4,14 +4,18 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SaveMode
 
 import graft.SparkSpec
-import graft.meta.Model.{Setting, SnapshotMeta, TaskRow}
+import graft.meta.Model.{Setting, SnapshotMeta, TableMeta, TaskRow}
 
 /** The control-plane slices' driver copy: served without a Spark job
   * while the slice's listing is unchanged, re-read after any other
-  * writer, seeded by the store's own writes with what a read returns. */
+  * writer, seeded by the store's own writes with what a read returns.
+  * And the driver writer behind `put`: no Spark job, the layout and
+  * footer a one-task Spark write leaves. */
 class MetaStoreSpec extends SparkSpec {
   import MetaStore._
 
@@ -104,5 +108,108 @@ class MetaStoreSpec extends SparkSpec {
     drop(store, "settings")
     assert(store.rows[TaskRow]("tasks").isEmpty)
     assert(store.setting("task_concurrency", "1") == "1")
+  }
+
+  private def tables(): Seq[TableMeta] = Seq(
+    TableMeta("db", "t", Seq(Model.TableColumn("a", "int"), Model.TableColumn("b", "string")),
+      Seq(Model.PartitionField("day", "ts", isHidden = true,
+        Some(Model.HiddenTransform("ts", "day")))),
+      Some(7L), Timestamp.from(Instant.parse("2026-01-02T03:04:05.987654321Z"))),
+    TableMeta("db", "u", Seq.empty, Seq.empty, None,
+      Timestamp.from(Instant.parse("2026-01-01T00:00:00Z"))))
+
+  private def entries(dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).toSeq.sorted
+  }
+
+  private def footer(dir: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val part = entries(dir).filter(_.startsWith("part-")) match {
+      case Seq(one) => one
+      case other => fail(s"expected one part file in $dir, got $other")
+    }
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir, part), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  test("a warm put starts no Spark job") {
+    val store = new MetaStore(spark, root())
+    store.put("tasks", Seq(task(1)))
+    assert(jobsDuring(store.put("tasks", Seq(task(1), task(2)))) == 0)
+    assert(jobsDuring(store.setSetting("k", "v")) == 0)
+    assert(jobsDuring(assert(store.rows[TaskRow]("tasks").map(_.id) == Seq(1L, 2L))) == 0)
+  }
+
+  test("a plain Spark read of a put slice returns exactly the seeded copy: Timestamp nanos, Map, Option and Seq fields") {
+    val store = new MetaStore(spark, root())
+    val tasks = Seq(task(1), task(2, Model.TaskStatus.Running).copy(
+      pickedUpAt = Some(Timestamp.from(Instant.parse("2026-01-02T04:00:00.000000999Z"))),
+      errorMessage = None, result = Map("files" -> "3")))
+    store.put("tasks", tasks)
+    store.put("tables", tables())
+    val plainTasks = spark.read.schema(taskRowEnc.schema).parquet(store.path("tasks"))
+      .as[TaskRow].collect().toSeq
+    val plainTables = spark.read.schema(tableMetaEnc.schema).parquet(store.path("tables"))
+      .as[TableMeta].collect().toSeq
+    assert(plainTasks == store.rows[TaskRow]("tasks"))
+    assert(plainTables == store.rows[TableMeta]("tables"))
+    assert(plainTasks.map(_.startedAt.getNanos) == Seq(123456000, 123456000))
+    assert(plainTables.head.updatedAt.getNanos == 987654000)
+    assert(plainTables.head.partitions.head.hidden.contains(Model.HiddenTransform("ts", "day")))
+    assert(plainTables(1).columns.isEmpty && plainTables(1).currentSnapshotId.isEmpty)
+  }
+
+  test("a put of no rows leaves a readable empty slice with the encoder's schema") {
+    val store = new MetaStore(spark, root())
+    store.put("tasks", Seq(task(1)))
+    store.put("tasks", Seq.empty[TaskRow])
+    val df = spark.read.parquet(store.path("tasks"))
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+      taskRowEnc.schema.map(f => f.name -> f.dataType.simpleString))
+    assert(df.count() == 0L)
+    assert(store.rows[TaskRow]("tasks").isEmpty)
+    assert(new MetaStore(spark, store.root).rows[TaskRow]("tasks").isEmpty)
+  }
+
+  test("a put's footer follows the session conf as a Spark write's does: codec, timestamp type, metadata") {
+    val conf = Seq(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.sql.parquet.compression.codec" -> "gzip")
+    val prior = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val store = new MetaStore(spark, root())
+      store.put("tasks", Seq(task(1), task(2)))
+      store.write("spark_tasks", spark.createDataset(Seq(task(1), task(2))).coalesce(1))
+      val (put, written) = (footer(store.path("tasks")), footer(store.path("spark_tasks")))
+      assert(put.getFileMetaData.getSchema == written.getFileMetaData.getSchema)
+      assert(put.getFileMetaData.getKeyValueMetaData == written.getFileMetaData.getKeyValueMetaData)
+      def codecs(f: org.apache.parquet.hadoop.metadata.ParquetMetadata): Set[String] =
+        f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      assert(codecs(put) == Set("GZIP") && codecs(written) == Set("GZIP"))
+      val schema = put.getFileMetaData.getSchema
+      val startedAt = schema.getType(schema.getFieldIndex("startedAt")).asPrimitiveType
+      assert(startedAt.getPrimitiveTypeName.name == "INT64")
+      assert(startedAt.getLogicalTypeAnnotation.toString == "TIMESTAMP(MICROS,true)")
+      assert(entries(store.path("tasks")).filter(_.startsWith("part-")).forall(_.endsWith(".gz.parquet")))
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a put leaves one part file and _SUCCESS, and no _temporary or swap dir") {
+    val r = root()
+    val store = new MetaStore(spark, r)
+    store.put("tasks", Seq(task(1)))
+    store.put("tasks", Seq(task(1), task(2)))
+    val visible = entries(store.path("tasks")).filterNot(_.startsWith("."))
+    assert(visible.size == 2 && visible.head == "_SUCCESS", visible)
+    assert(visible.last.matches("part-00000-[0-9a-f-]{36}-c000\\..*parquet"), visible)
+    assert(!entries(store.path("tasks")).exists(_.contains("_temporary")))
+    assert(entries(r) == Seq("tasks"))
   }
 }

@@ -131,4 +131,16 @@ class DeleteStoreSpec extends SparkSpec {
     assert(sortedRows(morRead(li, dir)) == sortedRows(expectAnti))
     assert(manifest(spark, dir).applied == Seq("epoch-0"))
   }
+
+  test("an empty batch commits nothing and leaves no batch dir or sidecar") {
+    val dir = freshStore()
+    val before = manifest(spark, dir)
+    append(fOrders.where(lit(false)), dir, "empty-2")
+    assert(manifest(spark, dir) == before)
+    assert(!new java.io.File(s"$dir/deletes/batch=empty-2").exists(),
+      "an empty batch left its directory")
+    assert(!StoreIO.pendingExists(spark, dir, "append", "empty-2"),
+      "an empty batch left its sidecar")
+    assert(sortedRows(morRead(Tables.lineitem(spark, sfDir), dir)) == sortedRows(expectAnti))
+  }
 }

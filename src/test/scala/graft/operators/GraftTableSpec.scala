@@ -675,4 +675,17 @@ class GraftTableSpec extends SparkSpec {
     append(li.where(lit(false)), dir, "b0")
     assert(manifest(spark, dir).applied.isEmpty)
   }
+
+  test("a second non-empty append's Spark jobs: the write and the index refresh, no emptiness job") {
+    import spark.implicits._
+    val dir = tmp()
+    create(spark, dir, zoneCols = Seq("l_partkey"))
+    append(li.where($"l_orderkey" % 2 === 0), dir, "b1")
+    val b2 = li.where($"l_orderkey" % 2 === 1)
+    // emptiness is read from the written footers: no isEmpty job runs
+    // ahead of the write
+    assert(jobsDuring(append(b2, dir, "b2")) == 8)
+    assert(manifest(spark, dir).live == Seq("b1", "b2"))
+    assert(read(spark, dir).count() == li.count())
+  }
 }

@@ -198,4 +198,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(s.needsOptimize)
     assert(s.lastUpdatedSnapshotId == 1L)
   }
+
+  test("commitCompaction's snapshot row goes through the store's copy: the next read starts no Spark job") {
+    import MetaStore._
+    import spark.implicits._
+    val dir = tmpDir("commit-compaction")
+    (1 to 3).foreach { i =>
+      Seq((i, s"v$i")).toDF("id", "v").withColumn("date", lit("2026-01-01"))
+        .write.mode(SaveMode.Append).partitionBy("date").parquet(dir)
+    }
+    val store = new MetaStore(spark, tmpDir("commit-compaction-store"))
+    store.put("tables", Seq(Model.TableMeta("db", "t", Seq(Model.TableColumn("id", "int")),
+      Seq.empty, Some(1L), ts("2026-01-01 00:00:00"))))
+    store.put("snapshots", Seq(snap("db", "t", 1, None, "2026-01-01 00:00:00")))
+    val now = java.time.Instant.parse("2026-03-01T00:00:00Z")
+    val id = Maintenance.commitCompaction(store, "db", "t", dir,
+      SmallFiles.Config(thresholdBytes = 1L << 20, minCount = 2, minSharePercent = 25), now)
+    var snaps = Seq.empty[Model.SnapshotMeta]
+    assert(jobsDuring { snaps = store.rows[Model.SnapshotMeta]("snapshots") } == 0)
+    assert(snaps.map(_.snapshotId) == Seq(1L, id))
+    val added = snaps.last
+    assert(added.parentId.contains(1L) && added.operation == "replace" &&
+      added.committedAt == Timestamp.from(now))
+    assert(added.summary("total-data-files") == "3")
+    assert(new MetaStore(spark, store.root).rows[Model.SnapshotMeta]("snapshots") == snaps)
+    assert(store.rows[Model.TableMeta]("tables").head.currentSnapshotId.contains(id))
+  }
 }

@@ -30,12 +30,12 @@ class RefreshSpec extends SparkSpec {
     assert(store.tables.collect().map(_.name).toSet == Set("nation"))
   }
 
-  test("a repeat refreshTable of an unchanged live table is one write, no read or inference job") {
+  test("a repeat refreshTable of an unchanged live table starts no Spark job") {
     val store = new MetaStore(spark, Files.createTempDirectory("refresh-jobs").toString)
     val now = Instant.parse("2026-01-01T00:00:00Z")
     Refresh.refreshTable(store, "main", "nation", s"$sfDir/nation.parquet", now)
     assert(jobsDuring(
-      Refresh.refreshTable(store, "main", "nation", s"$sfDir/nation.parquet", now)) == 1)
+      Refresh.refreshTable(store, "main", "nation", s"$sfDir/nation.parquet", now)) == 0)
     import MetaStore._
     assert(store.tables.collect().map(_.name).toSeq == Seq("nation"))
   }

@@ -218,12 +218,12 @@ class TaskQueueSpec extends SparkSpec {
     } finally fresh.close()
   }
 
-  test("a repeat enqueue starts exactly one Spark job") {
+  test("a repeat enqueue starts no Spark job") {
     val q = newQueue()
     q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty)
     assert(jobsDuring {
       q.enqueue("db", "t", Model.TaskKind.Optimize, "spark", Map.empty); ()
-    } == 1)
+    } == 0)
     assert(jobsDuring { q.counts(); q.list(Seq.empty, 10, 0); () } == 0)
   }
 }
