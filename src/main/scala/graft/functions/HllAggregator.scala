@@ -26,12 +26,6 @@ import org.apache.spark.sql.expressions.Aggregator
   */
 final case class HllBuf(regs: Array[Int])
 
-object HllBuf {
-  /** Seq-friendly constructor for store/spec callers that hold the
-    * registers as the immutable Seq the aggregator emits. */
-  def apply(regs: Seq[Int]): HllBuf = new HllBuf(regs.toArray)
-}
-
 class HllAggregator extends Aggregator[Long, HllBuf, Seq[Int]] {
   import HllAggregator._
 

@@ -1,29 +1,23 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Runtime seam for a REAL Iceberg deployment (SURVEY.md §7.4 risk 2).
   *
   * The reference executes its maintenance through Iceberg's stored
   * procedures (`CALL <cat>.system.rewrite_data_files/...`, reference
-  * backend/build/spark/maintenance.py:153-215) and reads `$files` /
-  * `$partitions` metadata tables (backend/internal/trino_client.go:67-87).
-  * This repo models the same metadata natively ([[MetaDerive]] /
-  * [[MetaStore]]) so every query has an exact DuckDB oracle — but a user
-  * pointing the engine at real Iceberg tables should get the real
-  * catalog, not the simulation.
+  * backend/build/spark/maintenance.py:153-215). This repo models the
+  * same metadata natively ([[MetaDerive]] / [[MetaStore]]) so every
+  * query has an exact DuckDB oracle — but a user pointing the engine at
+  * real Iceberg tables should get the real procedures, not the
+  * simulation.
   *
   * This object is that switch point: it probes the classpath for the
   * Iceberg Spark runtime (the `iceberg-spark-runtime` jar under
   * `$SPARK_HOME/jars` is how Iceberg ships; no such jar exists in this
-  * build environment, so the probe is cold here by design) and, when
-  * present, routes metadata reads to the live `<table>.files` /
-  * `<table>.partitions` metadata tables. Maintenance operators keep
-  * their native implementations either way — they are verified against
-  * the reference's semantics (ManifestSpec/MaintenanceSpec) and work on
-  * the same frames; only the SOURCE of the metadata frames swaps, which
-  * is exactly the seam the reference's own trino_client/spark split
-  * has.
+  * build environment, so the probe is cold here by design). When it is
+  * present, the worker and the rollback route run the live `CALL`
+  * ([[graft.operators.IcebergCalls]]); otherwise they keep their native
+  * implementations, verified against the reference's semantics
+  * (ManifestSpec/MaintenanceSpec).
   */
 object IcebergRuntime {
 
@@ -38,24 +32,4 @@ object IcebergRuntime {
     try { Class.forName(cls, false, getClass.getClassLoader); true }
     catch { case _: ClassNotFoundException | _: NoClassDefFoundError => false }
   }
-
-  /** Read a live Iceberg metadata table (`files`, `partitions`,
-    * `snapshots`, `history`) for a fully-qualified table identifier.
-    * Left(reason) when the runtime is absent — callers fall back to the
-    * native model ([[MetaDerive]]), which this sandbox always does. */
-  def metadataTable(spark: SparkSession, table: String,
-      kind: String): Either[String, DataFrame] =
-    if (!available)
-      Left("iceberg-spark-runtime not on classpath; native metadata model in use")
-    else
-      try Right(spark.read.format("iceberg").load(s"$table.$kind"))
-      catch { case e: Exception => Left(s"iceberg read failed: ${e.getMessage}") }
-
-  /** The live `$files` frame, or None in a native-model deployment. */
-  def filesTable(spark: SparkSession, table: String): Option[DataFrame] =
-    metadataTable(spark, table, "files").toOption
-
-  /** The live `$partitions` frame, or None in a native-model deployment. */
-  def partitionsTable(spark: SparkSession, table: String): Option[DataFrame] =
-    metadataTable(spark, table, "partitions").toOption
 }

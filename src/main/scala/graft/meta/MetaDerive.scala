@@ -45,10 +45,6 @@ object MetaDerive {
     new graft.util.PlanCache[(SparkSession, String), DataFrame](
       maxEntries = 8, onEvict = _.unpersist(), name = "fileCache")
 
-  /** Drop the cached frames (session teardown / underlying data changed
-    * mid-session — the refresh path's cache-bust). */
-  def clearCaches(): Unit = fileCache.clear()
-
   /** The `$files`-shaped frame (reference S6 input, iceberg_client.go:163-220). */
   def files(spark: SparkSession, d: String): DataFrame =
     fileCache.getOrElseUpdate((spark, d))(filesUncached(spark, d).cache())

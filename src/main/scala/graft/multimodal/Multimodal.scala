@@ -423,9 +423,6 @@ object Multimodal {
     new graft.util.PlanCache[(SparkSession, String), DataFrame](
       maxEntries = 4, onEvict = _.unpersist(), name = "frameHashCache")
 
-  /** Drop cached multimodal indexes (session teardown / data change). */
-  def clearCaches(): Unit = { frameHashCache.clear(); audioBucketCache.clear() }
-
   def frameHashes(spark: SparkSession, d: String): DataFrame =
     frameHashCache.getOrElseUpdate((spark, d))(
       frameHashesUncached(syntheticAssets(spark, d)).cache())

@@ -16,10 +16,6 @@ import graft.meta.{Model, PartitionModel}
   */
 object Browse {
 
-  final case class Level(
-      value: String, fileCount: Long, recordCount: Long,
-      totalBytes: Long, needsOptimize: Boolean, needsOptimizeCount: Long)
-
   def drillDown(
       partitions: Dataset[Model.PartitionStat],
       spec: Seq[Model.PartitionField],

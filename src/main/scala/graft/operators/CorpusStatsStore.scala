@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Persistent corpus-level language statistics with INCREMENTAL
   * maintenance — the standing-state sibling of [[graft.operators.DedupIndex]]
-  * (content keys) and [[VectorIndexStore]] (embeddings), holding the
-  * bigram count table that [[TextAnalysis.bigramFamiliarityOf]] and
+  * (content keys), holding the bigram count table that [[TextAnalysis.bigramFamiliarityOf]] and
   * bigram lift read.
   *
   * Counts are re-aggregable partials (sum merges with sum — the
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
   * next N.
   *
   * The online use: score INCOMING documents against the standing
-  * statistics ([[familiarityAgainst]]) — a streaming micro-batch can
+  * statistics ([[familiarityAgainst]]) — an incoming batch can
   * quality-bucket its documents without touching the corpus at all.
   */
 object CorpusStatsStore {
@@ -95,8 +94,8 @@ object CorpusStatsStore {
     // the PRIOR version explicitly: the counts for v+1 are already on
     // disk, so "latest" would point past the last written sketch.
     val mergedRegs = new graft.functions.HllAggregator().merge(
-      graft.functions.HllBuf(readSketch(spark, dir, v)),
-      graft.functions.HllBuf(DistinctSketch.vocabSketch(deltaDocs))).regs
+      graft.functions.HllBuf(readSketch(spark, dir, v).toArray),
+      graft.functions.HllBuf(DistinctSketch.vocabSketch(deltaDocs).toArray)).regs
     writeSketch(spark, dir, v + 1,
       scala.collection.immutable.ArraySeq.unsafeWrapArray(mergedRegs))
     v + 1
@@ -106,15 +105,8 @@ object CorpusStatsStore {
   def counts(spark: SparkSession, dir: String): DataFrame = {
     val v = latestVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no corpus stats at $dir — build first"))
-    counts(spark, dir, v)
+    spark.read.parquet(s"${countsRoot(dir)}/v=$v")
   }
-
-  /** The count table PINNED to an explicit version — versions are
-    * immutable, so a reader that resolved `latestVersion` once can keep
-    * reading the same statistics even while a concurrent [[update]]
-    * writes v+1 (the streaming scoring path's consistency contract). */
-  def counts(spark: SparkSession, dir: String, version: Int): DataFrame =
-    spark.read.parquet(s"${countsRoot(dir)}/v=$version")
 
   /** Familiarity scoring of (possibly brand-new) documents against the
     * STANDING statistics — identical math to

@@ -73,18 +73,6 @@ object Dedup {
       sh.groupBy($"doc_id").agg(count(lit(1)).as("n")).cache()
     }
 
-  /** Drop every cached derived index (session teardown, or when the
-    * underlying documents table changed within a session). */
-  def clearCaches(): Unit = {
-    shingleCache.clear()
-    bandCache.clear()
-    pairCache.clear()
-    simhashCache.clear()
-    interCache.clear()
-    shingleCountCache.clear()
-    segCache.clear()
-  }
-
   /** Materialized pairwise shingle-intersection counts:
     * (id_a, id_b, inter) for every unordered doc pair sharing ≥ 1
     * shingle — exact support for any similarity > 0. */
@@ -913,12 +901,10 @@ object Dedup {
     blockedPairsOf(e, multi, threshold)
   }
 
-  /** The shared IVF-blocked pair kernel: candidate pairs share a probe
-    * bucket (`probes` = (vec_id, cent_id), one row per probe), dedup
-    * BEFORE scoring, then exact-cosine verify against `e` = (vec_id,
-    * v). Used by the in-session path ([[embeddingNearDupIvf]]) and the
-    * persistent-index path ([[VectorIndexStore.nearDupPairs]]) — same
-    * plan, different index source.
+  /** The IVF-blocked pair kernel of [[embeddingNearDupIvf]]: candidate
+    * pairs share a probe bucket (`probes` = (vec_id, cent_id), one row
+    * per probe), dedup BEFORE scoring, then exact-cosine verify against
+    * `e` = (vec_id, v).
     *
     * (Measured alternative: dedup-by-minimal-shared-bucket via probe
     * lists on each row was ~3× slower — the arrays outweigh the saved

@@ -1629,35 +1629,6 @@ object GraftTable {
     else readViewBuckets(spark, mirrorDir, st, st.buckets.keySet)
   }
 
-  /** Housekeeping for a bucketed view — the [[optimize]] analog:
-    * fold every multi-segment bucket back to ONE segment (read
-    * amplification returns to one file per bucket) without changing
-    * contents or the synced commit. Append-heavy consumers run it on
-    * the same cadence they'd run table optimize; the per-sync
-    * [[MaxViewSegments]] bound keeps reads sane in between, this
-    * removes the amplification entirely. keepLast retention applies
-    * (a held reader survives the fold). Returns buckets folded;
-    * 0 = nothing to do (incl. legacy flat pointers — already one
-    * dir). */
-  def compactView(spark: SparkSession, rootDir: String,
-      keepLast: Int = 1): Int = {
-    require(keepLast >= 0, "keepLast must be >= 0")
-    val st = readViewState(spark, s"$rootDir/_sync.json").getOrElse(
-      throw new IllegalArgumentException(
-        s"view at $rootDir has never been synced"))
-    if (st.nBuckets == 0) return 0
-    val multi = st.buckets.filter(_._2.size > 1).keySet
-    if (multi.isEmpty) return 0
-    require(st.bucketCols.nonEmpty || st.nBuckets == 1,
-      s"view at $rootDir predates the bucketCols pointer field — " +
-        "re-baseline it (delete the view and re-sync) to compact")
-    val cur = readViewBuckets(spark, rootDir, st, multi)
-    commitViewVersion(spark, rootDir, Some(st), st.commit,
-      ViewDef(st.family, st.pred, st.cols, st.dimCommit), st.nBuckets, cur,
-      st.bucketCols, fold = multi, append = Set.empty, keepLast = keepLast)
-    multi.size
-  }
-
   /** The SNAPSHOT LOG as a queryable frame — one row per RETAINED
     * commit: what it did, the live-batch and live-delete-label counts
     * it left, and the data rows it wrote (recorded at commit time —

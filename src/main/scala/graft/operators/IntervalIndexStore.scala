@@ -17,8 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   *  - the store holds the intervals ALREADY exploded, as parquet
   *    PARTITIONED BY the band column (plus an ingest-batch level for
-  *    idempotent appends — same layout discipline as
-  *    [[VectorIndexStore]]'s cent_id lists);
+  *    idempotent appends);
   *  - a lookup computes each point's single band and equi-joins on
   *    (key, band): because `band` is a PARTITION column, Spark's
   *    dynamic partition pruning reduces the store scan to exactly the

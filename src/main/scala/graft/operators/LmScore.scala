@@ -71,34 +71,24 @@ object LmScore {
     * corpus per session. (bigram determines w2, so q150's
     * (doc_id, bigram) grouping reads this same table.) */
   def docBigrams(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     docBgCache.getOrElseUpdate(docs.queryExecution.analyzed.canonicalized) {
-      val df = docBigramsOnce(docs).cache()
+      // Typed flatMap over primitive string ops — the
+      // topBigrams/docShingles trade: ~5x over the interpreted
+      // higher-order expression path.
+      val df = docs.select($"doc_id", $"text").where($"text".isNotNull)
+        .as[(Long, String)]
+        .flatMap { case (id, t) =>
+          graft.functions.TextFunctions.jvmTokens(t).sliding(2).withFilter(_.length == 2)
+            .map(g => (id, g.mkString(" "), g(1)))
+        }
+        .toDF("doc_id", "bigram", "w2")
+        .groupBy($"doc_id", $"bigram", $"w2").agg(count(lit(1)).as("c_doc"))
+        .cache()
       df.count()
       df
     }
-  }
-
-  /** The uncached (doc_id, bigram, w2, c_doc) plan — for ONE-SHOT
-    * consumers. A streaming micro-batch is a fresh plan every batch, so
-    * the PlanCache above never hits there: caching would cost an extra
-    * materialization job per batch and pin up to `maxEntries` dead
-    * batches' tables in executor memory until LRU eviction. Batch
-    * queries that reuse the table across q149/q150 go through
-    * [[docBigrams]]; per-batch scoring goes through this. */
-  def docBigramsOnce(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // Typed flatMap over primitive string ops — the
-    // topBigrams/docShingles trade: ~5x over the interpreted
-    // higher-order expression path.
-    docs.select($"doc_id", $"text").where($"text".isNotNull)
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        graft.functions.TextFunctions.jvmTokens(t).sliding(2).withFilter(_.length == 2)
-          .map(g => (id, g.mkString(" "), g(1)))
-      }
-      .toDF("doc_id", "bigram", "w2")
-      .groupBy($"doc_id", $"bigram", $"w2").agg(count(lit(1)).as("c_doc"))
   }
 
   /** Materialized per-doc unigram counts (q149's backoff guard). */
@@ -180,19 +170,6 @@ object LmScore {
   def fluencyAgainst(docs: DataFrame, storeDir: String): DataFrame =
     fluencyAgainstCounts(docs,
       CorpusStatsStore.counts(docs.sparkSession, storeDir), docBigrams(docs))
-
-  /** The streaming per-micro-batch shape of [[fluencyAgainst]]: counts
-    * pinned to an explicit store `version` (so a concurrent
-    * `CorpusStatsStore.update` landing mid-batch cannot make the batch
-    * report mislabel the statistics that actually scored it), and the
-    * per-doc bigram table built ONE-SHOT via [[docBigramsOnce]] — a
-    * micro-batch plan is consumed exactly once, so the session PlanCache
-    * would only add a dead materialization per batch. */
-  def fluencyAgainstPinned(docs: DataFrame, storeDir: String,
-      version: Int): DataFrame =
-    fluencyAgainstCounts(docs,
-      CorpusStatsStore.counts(docs.sparkSession, storeDir, version),
-      docBigramsOnce(docs))
 
   private def fluencyAgainstCounts(docs: DataFrame, corp: DataFrame,
       docBg: DataFrame): DataFrame = {

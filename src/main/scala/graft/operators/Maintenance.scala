@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import scala.collection.immutable.ArraySeq
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{MetaStore, Model}
@@ -603,12 +603,22 @@ object Maintenance {
         $"lastUpdatedAt", $"lastUpdatedSnapshotId", $"needsOptimize")
       .as[Model.PartitionStat]
 
-    // Union of untouched tables' stats + the rebuilt slice, swapped in
-    // distributed — partition stats are one row per partition, which at
-    // 100 TB is itself a big table.
+    replaceTablePartitions(store, database, table, scored)
+  }
+
+  /** Replace one table's rows of the `partitions` slice with `fresh`:
+    * the untouched tables' rows filtered distributed, unioned with the
+    * new rows and swapped in through [[MetaStore.rewrite]] — partition
+    * stats are one row per partition, which at 100 TB is itself a big
+    * table, so nothing is collected to the driver. A missing slice
+    * reads as empty. Readers may see an empty slice during the two
+    * renames of the swap. */
+  private[operators] def replaceTablePartitions(store: MetaStore, database: String,
+      table: String, fresh: Dataset[Model.PartitionStat]): Unit = {
+    import MetaStore._
     val others = store.partitions.filter(
       !(col("database") === database && col("table") === table))
     store.rewrite("partitions",
-      others.toDF().unionByName(scored.toDF()).as[Model.PartitionStat])
+      others.toDF().unionByName(fresh.toDF()).as[Model.PartitionStat])
   }
 }

@@ -140,8 +140,6 @@ object ProductQuantization {
     (Array[Array[Array[Double]]], DataFrame)](
     maxEntries = 4, onEvict = { case (_, codes) => codes.unpersist() }, name = "pqIndexCache")
 
-  def clearCaches(): Unit = pqIndexCache.clear()
-
   def pqIndex(e: DataFrame, m: Int, ksub: Int, iters: Int)
       : (Array[Array[Array[Double]]], DataFrame) =
     pqIndexCache.getOrElseUpdate(

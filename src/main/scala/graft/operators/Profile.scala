@@ -10,16 +10,17 @@ import graft.sources.Tables
   * cardinalities, value bounds). One aggregate job per profiled column,
   * unioned; each agg is a single shuffle with map-side partials.
   *
-  * Approximate variants (approx_count_distinct / percentile_approx)
-  * exist for the 100 TB path — exact distinct on a high-cardinality
-  * column is itself a full shuffle — but the oracle-checked query uses
-  * exact counts (sketch internals differ across engines).
+  * The approximate variant (approx_count_distinct, through
+  * [[Analyze]]) exists for the 100 TB path — exact distinct on a
+  * high-cardinality column is itself a full shuffle — but the
+  * oracle-checked query uses exact counts (sketch internals differ
+  * across engines).
   */
 object Profile {
 
   /** All columns' stats from the driver's view: n_rows plus per-column
-    * present/distinct/min/max. Shared by [[profile]], [[approxProfile]],
-    * and [[Analyze]]. */
+    * present/distinct/min/max. Shared by [[profile]] and [[Analyze]]
+    * (whose `approximate` flag takes the HLL++ path). */
   final case class TableStats(nRows: Long, present: Map[String, Long],
       distinct: Map[String, Long], minS: Map[String, String],
       maxS: Map[String, String])
@@ -105,18 +106,6 @@ object Profile {
     cols.map(c => (c, s.nRows, s.nRows - s.present(c), s.distinct(c),
         s.minS.get(c).orNull, s.maxS.get(c).orNull))
       .toDF("column", "n_rows", "n_null", "n_distinct", "min_s", "max_s")
-      .orderBy($"column")
-  }
-
-  /** Approximate profile for the scale path: HLL++ distinct estimates
-    * (no cross-engine oracle — sketches differ; ProfileSpec bounds the
-    * estimation error instead). */
-  def approxProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val s = computeStats(df, cols, approximate = true)
-    cols.map(c => (c, s.distinct(c), s.present(c)))
-      .toDF("column", "approx_distinct", "n_present")
       .orderBy($"column")
   }
 

@@ -108,7 +108,7 @@ object Refresh {
     val spark = store.spark
     import spark.implicits._
     import MetaStore._
-    val (fileSizes, recordCount) = liveFootprint(store, dataPath)
+    val (fileSizes, recordCount) = liveFootprint(spark, dataPath)
     val effective = SmallFiles.fromSettings(store, cfg)
     val snapshotId = store.rows[Model.TableMeta]("tables")
       .find(t => t.database == database && t.name == table)
@@ -117,12 +117,7 @@ object Refresh {
       recordCount, fileSizes.size.toLong, fileSizes.sum,
       Timestamp.from(now), snapshotId,
       SmallFiles.needsOptimize(fileSizes, Map.empty, effective, now)))
-    val keep =
-      if (store.exists("partitions"))
-        store.partitions.collect().toSeq
-          .filterNot(p => p.database == database && p.table == table)
-      else Seq.empty
-    store.write("partitions", spark.createDataset(keep ++ fresh))
+    Maintenance.replaceTablePartitions(store, database, table, spark.createDataset(fresh))
     fresh
   }
 
@@ -162,29 +157,22 @@ object Refresh {
     ()
   }
 
-  /** File sizes + row count of a live parquet table (file or directory
-    * of part files). The listing is control-plane-small (one table's
-    * data files); the row count is a distributed parquet count, read
-    * under the memoized schema so it starts no inference job. */
-  private def liveFootprint(store: MetaStore, dataPath: String): (Seq[Long], Long) = {
-    val spark = store.spark
-    val p = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** File sizes + row count of a live parquet table: the file itself,
+    * or every data file Spark's reader reads below the directory
+    * (recursively, `k=v` partition directories included, hidden names
+    * skipped by the reader's own rule). The listing is
+    * control-plane-small (one table's data files) and the row count
+    * sums their parquet footers, so neither starts a Spark job. */
+  private def liveFootprint(spark: SparkSession, dataPath: String): (Seq[Long], Long) = {
+    val (fs, p) = StoreIO.hadoopFs(spark, dataPath)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def dataFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) dataFiles(s.getPath) else Seq(s))
     val status = fs.getFileStatus(p)
-    val sizes =
-      if (status.isDirectory)
-        fs.listStatus(p).toSeq.filter(s => s.isFile &&
-            !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-          .map(_.getLen)
-      else Seq(status.getLen)
-    (sizes, spark.read.schema(graft.sources.Tables.schemaOf(spark, dataPath))
-      .parquet(dataPath).count())
+    val files = if (status.isDirectory) dataFiles(p) else Seq(status)
+    (files.map(_.getLen), files.map(StoreIO.footerRowCount(spark, _)).sum)
   }
-
-  /** Rebuild the `partitions` slice of one table from a `files`-shaped
-    * manifest already in the store (the reference's ListPartitions +
-    * needs_optimize scoring, service_iceberg.go:117-170). */
-  def refreshPartitions(store: MetaStore, database: String, table: String,
-      snapshotId: Long, cfg: SmallFiles.Config, now: Instant): Unit =
-    Maintenance.rollbackToSnapshot(store, database, table, snapshotId, cfg, now)
 }

@@ -338,19 +338,12 @@ object Similarity {
 
   // Multi-probe assignments (vec_id → its nAssign nearest centroid
   // lists) are index structure too — the multi-probe inverted lists a
-  // deployment stores next to the quantizer (VectorIndexStore's
-  // cent_id-partitioned layout) — so steady-state blocked dedup starts
-  // from the materialized probe table instead of re-running the
-  // corpus × centroids scoring window per query.
+  // deployment stores next to the quantizer — so steady-state blocked
+  // dedup starts from the materialized probe table instead of
+  // re-running the corpus × centroids scoring window per query.
   private val ivfProbeCache = new graft.util.PlanCache[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int, Int),
     DataFrame](maxEntries = 4, onEvict = _.unpersist(), name = "ivfProbeCache")
-
-  def clearCaches(): Unit = {
-    ivfIndexCache.clear()
-    lshSigCache.clear()
-    ivfProbeCache.clear()
-  }
 
   /** Scale-safe IVF blocking parameters from the corpus size and a
     * recall target — the sizing rule the 100 TB posture demands, in

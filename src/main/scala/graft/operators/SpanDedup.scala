@@ -35,9 +35,6 @@ object SpanDedup {
     new graft.util.PlanCache[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), DataFrame](
       maxEntries = 4, onEvict = _.unpersist(), name = "positionCache")
 
-  /** Drop cached position frames (session teardown / data change). */
-  def clearCaches(): Unit = positionCache.clear()
-
   /** (doc_id, pos, sh): every k-token shingle of every document with its
     * 0-based start position. Cached per (canonicalized plan, k).
     * (r18 note: pre-partitioning this cache by `sh` was tried and

@@ -128,14 +128,18 @@ private[graft] object StoreIO {
     while (it.hasNext) {
       val f = it.next()
       if (f.getPath.getName.endsWith(".parquet") ||
-          f.getPath.getName.startsWith("part-")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
-            spark.sparkContext.hadoopConfiguration))
-        try n += r.getRecordCount finally r.close()
-      }
+          f.getPath.getName.startsWith("part-"))
+        n += footerRowCount(spark, f)
     }
     n
+  }
+
+  /** Row count of one parquet file from its footer (driver-side). */
+  def footerRowCount(spark: SparkSession, f: org.apache.hadoop.fs.FileStatus): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f,
+        spark.sparkContext.hadoopConfiguration))
+    try r.getRecordCount finally r.close()
   }
 
   // ---- manifest/snapshot JSON (one parser, one renderer) --------------

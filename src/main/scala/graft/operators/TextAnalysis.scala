@@ -440,13 +440,6 @@ object TextAnalysis {
     new graft.util.PlanCache[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
       maxEntries = 4, onEvict = _.unpersist(), name = "bigramCache")
 
-  /** Drop the cached bigram count tables and fingerprint indexes
-    * (session teardown / data change). */
-  def clearCaches(): Unit = {
-    bigramCache.clear()
-    fpSetCache.clear()
-  }
-
   /** The materialized corpus bigram count table (bigram, tok_a, tok_b,
     * n_ab), shared by [[bigramLiftOf]] and [[bigramFamiliarityOf]]. */
   private def bigramCountsOf(docs: DataFrame): DataFrame = {

@@ -4,21 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.streaming.EventStreams
 
-/** Batch-parity queries for the streaming transforms: the same
-  * windowed/session aggregations run in batch mode over the events
-  * table, where DuckDB can oracle them. The streaming path (readStream
-  * + watermark + availableNow) is exercised in EventStreamsSpec — batch
-  * and stream share the transform code, so the oracle covers both
-  * semantics.
+/** Event-time queries over the events table: windowed counts,
+  * gap-based sessions and as-of attribution, each a batch aggregation
+  * that DuckDB oracles. The engine has no streaming query; the only
+  * stream is `Main ingest` (`StreamingIngest`).
   */
 object Streams {
 
   private def money(c: org.apache.spark.sql.Column) = graft.functions.ExactNumeric.money(c)
 
-  /** Tumbling-window counts per event type (EventStreams.windowedCounts
-    * in batch mode; sums decimal-cast for cross-engine exactness). */
+  /** Tumbling-window counts per event type (sums decimal-cast for
+    * cross-engine exactness). */
   def q32WindowedCounts(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     Tables.events(spark, d)
@@ -36,8 +33,8 @@ object Streams {
       |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Gap-based sessionization (EventStreams.sessionWindows in batch
-    * mode): session start/end per user, 30-minute gap. The DuckDB
+  /** Gap-based sessionization: session start/end per user, 30-minute
+    * gap. The DuckDB
     * oracle reconstructs Spark's session_window semantics — a new
     * session when the gap to the previous event is >= the gap, end =
     * last event + gap. */

@@ -26,16 +26,6 @@ object SnapshotReads {
     store.spark.read.parquet(paths.toIndexedSeq: _*)
   }
 
-  /** Read the current snapshot per the tables pointer. */
-  def readCurrent(store: MetaStore, database: String, table: String): DataFrame = {
-    val current = store.tables
-      .filter(t => t.database == database && t.name == table)
-      .collect().headOption
-      .flatMap(_.currentSnapshotId)
-      .getOrElse(throw new IllegalStateException(s"$database.$table has no current snapshot"))
-    readAt(store, database, table, current)
-  }
-
   /** Incremental append scan (Iceberg's incremental read): rows from
     * data files ADDED strictly after `fromSnapshotId`, up to and
     * including `toSnapshotId`. `from` must be an ancestor of `to` on

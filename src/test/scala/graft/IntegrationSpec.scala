@@ -41,7 +41,7 @@ class IntegrationSpec extends SparkSpec {
         Timestamp.from(now)))))
 
     // Refresh partition stats from the manifest (scored like the oracle).
-    graft.operators.Refresh.refreshPartitions(store, "main", "lineitem", 1L,
+    graft.operators.Maintenance.rollbackToSnapshot(store, "main", "lineitem", 1L,
       graft.meta.MetaDerive.cfg, now)
 
     val stats = store.partitions.collect()
@@ -61,8 +61,8 @@ class IntegrationSpec extends SparkSpec {
       (cycle.optimizeTasks + cycle.expireTasks + cycle.orphanTasks).toLong)
 
     // Drill-down over the same stats (browse path) agrees on totals.
-    val spec = graft.meta.PartitionModel.expandSpec(Seq(
-      graft.meta.PartitionModel.SpecField("ship_day", "day", "l_shipdate"))).toOption.get
+    val spec = Seq("year", "month", "day").map(n => Model.PartitionField(
+      n, "ship_day", isHidden = true, Some(Model.HiddenTransform("l_shipdate", "day"))))
     val level0 = graft.operators.Browse.drillDown(store.partitions, spec, Map.empty)
       .toOption.get.collect()
     val totalRows = graft.sources.Tables.lineitem(spark, sfDirMid).count()

@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.SimpleMode
 class ScaleProbeSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
-  // Same heap hygiene as StreamScaleProbeSpec: this suite compiles and
+  // Heap hygiene: this suite compiles and
   // (via derived-index construction) partially executes the slowest-15
   // queries at 10×, so session-lifetime caches built at the 10× SF are
   // an order of magnitude bigger than any other suite's. Drop every

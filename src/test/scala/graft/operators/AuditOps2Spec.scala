@@ -116,7 +116,7 @@ class AuditOps2Spec extends SparkSpec {
     val b = DistinctSketch.vocabSketch(docs.where($"doc_id" % 2 === 1))
     val whole = DistinctSketch.vocabSketch(docs)
     val merged = new HllAggregator().merge(
-      graft.functions.HllBuf(a), graft.functions.HllBuf(b)).regs
+      graft.functions.HllBuf(a.toArray), graft.functions.HllBuf(b.toArray)).regs
     assert(merged.toSeq == whole)
   }
 

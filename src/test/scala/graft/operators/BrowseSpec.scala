@@ -3,14 +3,16 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.SparkSpec
-import graft.meta.{MetaStore, Model, PartitionModel}
+import graft.meta.{MetaStore, Model}
 
 /** The assembled drill-down entry point (reference §3.1): level-by-level
   * navigation with the reference's validation errors. */
 class BrowseSpec extends SparkSpec {
 
-  private val spec = PartitionModel.expandSpec(Seq(
-    PartitionModel.SpecField("at_day", "day", "at"))).toOption.get
+  // A hidden day transform on `at`: three logical fields sharing the
+  // raw partition field `at_day`.
+  private val spec = Seq("year", "month", "day").map(n => Model.PartitionField(
+    n, "at_day", isHidden = true, Some(Model.HiddenTransform("at", "day"))))
 
   private def stat(y: String, m: String, d: String, files: Long,
       needs: Boolean): Model.PartitionStat =

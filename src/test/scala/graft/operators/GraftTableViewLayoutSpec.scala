@@ -93,26 +93,6 @@ class GraftTableViewLayoutSpec extends SparkSpec {
       assert(rows(mirrorRead(spark, s"$root/m")) == rows(read(spark, dir)),
         s"mirror diverged after window $i")
     }
-    // compactView folds every multi-segment bucket to one file without
-    // changing contents or the synced commit; a second call is a no-op
-    val before = rows(mirrorRead(spark, s"$root/m"))
-    val stPre = readViewState(spark, s"$root/m/_sync.json").get
-    assert(compactView(spark, s"$root/m") ==
-      stPre.buckets.values.count(_.size > 1),
-      "compactView folded a different bucket count than reported")
-    val stPost = readViewState(spark, s"$root/m/_sync.json").get
-    assert(stPost.buckets.values.forall(_.size == 1),
-      s"compaction left multi-segment buckets: ${stPost.buckets}")
-    assert(stPost.commit == stPre.commit,
-      "compaction moved the synced commit")
-    assert(rows(mirrorRead(spark, s"$root/m")) == before,
-      "compaction changed the view's contents")
-    assert(compactView(spark, s"$root/m") == 0, "re-compaction not a no-op")
-    // and the next delta sync continues cleanly on the compacted layout
-    append(li.orderBy($"l_orderkey", $"l_linenumber").limit(5)
-      .withColumn("l_orderkey", $"l_orderkey" + 9000000L), dir, "b99")
-    syncMirror(spark, dir, s"$root/m")
-    assert(rows(mirrorRead(spark, s"$root/m")) == rows(read(spark, dir)))
   }
 
   test("agg-mirror sync writes only the buckets of delta groups") {

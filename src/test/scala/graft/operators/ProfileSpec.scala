@@ -21,10 +21,11 @@ class ProfileSpec extends SparkSpec {
   test("approx distinct within 10% of exact for orders keys") {
     val exact = Profile.q42Profile(spark, sfDirMid).collect()
       .map(r => r.getString(0) -> r.getAs[Long]("n_distinct")).toMap
-    val approx = Profile.approxProfile(
+    // The HLL++ path ANALYZE's `approximate` flag takes.
+    val approx = Profile.computeStats(
       graft.sources.Tables.orders(spark, sfDirMid),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")).collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("approx_distinct")).toMap
+      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
+      approximate = true).distinct
     exact.foreach { case (c, n) =>
       val a = approx(c)
       assert(math.abs(a - n) <= math.max(1L, n / 10), s"$c: exact=$n approx=$a")

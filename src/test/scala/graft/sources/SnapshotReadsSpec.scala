@@ -34,13 +34,17 @@ class SnapshotReadsSpec extends SparkSpec {
       Model.FileMeta("db", "t", 1L, 0, f1, "PARQUET", 0, Map.empty, 10, 100),
       Model.FileMeta("db", "t", 2L, 0, f2, "PARQUET", 0, Map.empty, 15, 150))))
 
+    // The current read: the tables pointer's snapshot, pinned.
+    def readCurrent() = SnapshotReads.readAt(store, "db", "t",
+      store.tables.filter(t => t.database == "db" && t.name == "t")
+        .collect().head.currentSnapshotId.get)
     assert(SnapshotReads.readAt(store, "db", "t", 1L).count() == 10)
-    assert(SnapshotReads.readCurrent(store, "db", "t").count() == 15)
+    assert(readCurrent().count() == 15)
 
     // Rollback to snapshot 1 → current read now sees generation 1.
     Maintenance.rollbackToSnapshot(store, "db", "t", 1L,
       SmallFiles.Config(), java.time.Instant.parse("2026-01-03T00:00:00Z"))
-    assert(SnapshotReads.readCurrent(store, "db", "t").count() == 10)
+    assert(readCurrent().count() == 10)
 
     // Unknown snapshot errors.
     intercept[IllegalArgumentException] {

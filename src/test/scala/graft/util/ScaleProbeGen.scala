@@ -8,7 +8,7 @@ import graft.operators.StoreIO
 /** Self-generating 10× probe fixture: the Scala twin of
   * `tools/gen_scale_probe.py` (same replication scheme, same
   * perturbations — see that script's docstring for the design
-  * rationale), so ScaleProbeSpec/StreamScaleProbeSpec ASSERT on every
+  * rationale), so ScaleProbeSpec ASSERTS on every
   * clean-environment `sbt test` instead of silently canceling when
   * `/tmp/graft_sf1` is absent. Idempotent and cached: a complete probe
   * dir (every table present — whether this generator or the python
